@@ -1,7 +1,8 @@
 """Codec micro-benchmark — the reference's `benchmark` verb analog
 (ConsoleUtil/Program.cs:122-206 prints posting-codec timings to the
 console; SURVEY.md §2.D17). Pure numpy, no Spark: measures the payload
-codecs exactly as build_blocks/decode_blocks call them.
+codecs exactly as the block build (`_encode_term_group`) and
+`decode_blocks` call them.
 
 Per mode {blocks (delta+varint), groupvarint, packedints, binary}:
   encode MB/s, full-scan decode MB/s (of raw occurrence bytes),

@@ -92,8 +92,9 @@ per-bucket compaction into a single segment, on local[{out['cpus']}]:
 | hot WORD query, compacted index | {out['q_hot_compacted_sec']} s |
 
 Compaction is resumable per bucket (a kill mid-run redoes only the
-first unfinished bucket — tests/test_impacts_and_compaction.py); its
-cost is ~one rebuild of the data it merges, paid once to collapse the
+first unfinished bucket — tests/test_impacts_and_compaction.py); it
+copies block rows verbatim (no decode or re-encode), so its cost is a
+sorted rewrite of the data it merges, paid once to collapse the
 per-query segment-union overhead.
 <!-- compaction:end -->"""
             path = os.path.join(REPO, "BENCH", "BASELINE.md")

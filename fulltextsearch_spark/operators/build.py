@@ -124,15 +124,6 @@ def tokenize_postings(
     falls out of the SAME single tokenize pass instead of a second full
     pass over the corpus.
 
-    Every row also carries the (doc, field)'s token count dl — known
-    for free inside the pass — PACKED with tf into one int64 column
-    ``tfdl = dl·2^32 + tf``: UnsafeRow charges 8 bytes per column, so
-    packing keeps the build-shuffle row exactly as wide as a tf-only
-    row (a separate dl column measurably cost ~18% of the whole
-    8-core build). build_blocks unpacks it into exact per-block
-    (tf, dl) impact frontiers for block-max WAND bounds
-    (operators/bm25.py); query-side posting reads never project it.
-
     Implemented with mapInArrow, not mapInPandas: the positions column
     is built as ONE pyarrow ListArray per batch from flat (offsets,
     values) numpy arrays — zero per-row Python lists. The mapInPandas
@@ -140,7 +131,7 @@ def tokenize_postings(
     100k docs), which dominated the stage cost and, being pure memory
     allocation, scaled poorly across cores.
 
-    Output: (term, doc_id, field_id, positions array<int>, tfdl long).
+    Output: POSTING_SCHEMA (term, doc_id, field_id, positions, tf).
     """
     import pyarrow as pa
 
@@ -152,7 +143,7 @@ def tokenize_postings(
             doc_ids = rb.column(0).to_numpy()
             texts = rb.column(1).to_pylist()
             terms_parts, docs_parts = [], []
-            row_lens_parts, vals_parts, tfdl_parts = [], [], []
+            row_lens_parts, vals_parts, tf_parts = [], [], []
             for doc_id, text in zip(doc_ids, texts):
                 if text is None:
                     continue
@@ -170,8 +161,7 @@ def tokenize_postings(
                         np.array([2 * n], dtype=np.int64)
                     )
                     vals_parts.append(flat)
-                    # sentinel: tf = 0, dl = n in the high 32 bits
-                    tfdl_parts.append(np.array([n << 32], dtype=np.int64))
+                    tf_parts.append(np.zeros(1, dtype=np.int32))
                 arr = np.array(terms, dtype=object)
                 order = np.argsort(arr, kind="stable")
                 sorted_terms = arr[order]
@@ -186,7 +176,7 @@ def tokenize_postings(
                 docs_parts.append(np.full(len(starts), doc_id, dtype=np.int64))
                 row_lens_parts.append(tf)
                 vals_parts.append(pos_sorted)
-                tfdl_parts.append(tf + (n << 32))
+                tf_parts.append(tf.astype(np.int32))
             if not terms_parts:
                 continue
             docs_all = np.concatenate(docs_parts)
@@ -205,13 +195,13 @@ def tokenize_postings(
                         np.full(len(docs_all), field_id, dtype=np.int32)
                     ),
                     positions,
-                    pa.array(np.concatenate(tfdl_parts), type=pa.int64()),
+                    pa.array(np.concatenate(tf_parts), type=pa.int32()),
                 ],
-                names=["term", "doc_id", "field_id", "positions", "tfdl"],
+                names=["term", "doc_id", "field_id", "positions", "tf"],
             )
 
     return pages_with_ids.select("doc_id", "text").mapInArrow(
-        run, BUILD_POSTING_SCHEMA
+        run, POSTING_SCHEMA
     )
 
 
@@ -259,31 +249,10 @@ def build_dictionary(postings: DataFrame, single_field: bool = False) -> DataFra
     return postings.groupBy("term").agg(df_expr, F.sum("tf").alias("cf"))
 
 
-def build_doc_stats(tokens: DataFrame) -> DataFrame:
-    """occurrences → per-document token counts (doc_id, dl)."""
-    return tokens.groupBy("doc_id").agg(F.count("*").alias("dl"))
-
-
 def doc_stats_from_postings(postings: DataFrame) -> DataFrame:
     """Same stats derived from committed postings (dl = Σ tf) — saves a
     second tokenize pass during the build."""
     return postings.groupBy("doc_id").agg(F.sum("tf").cast("long").alias("dl"))
-
-
-def build_doc_positions(tokens: DataFrame) -> DataFrame:
-    """Per (doc, field) flat even/odd offset vector — the reference's
-    document position list `offset+1, offset+1+length`
-    (FullTextIndexBuilder.cs:99-114, SURVEY.md §2.B2)."""
-    return tokens.groupBy("doc_id", "field_id").agg(
-        F.flatten(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(F.struct("pos", "off", "len"))
-                ),
-                lambda s: F.array(s["off"] + 1, s["off"] + 1 + s["len"]),
-            )
-        ).alias("positions")
-    )
 
 
 BLOCK_SCHEMA = T.StructType(
@@ -313,15 +282,6 @@ BLOCK_SCHEMA = T.StructType(
 # pair stays dominated by a stored one, so the bound stays an upper
 # bound (never an underestimate)
 MAX_IMPACTS = 16
-
-
-def _diag_no_impacts() -> bool:
-    """Perf-diagnostic escape hatch: skip impact-frontier computation at
-    encode time (FTS_DIAG_NO_IMPACTS=1). NOT a production mode — WAND
-    then degrades to the dl→0 majorization bound."""
-    import os
-
-    return bool(os.environ.get("FTS_DIAG_NO_IMPACTS"))
 
 
 def _impact_frontier(
@@ -362,21 +322,19 @@ def _encode_term_group(
     flat: np.ndarray,
     encode_block,
     block_max_occ: int,
-    sum_dl: bool,
-    no_impacts: bool,
-    empty_imp: np.ndarray,
-    bucketed: bool,
 ) -> None:
     """Chunk ONE (term, doc_grp) group's doc-ordered posting rows into
-    block rows appended to ``out`` — THE block-boundary/payload kernel,
-    shared by the row-granular and packed-run build paths so block
-    chunking and payload bytes are identical by construction.
+    block rows (BLOCK_SCHEMA_BUCKETED columns) appended to ``out`` —
+    THE block-boundary/payload kernel.
 
     ``docs``/``fields``/``tfs``/``dls`` are row-level (one entry per
     (doc, field) posting row, doc-ascending, a doc's field rows
-    adjacent); ``flat`` is the concatenated positions. Blocks chunk
-    greedily at DOC boundaries (a doc's rows never split), impact
-    frontiers from per-doc summed tf + dl."""
+    adjacent; ``dls`` is the (doc, field) token count); ``flat`` is the
+    concatenated positions. Blocks chunk greedily at DOC boundaries (a
+    doc's rows never split). Impact frontiers come from per-doc summed
+    tf and summed dl: for a multi-field doc the sum covers only the
+    fields the term occurs in, a lower bound of the true dl, which
+    over-estimates tfn — still a safe upper bound."""
     n_rows = len(docs)
     occ_docs = np.repeat(docs, tfs)
     occ_fields = np.repeat(fields, tfs)
@@ -404,18 +362,10 @@ def _encode_term_group(
         # per-doc summed tf + lower-bound dl for the impacts
         loc_starts = dstarts[di:dj] - s_row
         tf_doc = np.add.reduceat(tfs[s_row:e_row], loc_starts)
-        if no_impacts:  # perf-diagnostic only
-            imp_tf = imp_dl = empty_imp
-        else:
-            dl_doc = (
-                np.add.reduceat(dls[s_row:e_row], loc_starts)
-                if sum_dl
-                else dls[dstarts[di:dj]]
-            )
-            imp_tf, imp_dl = _impact_frontier(tf_doc, dl_doc)
+        dl_doc = np.add.reduceat(dls[s_row:e_row], loc_starts)
+        imp_tf, imp_dl = _impact_frontier(tf_doc, dl_doc)
         out["term"].append(term)
-        if bucketed:
-            out["bucket"].append(bucket_val)
+        out["bucket"].append(bucket_val)
         out["doc_grp"].append(doc_grp)
         out["block_no"].append(bno)
         out["first_doc"].append(int(occ_docs[s]))
@@ -431,8 +381,9 @@ def _encode_term_group(
         bno += 1
         di = dj
 
+
 # bucketed variant: bucket leads so block rows sort/write directly via
-# partitionBy("bucket") with no second shuffle (build_blocks bucketed=True)
+# partitionBy("bucket") with no second shuffle (assemble_packed_blocks)
 BLOCK_SCHEMA_BUCKETED = T.StructType(
     [T.StructField("bucket", T.IntegerType(), False), *BLOCK_SCHEMA.fields]
 )
@@ -479,271 +430,9 @@ def _block_codec(codec: str):
     return C.encode_block, C.decode_block
 
 
-def build_blocks(
-    postings: DataFrame,
-    doc_group_span: int = DOC_GROUP_SPAN,
-    block_max_occ: int = BLOCK_MAX_OCC,
-    codec: str = "blocks",
-    bucketed: bool = False,
-    strip_dp_payload: bool = False,
-) -> DataFrame:
-    """postings → compressed block rows with skip/block-max metadata.
-
-    Doc-position sentinel rows (term=DP_TERM, tf=0 — see
-    tokenize_postings) pass through as one block row each: first_doc =
-    last_doc = doc_id, n_occ = vector length (so dl = n_occ/2 is
-    readable from metadata alone), payload = delta+varint of the
-    monotone position vector (``strip_dp_payload=True`` keeps the
-    metadata but drops the payload — the keep_positions=False layout).
-    They are salted per-doc (they all share one term).
-
-    Analog of the reference's fixed-block varint codec + skip search
-    (PostingListVarIntDeltaWriter.cs:19-33, SURVEY.md §2.C7/D13): each
-    block is independently decodable; (first_doc, last_doc) enable
-    block pruning before decode; (imp_tf, imp_dl) impact frontiers give
-    exact block-max WAND score bounds. Block boundaries never split a
-    DOCUMENT (all of a doc's rows for the term — every field — stay in
-    one block), so per-block per-doc summed tf is the doc's true term
-    frequency and the impact bound is score-safe even for multi-field
-    indexes. max_tf is the largest per-doc summed tf in the block.
-
-    Input rows may carry doc lengths — either packed in the ``tfdl``
-    column (tokenize_postings) or as a plain ``dl`` column (compaction
-    re-encode); impact dl values then bound the doc length from below
-    (for multi-field docs: the sum of the PRESENT fields' lengths <=
-    true dl, which over-estimates tfn — still a safe upper bound).
-    Without either, the frontier degrades to a single (max_tf, 0)
-    pair — the old dl->0 majorization.
-
-    ``bucketed=True``: the input carries the term-hash ``bucket``
-    column, the encode shuffle partitions by (bucket, term, doc_grp)
-    and sorts by bucket first, and the output keeps the bucket column —
-    the result is ALREADY in the `partitionBy("bucket")` writer's
-    required order, so the caller writes it directly with no second
-    shuffle of the block payloads (bucket is a function of term, so
-    (term, doc_grp) groups stay contiguous under the bucket-first sort).
-    """
-
-    salted = postings.withColumn(
-        "doc_grp",
-        F.when(F.col("term") == DP_TERM, F.col("doc_id")).otherwise(
-            (F.col("doc_id") / F.lit(doc_group_span)).cast("long")
-        ),
-    )
-    out_schema = BLOCK_SCHEMA_BUCKETED if bucketed else BLOCK_SCHEMA
-
-    def assemble(batches):
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        from fulltextsearch_spark.operators.codec import encode_positions_payload
-
-        encode_block, _ = _block_codec(codec)
-
-        empty_imp = np.empty(0, dtype=np.int32)
-
-        def to_batch(out: dict):
-            return _block_out_batch(out, out_schema)
-
-        def np_cols(rb) -> dict:
-            """Arrow batch → flat numpy columns: positions arrive as ONE
-            (offsets, values) pair per batch — zero per-row objects (the
-            mapInPandas input conversion materialized one numpy array
-            per posting row, the input-side twin of the decode_blocks
-            allocation fix)."""
-            names = rb.schema.names
-            cols = {n: rb.column(i) for i, n in enumerate(names)}
-            pos = cols["positions"]
-            offs = pos.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
-            d = {
-                "term": np.array(cols["term"].to_pylist(), dtype=object),
-                "doc_id": cols["doc_id"]
-                .to_numpy(zero_copy_only=False)
-                .astype(np.int64),
-                "field_id": cols["field_id"]
-                .to_numpy(zero_copy_only=False)
-                .astype(np.int64),
-                "doc_grp": cols["doc_grp"]
-                .to_numpy(zero_copy_only=False)
-                .astype(np.int64),
-                "row_len": np.diff(offs),
-                "flat": pos.flatten()
-                .to_numpy(zero_copy_only=False)
-                .astype(np.int64),
-            }
-            if bucketed:
-                d["bucket"] = (
-                    cols["bucket"].to_numpy(zero_copy_only=False).astype(np.int64)
-                )
-            if "tfdl" in names:  # packed build rows
-                tfdl = cols["tfdl"].to_numpy(zero_copy_only=False).astype(np.int64)
-                d["tf"] = tfdl & TFDL_MASK
-                # per-row dl is the (doc, field) length: summing a
-                # doc's field-rows yields the present-fields total —
-                # a correct lower bound of the true dl
-                d["dl"] = tfdl >> 32
-                d["sum_dl"] = True
-            else:  # legacy/compaction rows: plain tf (+ optional dl)
-                d["tf"] = cols["tf"].to_numpy(zero_copy_only=False).astype(np.int64)
-                # per-row dl is the doc TOTAL (compact_index joins
-                # doc_stats): take it ONCE per doc — summing would
-                # store n_fields x dl, under-estimating the block-max
-                # score bound and breaking WAND safety on compacted
-                # multi-field indexes
-                d["dl"] = (
-                    cols["dl"].to_numpy(zero_copy_only=False).astype(np.int64)
-                    if "dl" in names
-                    else np.zeros(len(d["tf"]), dtype=np.int64)
-                )
-                d["sum_dl"] = False
-            return d
-
-        _ROW_KEYS = ("term", "doc_id", "field_id", "doc_grp", "row_len", "tf", "dl")
-
-        def cat(a: dict, b: dict) -> dict:
-            out = {"sum_dl": b["sum_dl"]}
-            for k in _ROW_KEYS + (("bucket",) if bucketed else ()):
-                out[k] = np.concatenate([a[k], b[k]])
-            out["flat"] = np.concatenate([a["flat"], b["flat"]])
-            return out
-
-        def slice_rows(d: dict, s: int, e: int) -> dict:
-            cum = np.zeros(len(d["row_len"]) + 1, dtype=np.int64)
-            np.cumsum(d["row_len"], out=cum[1:])
-            out = {"sum_dl": d["sum_dl"]}
-            for k in _ROW_KEYS + (("bucket",) if bucketed else ()):
-                out[k] = d[k][s:e]
-            out["flat"] = d["flat"][cum[s] : cum[e]]
-            return out
-
-        def encode_dp(d: dict):
-            out: dict[str, list] = {f.name: [] for f in out_schema.fields}
-            cum = np.zeros(len(d["row_len"]) + 1, dtype=np.int64)
-            np.cumsum(d["row_len"], out=cum[1:])
-            for i in range(len(d["term"])):
-                out["term"].append(DP_TERM)
-                if bucketed:
-                    out["bucket"].append(int(d["bucket"][i]))
-                out["doc_grp"].append(int(d["doc_grp"][i]))
-                # sentinels reuse block_no to carry the FIELD id (a
-                # sentinel is one whole-vector block per (doc, field),
-                # so it has no block numbering to preserve); legacy
-                # segments wrote 0 here — readers map 0 -> field 1
-                out["block_no"].append(int(d["field_id"][i]))
-                out["first_doc"].append(int(d["doc_id"][i]))
-                out["last_doc"].append(int(d["doc_id"][i]))
-                out["n_occ"].append(int(d["row_len"][i]))
-                out["n_docs"].append(1)
-                out["max_tf"].append(0)
-                out["imp_tf"].append(empty_imp)
-                out["imp_dl"].append(empty_imp)
-                out["payload"].append(
-                    b""
-                    if strip_dp_payload
-                    else encode_positions_payload(d["flat"][cum[i] : cum[i + 1]])
-                )
-            return to_batch(out)
-
-        def encode_groups(d: dict):
-            n_rows = len(d["term"])
-            terms = d["term"]
-            buckets = d["bucket"] if bucketed else None
-            grps = d["doc_grp"]
-            docs = d["doc_id"]
-            fields = d["field_id"]
-            tfs = d["tf"]
-            dls = d["dl"]
-            sum_dl = d["sum_dl"]
-            pos_all = d["flat"]
-            row_off = np.zeros(n_rows + 1, dtype=np.int64)
-            np.cumsum(tfs, out=row_off[1:])
-            # (term, doc_grp) group boundaries at row level; the shared
-            # kernel (_encode_term_group) handles doc boundaries and
-            # block chunking per group
-            bnd = np.empty(n_rows, dtype=bool)
-            bnd[0] = True
-            bnd[1:] = (terms[1:] != terms[:-1]) | (grps[1:] != grps[:-1])
-            g_starts = np.nonzero(bnd)[0]
-            g_ends = np.append(g_starts[1:], n_rows)
-
-            out: dict[str, list] = {f.name: [] for f in out_schema.fields}
-            no_imp = _diag_no_impacts()
-            for gs, ge in zip(g_starts, g_ends):
-                _encode_term_group(
-                    out,
-                    terms[gs],
-                    int(buckets[gs]) if bucketed else None,
-                    int(grps[gs]),
-                    docs[gs:ge],
-                    fields[gs:ge],
-                    tfs[gs:ge],
-                    dls[gs:ge],
-                    pos_all[row_off[gs] : row_off[ge]],
-                    encode_block,
-                    block_max_occ,
-                    sum_dl,
-                    no_imp,
-                    empty_imp,
-                    bucketed,
-                )
-            return to_batch(out)
-
-        # a (term, doc_grp) group may span Arrow batches (a partition
-        # arrives as ~10k-row batches): hold the trailing group back
-        # until the next batch so block_no numbering and block sizing
-        # always see whole groups
-        carry: dict | None = None
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            # sentinel doc-position rows: one block row per input row,
-            # no grouping/carry semantics (arrow-native row split)
-            term_arr = rb.column(rb.schema.names.index("term"))
-            dp_mask = pc.equal(term_arr, DP_TERM)
-            if pc.any(dp_mask).as_py():
-                yield encode_dp(np_cols(rb.filter(dp_mask)))
-                rb = rb.filter(pc.invert(dp_mask))
-            if rb.num_rows == 0:
-                continue
-            d = np_cols(rb)
-            if carry is not None:
-                d = cat(carry, d)
-                carry = None
-            n_rows = len(d["term"])
-            bnd = np.empty(n_rows, dtype=bool)
-            bnd[0] = True
-            bnd[1:] = (d["term"][1:] != d["term"][:-1]) | (
-                d["doc_grp"][1:] != d["doc_grp"][:-1]
-            )
-            split = int(np.nonzero(bnd)[0][-1])
-            carry = slice_rows(d, split, n_rows)
-            if split > 0:
-                yield encode_groups(slice_rows(d, 0, split))
-        if carry is not None and len(carry["term"]):
-            yield encode_groups(carry)
-
-    # explicit partition count: a bare repartition(cols) is subject to
-    # AQE coalescing, which at moderate data sizes collapses this
-    # CPU-bound encode stage to a couple of tasks regardless of cores
-    n_parts = postings.sparkSession.sparkContext.defaultParallelism * 4
-    if bucketed:
-        return (
-            salted.repartition(n_parts, "bucket", "term", "doc_grp")
-            .sortWithinPartitions(
-                "bucket", "term", "doc_grp", "doc_id", "field_id"
-            )
-            .mapInArrow(assemble, out_schema)
-        )
-    return (
-        salted.repartition(n_parts, "term", "doc_grp")
-        .sortWithinPartitions("term", "doc_grp", "doc_id", "field_id")
-        .mapInArrow(assemble, out_schema)
-    )
-
-
 # ---------------------------------------------------------------------------
-# Packed-run build path (blocks-only layout). The row-granular pipeline
-# above ships one JVM row per (term, doc, field) posting through TWO
+# Packed-run build path (blocks-only layout). A row-granular pipeline
+# ships one JVM row per (term, doc, field) posting through TWO
 # JVM↔Python Arrow crossings plus the shuffle sort. Measured at 250k
 # docs / 28.6M posting rows on local[32], an IDENTITY mapInArrow over
 # those rows cost as much as the full encode (21s vs 21s; the shuffle+
@@ -761,9 +450,9 @@ def build_blocks(
 # doc, field) posting row exists in exactly ONE run; the reduce side
 # concatenates a group's runs and sorts rows by (doc, field) — unique
 # keys, so the result is deterministic regardless of run arrival order
-# — and feeds the SAME block-chunking kernel (_encode_term_group) as
-# the row-granular path, making block boundaries and payload bytes
-# identical by construction (golden-tested).
+# — and feeds the block-chunking kernel (_encode_term_group), so block
+# boundaries and payload bytes do not depend on batch or run layout
+# (golden-tested).
 
 RUN_SCHEMA = T.StructType(
     [
@@ -772,6 +461,10 @@ RUN_SCHEMA = T.StructType(
         T.StructField("blob", T.BinaryType(), False),
     ]
 )
+
+# run rows pack tf and the (doc, field) length into one int64:
+# tfdl = dl·2^32 + tf
+TFDL_MASK = (1 << 32) - 1
 
 # sentinel runs chunk this many docs per run row (~200 KB of position
 # vectors at dl≈200): big enough to amortize the per-row boundary cost,
@@ -944,7 +637,7 @@ def tokenize_packed_runs(
                     )
                     # doc_grp is only a shuffle salt for runs; the
                     # assemble emits per-doc sentinel BLOCK rows with
-                    # doc_grp = doc_id exactly as the row path does
+                    # doc_grp = doc_id
                     dp_grps.append(int(sdocs[cs]))
                 yield pa.RecordBatch.from_arrays(
                     [
@@ -978,7 +671,7 @@ def assemble_packed_blocks(
     group with the xxhash64 twin. Groups arrive contiguous (sorted by
     the same expressions); a group's runs concatenate and row-sort by
     (doc, field) — unique per row, so any run arrival order yields the
-    same bytes — then feed the shared _encode_term_group kernel."""
+    same bytes — then feed the _encode_term_group kernel."""
     from fulltextsearch_spark.functions.xxhash import term_bucket_py
 
     bucket_expr = F.when(
@@ -1001,7 +694,6 @@ def assemble_packed_blocks(
 
         encode_block, _ = _block_codec(codec)
         empty_imp = np.empty(0, dtype=np.int32)
-        no_imp = _diag_no_impacts()
 
         def new_out():
             return {f.name: [] for f in BLOCK_SCHEMA_BUCKETED.fields}
@@ -1044,10 +736,6 @@ def assemble_packed_blocks(
                 flat[idx],
                 encode_block,
                 block_max_occ,
-                True,  # sum_dl: per-(doc, field) lengths
-                no_imp,
-                empty_imp,
-                True,  # bucketed
             )
 
         def emit_dp_run(blob):
@@ -1124,29 +812,6 @@ POSTING_SCHEMA = T.StructType(
     ]
 )
 
-# build-side posting rows additionally carry the (doc, field) token
-# count so block encoding can store exact (tf, dl) impact frontiers —
-# PACKED with tf into one int64 (tfdl = dl·2^32 + tf) so the build
-# shuffle row is exactly as wide as round 2's tf-only row (UnsafeRow
-# charges 8 bytes per column; a separate dl column measurably cost
-# ~18% of the whole 8-core build). The committed/query-side posting
-# schema stays POSTING_SCHEMA; `unpack_tf` restores a plain tf column.
-BUILD_POSTING_SCHEMA = T.StructType(
-    [
-        *[f for f in POSTING_SCHEMA.fields if f.name != "tf"],
-        T.StructField("tfdl", T.LongType(), False),
-    ]
-)
-TFDL_MASK = (1 << 32) - 1
-
-
-def unpack_tf(df: DataFrame) -> DataFrame:
-    """tfdl-packed build rows → POSTING_SCHEMA layout (narrow)."""
-    return df.withColumn(
-        "tf", F.col("tfdl").bitwiseAND(F.lit(TFDL_MASK)).cast("int")
-    ).drop("tfdl")
-
-
 DOC_POSITIONS_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType(), False),
@@ -1185,44 +850,6 @@ def decode_dp_blocks(blocks: DataFrame) -> DataFrame:
 
     return blocks.select("first_doc", "block_no", "payload").mapInPandas(
         run, DOC_POSITIONS_SCHEMA
-    )
-
-
-def blocks_to_postings(blocks: DataFrame, codec: str = "blocks") -> DataFrame:
-    """Full inverse of the blocks-only layout, INCLUDING sentinel rows
-    (term=DP_TERM, tf=0, positions = flat offset vector) — compaction
-    reads this to re-encode merged segments."""
-
-    def run(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from fulltextsearch_spark.operators.codec import decode_positions_payload
-
-        for pdf in pdfs:
-            dp = pdf[pdf["term"].to_numpy() == DP_TERM]
-            if len(dp):
-                yield pd.DataFrame(
-                    {
-                        "term": [DP_TERM] * len(dp),
-                        "doc_id": dp["first_doc"].astype("int64").tolist(),
-                        "field_id": np.maximum(
-                            dp["block_no"].to_numpy(np.int32), 1
-                        ),
-                        "positions": [
-                            decode_positions_payload(bytes(p)).astype(np.int32).tolist()
-                            for p in dp["payload"]
-                        ],
-                        "tf": np.zeros(len(dp), dtype=np.int32),
-                    }
-                )
-
-    dp_rows = blocks.where(F.col("term") == DP_TERM)
-    occ_rows = decode_blocks(
-        blocks.where(F.col("term") != DP_TERM).select("term", "payload"),
-        codec=codec,
-    )
-    return occ_rows.unionByName(
-        dp_rows.select("term", "first_doc", "block_no", "payload").mapInPandas(
-            run, POSTING_SCHEMA
-        )
     )
 
 

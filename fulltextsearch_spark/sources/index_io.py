@@ -413,7 +413,7 @@ def build_index(
 
     def _tokenized_rows() -> DataFrame:
         """Row-granular posting rows with the bucket column (arrays
-        mode, and the FTS_BUILD_ROW_GRANULAR A/B control path)."""
+        mode)."""
         if n_fields == 1:
             tok = B.tokenize_postings(
                 with_ids.select("doc_id", F.col(text_cols[0]).alias("text")),
@@ -448,34 +448,24 @@ def build_index(
         #   df = Σ n_docs  (blocks never split a (doc, field) row and
         #        doc_grp ranges are disjoint — exact for single-field),
         #   cf = Σ n_occ, dl = sentinel n_occ / 2.
-        # Default path: PACKED RUNS — one shuffle row per (map batch,
+        # The shuffle carries PACKED RUNS — one row per (map batch,
         # term, doc group) instead of one per posting, because the
-        # per-row JVM↔Arrow conversion, not the codec, dominated the
+        # per-row JVM↔Arrow conversion, not the codec, dominates a
         # row-granular build (operators/build.py packed-run notes).
-        # Both paths share the block-chunking kernel, so the committed
-        # bytes are identical (golden-tested).
         _phase_t = {"ids": time.time() - t0}
-        if os.environ.get("FTS_BUILD_ROW_GRANULAR"):
-            blocks_df = B.build_blocks(
-                _tokenized_rows(),
-                codec=mode,
-                bucketed=True,
-                strip_dp_payload=not keep_positions,
+        run_parts = [
+            B.tokenize_packed_runs(
+                with_ids.select("doc_id", F.col(c).alias("text")),
+                field_id=fid,
             )
-        else:
-            run_parts = [
-                B.tokenize_packed_runs(
-                    with_ids.select("doc_id", F.col(c).alias("text")),
-                    field_id=fid,
-                )
-                for fid, c in enumerate(text_cols, start=1)
-            ]
-            blocks_df = B.assemble_packed_blocks(
-                reduce(DataFrame.unionByName, run_parts),
-                codec=mode,
-                n_buckets=n_buckets,
-                strip_dp_payload=not keep_positions,
-            )
+            for fid, c in enumerate(text_cols, start=1)
+        ]
+        blocks_df = B.assemble_packed_blocks(
+            reduce(DataFrame.unionByName, run_parts),
+            codec=mode,
+            n_buckets=n_buckets,
+            strip_dp_payload=not keep_positions,
+        )
         blocks_df.write.mode("overwrite").partitionBy("bucket").parquet(
             os.path.join(seg_path, "blocks")
         )
@@ -485,7 +475,7 @@ def build_index(
 
         def _write_dictionary() -> None:
             # df = Σ n_docs is exact even for multi-field: a document
-            # never splits across blocks (build_blocks doc-boundary
+            # never splits across blocks (_encode_term_group doc-boundary
             # chunking) and (doc_grp, segment) doc ranges are disjoint
             real_blocks.groupBy("term").agg(
                 F.sum("n_docs").cast("long").alias("df"),
@@ -511,10 +501,7 @@ def build_index(
         # arrays layout: stage the posting rows as the queryable table;
         # everything downstream derives from the committed postings —
         # one tokenize pass total (the reference tokenizes once too, §3.1).
-        # dl rides packed in tfdl for block impact bounds; the arrays
-        # layout has no blocks, so restore the plain tf column (and the
-        # committed POSTING_SCHEMA) before the write.
-        _sorted_bucketed(B.unpack_tf(_tokenized_rows()), "doc_id").write.mode(
+        _sorted_bucketed(_tokenized_rows(), "doc_id").write.mode(
             "overwrite"
         ).partitionBy("bucket").parquet(os.path.join(seg_path, "postings"))
         staged = spark.read.parquet(os.path.join(seg_path, "postings"))
@@ -631,21 +618,32 @@ def compact_index(
     The query-side union of segments mirrors the reference's posting
     continuation chains (SURVEY.md §2.C9); compaction collapses the
     chain the way a segment-merging indexer does. Doc ids are already
-    global and disjoint across segments, so postings merge by union;
-    blocks/dictionary/stats are rebuilt from the merged postings.
+    global and disjoint across segments, so rows merge by union and
+    the dictionary and doc stats are recomputed from the merged table.
     Commits via the same atomic manifest swap.
 
-    Blocks-only indexes compact BOUNDED: term-hash bucket directories
-    are independent, so each bucket merges as its own job and commits
-    its completion to the manifest ("compaction" record) — a killed
-    compaction of a 1000-segment index resumes at the first unfinished
-    bucket instead of redoing a full-index rewrite (the failure domain
-    is one bucket, ~1/n_buckets of the data). Doc-position sentinel
-    rows pass through UNCHANGED (no decode/re-encode): they are one
-    immutable block per (doc, field), which also preserves stripped
-    (keep_positions=False) payloads and their dl-bearing metadata.
-    ``_stop_after_buckets`` is a test hook: stop (cleanly) after N
-    bucket merges, leaving the in-progress record for a resume call.
+    Blocks-only indexes compact by COPYING block rows verbatim — no
+    payload decode or re-encode. Segments are doc-id disjoint and a
+    block never splits a doc, so a term's blocks from all segments
+    already form a valid block list; their impact frontiers stay exact
+    because a doc's length never changes. Each bucket's rows are
+    written sorted by (term, first_doc), the unique block key, so the
+    driver fast path's term row-group stats stay selective. Trade-off:
+    block boundaries are kept, not re-chunked — the compacted index
+    holds exactly the blocks of its sources, so each term may keep one
+    partial block per source segment. Doc-position sentinel rows (one
+    block per (doc, field)) copy the same way, which also preserves
+    stripped (keep_positions=False) payloads and their dl-bearing
+    metadata.
+
+    The copy is BOUNDED: term-hash bucket directories are independent,
+    so each bucket merges as its own job and commits its completion to
+    the manifest ("compaction" record) — a killed compaction of a
+    1000-segment index resumes at the first unfinished bucket instead
+    of redoing a full-index rewrite (the failure domain is one bucket,
+    ~1/n_buckets of the data). ``_stop_after_buckets`` is a test hook:
+    stop (cleanly) after N bucket merges, leaving the in-progress
+    record for a resume call.
     """
     idx = Index.open(spark, root)
     manifest = idx.manifest
@@ -678,28 +676,26 @@ def compact_index(
         seg_name = comp["path"]
         seg_path = os.path.join(root, seg_name)
         done = set(comp["done_buckets"])
-        doc_stats = idx.doc_stats()  # restores dl for impact frontiers
+        # segments written before impacts existed null-fill the arrays
+        # (allowMissingColumns); an empty frontier is the readers'
+        # "no impacts" form
         imp_empty = F.array().cast("array<int>")
 
         def _merge_bucket(b: int) -> None:
-            bucket_dir = os.path.join(seg_path, "blocks", f"bucket={b}")
-            src = idx._union("blocks").where(F.col("bucket") == b)
-            if b == n_b:
-                # sentinel bucket: pass block rows through unchanged
-                out = src.select(
-                    *[
-                        F.coalesce(F.col(f.name), imp_empty).alias(f.name)
-                        if f.name in ("imp_tf", "imp_dl")
-                        else f.name
-                        for f in B.BLOCK_SCHEMA.fields
-                    ]
-                )
-            else:
-                rows = B.decode_blocks(
-                    src.select("term", "payload"), codec=idx.mode
-                ).join(doc_stats, "doc_id")  # dl back for impact bounds
-                out = B.build_blocks(rows, codec=idx.mode)
-            out.write.mode("overwrite").parquet(bucket_dir)
+            # a JVM-only copy: project, sort by the block key, write.
+            # The global sort leaves part files with disjoint sorted term
+            # ranges, and AQE sizes their count from the bucket's bytes.
+            # block_no only orders a multi-field doc's sentinels.
+            idx._union("blocks").where(F.col("bucket") == b).select(
+                *[
+                    F.coalesce(F.col(f.name), imp_empty).alias(f.name)
+                    if f.name in ("imp_tf", "imp_dl")
+                    else f.name
+                    for f in B.BLOCK_SCHEMA.fields
+                ]
+            ).orderBy("term", "first_doc", "block_no").write.mode(
+                "overwrite"
+            ).parquet(os.path.join(seg_path, "blocks", f"bucket={b}"))
 
         pending = [b for b in range(n_b + 1) if b not in done]
         if _stop_after_buckets is not None:
@@ -731,12 +727,12 @@ def compact_index(
                     _write_manifest(root, manifest)
 
             # pool width scales with the cluster (VERDICT r5 #7): each
-            # bucket merge is a Spark job whose decode/encode tasks are
-            # narrower than the cluster, so ~cores/4 concurrent bucket
-            # jobs keep executors full through each job's straggler
-            # tail without swamping the scheduler (same reasoning as
-            # the build's concurrent outputs); floor 4 preserves the
-            # measured local win.
+            # bucket merge is a Spark job whose tasks are narrower than
+            # the cluster, so ~cores/4 concurrent bucket jobs keep
+            # executors full through each job's straggler tail without
+            # swamping the scheduler (same reasoning as the build's
+            # concurrent outputs); floor 4 preserves the measured local
+            # win.
             workers = min(
                 len(pending),
                 max(4, spark.sparkContext.defaultParallelism // 4),
@@ -764,6 +760,12 @@ def compact_index(
             os.path.join(seg_path, "doc_stats")
         )
     else:
+        if idx.mode in BLOCK_MODES:
+            raise ValueError(
+                f"index at {root} uses the legacy blocks layout with "
+                "staged postings, which compaction no longer supports; "
+                "rebuild it"
+            )
         seg_id = 1 + max(s["id"] for s in manifest["segments"])
         seg_name = f"seg_{seg_id:05d}"
         seg_path = os.path.join(root, seg_name)
@@ -776,10 +778,6 @@ def compact_index(
         merged = spark.read.parquet(os.path.join(seg_path, "postings")).where(
             F.col("bucket") < idx.n_buckets
         )
-        if idx.mode in BLOCK_MODES:  # legacy blocks layout w/ postings
-            B.build_blocks(merged, codec=idx.mode, bucketed=True).write.mode(
-                "overwrite"
-            ).partitionBy("bucket").parquet(os.path.join(seg_path, "blocks"))
         B.build_dictionary(merged, single_field=single_field).write.mode(
             "overwrite"
         ).parquet(os.path.join(seg_path, "dictionary"))

@@ -31,7 +31,7 @@ class MemoryIndex:
     @classmethod
     def from_pages(cls, spark: SparkSession, pages: DataFrame) -> "MemoryIndex":
         with_ids = assign_dense_ids(pages, "url", "doc_id", start=1)
-        postings = B.unpack_tf(B.tokenize_postings(with_ids)).persist(
+        postings = B.tokenize_postings(with_ids).persist(
             StorageLevel.MEMORY_AND_DISK
         )
         return cls(
@@ -52,9 +52,9 @@ class MemoryIndex:
     @classmethod
     def from_docs_table(cls, spark: SparkSession, docs: DataFrame) -> "MemoryIndex":
         """Build directly from (doc_id, text) rows — ids taken as given."""
-        postings = B.unpack_tf(
-            B.tokenize_postings(docs.select("doc_id", "text"))
-        ).persist(StorageLevel.MEMORY_AND_DISK)
+        postings = B.tokenize_postings(docs.select("doc_id", "text")).persist(
+            StorageLevel.MEMORY_AND_DISK
+        )
         return cls(
             spark,
             postings,

@@ -1,9 +1,15 @@
 """Round-3 features: exact per-block (tf, dl) impact frontiers for
 block-max WAND, multi-field compound persistent indexes, bounded
-per-bucket compaction with resume, keep_positions=False compaction,
-auto-scaled bucket counts, and the dense-id layout invariant."""
+per-bucket compaction with resume, compaction as a verbatim block copy,
+keep_positions=False compaction, auto-scaled bucket counts, and the
+dense-id layout invariant."""
+
+import json
+import os
+from collections import Counter
 
 import numpy as np
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -13,6 +19,7 @@ from fulltextsearch_spark.operators.bm25 import (
 )
 from fulltextsearch_spark.operators.build import MAX_IMPACTS, _impact_frontier
 from fulltextsearch_spark.sources.index_io import (
+    BLOCK_MODES,
     DEFAULT_BUCKETS,
     MAX_BUCKETS,
     Index,
@@ -289,7 +296,7 @@ def test_compaction_resumes_per_bucket(spark, tmp_path):
         sorted((r["term"], r["df"], r["cf"]) for r in idx2.dictionary().collect())
         == dict_before
     )
-    # compacted blocks kept their impact frontiers (dl restored by join)
+    # compacted blocks kept their impact frontiers (copied verbatim)
     rows = idx2.blocks(exact_terms=["this"]).collect()
     assert rows and all(len(r["imp_tf"]) >= 1 for r in rows)
     assert all(max(r["imp_tf"]) == r["max_tf"] for r in rows)
@@ -298,18 +305,106 @@ def test_compaction_resumes_per_bucket(spark, tmp_path):
         assert set(r["imp_dl"]) <= set(ds.values())
 
 
+# --- compaction is a verbatim block copy ---------------------------------
+
+_BLOCK_ROW = (
+    "term", "first_doc", "last_doc", "n_occ", "n_docs", "max_tf",
+    "imp_tf", "imp_dl", "payload",
+)
+
+
+def _block_rows(blocks_dir: str, n_buckets: int) -> list[tuple]:
+    """Term-block rows of one segment's blocks table, as tuples."""
+    tbl = pq.read_table(blocks_dir, columns=[*_BLOCK_ROW, "bucket"])
+    return [
+        tuple(tuple(r[c]) if c.startswith("imp_") else r[c] for c in _BLOCK_ROW)
+        for r in tbl.to_pylist()
+        if r["bucket"] < n_buckets
+    ]
+
+
+@pytest.fixture(scope="module", params=BLOCK_MODES)
+def compacted_copy(request, spark, tmp_path_factory):
+    """A 3-segment index in one block codec, compacted. Segments of 300
+    synth docs give the hot terms several blocks per segment, including
+    a partial last block in each. Returns (root, n_buckets, source
+    term-block rows)."""
+    mode = request.param
+    root = str(tmp_path_factory.mktemp(f"copy_{mode}"))
+    for seed in (1, 2, 3):
+        build_index(spark, synth_pages(spark, 300, seed=seed), root, mode=mode)
+    idx = Index.open(spark, root)
+    n_b = idx.n_buckets
+    src = [
+        row
+        for seg in idx.manifest["segments"]
+        for row in _block_rows(os.path.join(root, seg["path"], "blocks"), n_b)
+    ]
+    compact_index(spark, root)
+    return root, n_b, src
+
+
+def test_compaction_copies_blocks_verbatim(spark, compacted_copy):
+    root, n_b, src = compacted_copy
+    (seg,) = Index.open(spark, root).manifest["segments"]
+    blocks_dir = os.path.join(root, seg["path"], "blocks")
+    out = _block_rows(blocks_dir, n_b)
+    # a pure copy: the same multiset of rows, payload bytes included
+    assert Counter(out) == Counter(src)
+    # the hot term really spans several blocks per source segment
+    assert sum(1 for r in out if r[0] == "t0") > 3
+
+    # each bucket directory, read in part-file order, is sorted by the
+    # (term, first_doc) block key
+    for b in range(n_b):
+        d = os.path.join(blocks_dir, f"bucket={b}")
+        keys: list = []
+        for name in sorted(os.listdir(d)):
+            if name.endswith(".parquet"):
+                part = pq.read_table(os.path.join(d, name)).to_pydict()
+                keys += zip(part["term"], part["first_doc"])
+        assert keys and keys == sorted(keys), b
+
+    # (term, first_doc) is unique and a term's doc ranges are disjoint
+    assert len({(r[0], r[1]) for r in out}) == len(out)
+    by_term: dict = {}
+    for r in out:
+        by_term.setdefault(r[0], []).append((r[1], r[2]))
+    for term, spans in by_term.items():
+        spans.sort()
+        assert all(lo <= hi for lo, hi in spans), term
+        assert all(
+            spans[i][1] < spans[i + 1][0] for i in range(len(spans) - 1)
+        ), term
+
+
+def test_compaction_rejects_legacy_blocks_with_postings(spark, tmp_path):
+    """The old blocks layout with staged postings is no longer written
+    by any build; compaction refuses it with a clear error."""
+    root = str(tmp_path / "legacy")
+    for seg in (1, 2):
+        build_index(spark, pms_corpus_pages(spark, (seg,)), root, mode="arrays")
+    path = os.path.join(root, "manifest.json")
+    with open(path) as f:
+        manifest = json.load(f)
+    manifest["type"]["mode"] = "blocks"
+    with open(path, "w") as f:
+        json.dump(manifest, f)
+    with pytest.raises(ValueError, match="legacy blocks layout"):
+        compact_index(spark, root)
+
+
 # --- multi-field compaction keeps impact dl exact (ADVICE r3 high) -----
 
 
 def test_multifield_compaction_impact_dl_and_rank(spark, tmp_path):
-    """ADVICE r3 (high): compact_index joins doc_stats, so every
-    (doc, field) row of a multi-field index carried the doc's TOTAL dl
-    and encode_groups reduceat-summed it — imp_dl = n_fields x dl.
-    Over-estimated dl under-estimates the block-max bound, so WAND
-    could prune blocks holding true top-k docs. Pin: (a) singleton
-    blocks of a both-fields term store imp_dl == the doc's exact dl;
-    (b) WAND stays rank-identical to the exhaustive scorer on the
-    compacted index."""
+    """ADVICE r3 (high): a re-encoding compaction once stored
+    imp_dl = n_fields x dl for multi-field docs. Over-estimated dl
+    under-estimates the block-max bound, so WAND could prune blocks
+    holding true top-k docs. Pin: (a) singleton blocks of a both-fields
+    term store imp_dl == the doc's exact dl after compaction; (b) WAND
+    stays rank-identical to the exhaustive scorer on the compacted
+    index."""
     root = str(tmp_path / "mf_compact")
     rng = np.random.default_rng(23)
     for seg in (0, 1):
@@ -341,7 +436,7 @@ def test_multifield_compaction_impact_dl_and_rank(spark, tmp_path):
     assert len(idx2.manifest["segments"]) == 1
     ds = {r["doc_id"]: r["dl"] for r in idx2.doc_stats().collect()}
     # 'uq7' occurs once in BOTH fields of exactly one doc -> one block,
-    # one doc, two decoded (doc, field) rows at compaction time
+    # one doc, two (doc, field) posting rows
     rows = idx2.blocks(exact_terms=["uq7"]).collect()
     assert len(rows) == 1 and rows[0]["n_docs"] == 1
     (blk,) = rows

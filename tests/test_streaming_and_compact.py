@@ -4,8 +4,17 @@ import os
 
 import pytest
 
+from fulltextsearch_spark.operators.bm25 import (
+    rank_query_exhaustive,
+    rank_terms_wand,
+)
 from fulltextsearch_spark.plans.planner import matches_to_string
-from fulltextsearch_spark.sources.index_io import Index, build_index, compact_index
+from fulltextsearch_spark.sources.index_io import (
+    BLOCK_MODES,
+    Index,
+    build_index,
+    compact_index,
+)
 from fulltextsearch_spark.sources.pages import pms_corpus_pages
 
 
@@ -39,7 +48,11 @@ def test_streaming_ingest_builds_segments(spark, tmp_path):
     assert len(idx2.manifest["segments"]) == n_seg
 
 
-@pytest.mark.parametrize("mode", ["arrays", "blocks"])
+def _top(df) -> list[tuple[int, float]]:
+    return [(r["doc_id"], round(r["score"], 9)) for r in df.collect()]
+
+
+@pytest.mark.parametrize("mode", ["arrays", *BLOCK_MODES])
 def test_compaction_preserves_results(spark, tmp_path, mode):
     root = str(tmp_path / f"compact_{mode}")
     for seg in (1, 2, 3):
@@ -49,7 +62,7 @@ def test_compaction_preserves_results(spark, tmp_path, mode):
         q: matches_to_string(idx.search(q))
         for q in ["WORD(this)", "EDIT(these,2)", "SEQ(WORD(this),WORD(is))"]
     }
-    rank_before = [(r["doc_id"], round(r["score"], 9)) for r in idx.rank("WORD(this)", 10).collect()]
+    rank_before = _top(idx.rank("WORD(this)", 10))
     positions_before = idx.get_positions(3)
 
     manifest = compact_index(spark, root)
@@ -60,8 +73,17 @@ def test_compaction_preserves_results(spark, tmp_path, mode):
     idx2 = Index.open(spark, root)
     for q, want in before.items():
         assert matches_to_string(idx2.search(q)) == want, q
-    rank_after = [(r["doc_id"], round(r["score"], 9)) for r in idx2.rank("WORD(this)", 10).collect()]
-    assert rank_after == rank_before
-    # doc-position vectors survive the decode → re-encode round trip
-    # (blocks-only: sentinel payloads; arrays: sentinel rows)
+    assert _top(idx2.rank("WORD(this)", 10)) == rank_before
+    # doc-position vectors survive compaction (blocks-only: sentinel
+    # block rows copied verbatim; arrays: sentinel posting rows)
     assert idx2.get_positions(3) == positions_before
+    if mode in BLOCK_MODES:
+        # block-max WAND on the copied blocks stays rank-identical to
+        # the exhaustive scorer (gates off: force the pruning route)
+        for terms, q in (
+            (["this"], "WORD(this)"),
+            (["search", "test"], "OR(WORD(search),WORD(test))"),
+        ):
+            assert _top(
+                rank_terms_wand(idx2, terms, 10, gates=False)
+            ) == _top(rank_query_exhaustive(idx2, q, 10)), q
