@@ -21,12 +21,11 @@ Scoring semantics (mirrored exactly by the oracle):
 Scale shape: dictionary stats join is broadcast; per-(doc,term) scores
 aggregate map-side; top-k is a TakeOrdered (no global sort
 materialization). Block-max metadata (max_tf per block) gives an upper
-score bound per block for WAND-style pruning — see `wand_candidates`.
+score bound per block for WAND-style pruning — see `rank_terms_wand`.
 """
 
 from __future__ import annotations
 
-import os
 from functools import reduce
 
 from pyspark.sql import DataFrame
@@ -93,10 +92,28 @@ def _leaf_scores(
         postings = postings.join(
             F.broadcast(doc_filter), "doc_id", "left_semi"
         )
+    return _bm25_doc_scores(
+        index, postings, index.dictionary(), n_docs, avgdl,
+        single_term=isinstance(node, WordAst),
+    )
+
+
+def _bm25_doc_scores(
+    index,
+    postings: DataFrame,
+    dictionary: DataFrame,
+    n_docs: int,
+    avgdl: float,
+    single_term: bool,
+) -> DataFrame:
+    """Posting rows (term, doc_id, tf) → per-doc BM25 (doc_id, score):
+    the scoring tail of the exhaustive leaf scorer and of both WAND
+    decode passes. ``dictionary`` supplies df per term (broadcast).
+    Doc-level tf per term is the sum over fields; on a single-field
+    index rows are already (term, doc)-unique, so that aggregation (and
+    its exchange) is an identity and is skipped — and for a single
+    term, so is the per-doc sum, leaving a shuffle-free score plan."""
     unique_rows = _unique_term_doc_rows(index)
-    # doc-level tf per term (sum over fields), then join stats; on a
-    # single-field index rows are already (term, doc)-unique, so the
-    # aggregation (and its exchange) is an identity — skip it
     if unique_rows:
         doc_tf = postings.select(
             "term", "doc_id", F.col("tf").cast("long").alias("tf")
@@ -105,7 +122,6 @@ def _leaf_scores(
         doc_tf = postings.groupBy("term", "doc_id").agg(
             F.sum("tf").alias("tf")
         )
-    dictionary = index.dictionary()
     scored = (
         doc_tf.join(F.broadcast(dictionary), "term")
         .join(index.doc_stats(), "doc_id")
@@ -114,8 +130,7 @@ def _leaf_scores(
             (_idf_col(n_docs) * _tfn_col(F.col("tf"), avgdl)).alias("s"),
         )
     )
-    if unique_rows and isinstance(node, WordAst):
-        # one term, one row per doc: the per-doc sum is an identity too
+    if unique_rows and single_term:
         return scored.select("doc_id", F.col("s").alias("score"))
     return scored.groupBy("doc_id").agg(F.sum("s").alias("score"))
 
@@ -282,16 +297,14 @@ WAND_THETA_EST_FRAC = 0.8
 # saves at most candidates − 2·seed-budget decodes, so WAND routes only
 # when that best case exceeds this overhead; Gate P (multi-term)
 # additionally requires the PREDICTED saving at θ_est — candidates −
-# predicted survivors − the seed decode itself — to clear it. Local[32]
-# default ≈ the measured per-job fixed cost (~0.3 s) over the measured
+# predicted survivors − the seed decode itself — to clear it. The value
+# is the per-job fixed cost measured at local[32] (~0.3 s) over the
 # per-block decode cost (~3.5 ms: q_bm25_or skipped ~250 blocks for a
 # 0.9 s win). On a real cluster per-block wall cost shrinks with
-# executor count while job submit latency does not, so production
-# deployments should RAISE it (env FTS_WAND_OVERHEAD_BLOCKS); the gate
-# only picks between two exact routes, so any value is rank-safe.
-WAND_ROUNDTRIP_OVERHEAD_BLOCKS = int(
-    os.environ.get("FTS_WAND_OVERHEAD_BLOCKS", "64")
-)
+# executor count while job submit latency does not, so the best value
+# grows with the cluster; the gate only picks between two exact routes,
+# so any value is rank-safe.
+WAND_ROUNDTRIP_OVERHEAD_BLOCKS = 64
 
 
 def _id_span(index, n_docs: int) -> int:
@@ -299,7 +312,7 @@ def _id_span(index, n_docs: int) -> int:
     committed doc_id_range high water (zero Spark jobs). Falls back to
     n_docs for handles without a manifest (memory indexes). Sparse
     preassigned ids (build_index allows them) make n_docs alone wrong:
-    cell width would collapse and F.sequence could emit millions of
+    cell width would collapse and the grid explode could emit millions of
     cells per block (ADVICE r3 medium)."""
     manifest = getattr(index, "manifest", None) or {}
     id_hi = max(
@@ -363,42 +376,6 @@ def rank_query_exhaustive(index, query: str, k: int = 10) -> DataFrame:
     return scores.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
 
-def _wand_exact_scores(
-    index, dictionary, n_docs, avgdl, bdf, single_term: bool = False
-) -> DataFrame:
-    """Decode block rows → exact per-doc BM25 scores (shared by the
-    seed and final passes of both WAND control planes). On single-field
-    indexes the (term, doc) aggregation is an identity (decoded rows
-    are unique — blocks never split a doc) and, for a single-term
-    query, so is the per-doc sum: both exchanges elide, leaving a
-    completely shuffle-free score plan."""
-    from fulltextsearch_spark.operators.build import decode_blocks
-
-    postings = decode_blocks(
-        bdf.select("term", "payload"), codec=getattr(index, "mode", "blocks")
-    )
-    unique_rows = _unique_term_doc_rows(index)
-    if unique_rows:
-        doc_tf = postings.select(
-            "term", "doc_id", F.col("tf").cast("long").alias("tf")
-        )
-    else:
-        doc_tf = postings.groupBy("term", "doc_id").agg(
-            F.sum("tf").alias("tf")
-        )
-    scored = (
-        doc_tf.join(F.broadcast(dictionary), "term")
-        .join(index.doc_stats(), "doc_id")
-        .select(
-            "doc_id",
-            (_idf_col(n_docs) * _tfn_col(F.col("tf"), avgdl)).alias("s"),
-        )
-    )
-    if unique_rows and single_term:
-        return scored.select("doc_id", F.col("s").alias("score"))
-    return scored.groupBy("doc_id").agg(F.sum("s").alias("score"))
-
-
 def _rank_wand_driver_cp(
     index,
     terms: list[str],
@@ -409,28 +386,57 @@ def _rank_wand_driver_cp(
     n_docs: int,
     avgdl: float,
 ) -> DataFrame:
-    """Block-max WAND with the CONTROL PLANE on the driver (VERDICT r4
-    #4/#5): ``meta`` is the candidate blocks' metadata (term, first/
-    last_doc, n_docs, max_tf, impact frontiers — never payloads) as a
-    driver-resident pyarrow table (Index.local_block_meta, budgeted).
-    Everything the distributed plane computed as separate metadata
-    Spark jobs — per-term ub aggregates, Gate P's θ_cap/floor count,
-    the seed-cell ranking, Gate B's survivor count — is numpy over a
-    few thousand rows here, so a WAND-routed query runs exactly TWO
-    Spark jobs (seed decode+score, survivor decode+score) and an
-    exhaustive-routed one runs ONE. Identical routing decisions and
-    identical ranks (same formulas, same gates — test_wand runs this
-    plane; FTS_NO_LOCAL_FAST_PATH or an over-budget term falls back to
-    the distributed plane in rank_terms_wand). Seed/survivor block
-    sets are pushed as broadcast (term, first_doc) key joins — never
-    giant IN literals, no extra jobs."""
+    """Block-max WAND's control plane: numpy over ``meta``, the
+    candidate blocks' metadata table (term, first/last_doc, n_docs,
+    max_tf, impact frontiers — never payloads) from Index.block_meta.
+    The table has two sources — the driver's own pyarrow read of the
+    bucket files, or one payload-free Spark collect when those files are
+    not driver-listable (or FTS_NO_LOCAL_FAST_PATH is set) — and this
+    plane cannot tell them apart. Per-term ub aggregates, Gate P's
+    θ_cap/floor count, the seed-cell ranking and Gate B's survivor
+    count are numpy over a few thousand rows, so a WAND-routed query
+    runs exactly TWO Spark jobs past the metadata (seed decode+score,
+    survivor decode+score) and an exhaustive-routed one runs ONE.
+    ``meta`` is None when the term set owns more than
+    LOCAL_META_MAX_BLOCKS blocks: the query then routes to the full
+    decode ("exhaustive_over_budget", rank-exact, no pruning). Seed/
+    survivor block sets are pushed as broadcast (term, first_doc) key
+    joins — never giant IN literals, no extra jobs."""
     import numpy as np
     import pandas as pd
 
-    k1, b = BM25_K1, BM25_B
-    nblocks = meta.num_rows
+    from fulltextsearch_spark.operators.build import decode_blocks
+
+    dictionary = index.dictionary().where(F.col("term").isin(terms))
+    blocks = index.blocks(exact_terms=terms)
+    nblocks = None if meta is None else meta.num_rows
+
+    def exact_scores(bdf) -> DataFrame:
+        postings = decode_blocks(
+            bdf.select("term", "payload"), codec=index.mode
+        )
+        return _bm25_doc_scores(
+            index, postings, dictionary, n_docs, avgdl,
+            single_term=len(set(terms)) == 1,
+        )
+
+    def finish(bdf, route: str, n_seeded: int, n_decoded) -> DataFrame:
+        if stats is not None:
+            stats["n_blocks"] = nblocks
+            stats["n_blocks_seeded"] = n_seeded
+            stats["n_blocks_decoded"] = n_decoded
+            stats["route"] = route
+        return (
+            exact_scores(bdf)
+            .orderBy(F.desc("score"), F.asc("doc_id"))
+            .limit(k)
+        )
+
+    if meta is None:
+        return finish(blocks, "exhaustive_over_budget", 0, None)
     if nblocks == 0:
         return index.spark.createDataFrame([], "doc_id long, score double")
+    k1, b = BM25_K1, BM25_B
     term_col = np.array(meta.column("term").to_pylist(), dtype=object)
     first = meta.column("first_doc").to_numpy()
     last = meta.column("last_doc").to_numpy()
@@ -463,27 +469,6 @@ def _rank_wand_driver_cp(
     np.add.at(df_t, tinv, n_docs_b)
     idf_t = np.log(1.0 + (float(n_docs) - df_t + 0.5) / (df_t + 0.5))
     ub = idf_t[tinv] * tfn_ub
-
-    dictionary = index.dictionary().where(F.col("term").isin(terms))
-    blocks = index.blocks(exact_terms=terms)
-
-    def exact_scores(bdf) -> DataFrame:
-        return _wand_exact_scores(
-            index, dictionary, n_docs, avgdl, bdf,
-            single_term=len(uterms) == 1,
-        )
-
-    def finish(bdf, route: str, n_seeded: int, n_decoded: int) -> DataFrame:
-        if stats is not None:
-            stats["n_blocks"] = nblocks
-            stats["n_blocks_seeded"] = min(n_seeded, nblocks)
-            stats["n_blocks_decoded"] = n_decoded
-            stats["route"] = route
-        return (
-            exact_scores(bdf)
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
-        )
 
     def key_join(block_idx) -> DataFrame:
         keys = pd.DataFrame(
@@ -518,8 +503,8 @@ def _rank_wand_driver_cp(
         # catches a θ that failed to prune after the (cheap) seed pass.
         seed_blocks = np.argsort(-ub, kind="stable")[:n_seed]
     else:
-        # doc-range-grid residuals, dense numpy twin of the Spark
-        # plane (see rank_terms_wand docstring for the math)
+        # doc-range-grid residuals (see rank_terms_wand docstring for
+        # the math)
         cell_w = max(1, -(-_id_span(index, n_docs) // GRID_CELLS))
         c0 = first // cell_w
         c1 = last // cell_w
@@ -640,19 +625,28 @@ def rank_terms_wand(
     combined bound before any payload decode and routes unprunable
     queries (same-grade hot pairs) to the one-job full decode; Gate B
     re-checks the measured survivor fraction after θ. All three read
-    only the persisted block-metadata cache.
+    only the block-metadata table.
+
+    One control plane (_rank_wand_driver_cp), two metadata sources
+    behind Index.block_meta: the driver's pyarrow read of the terms'
+    bucket files when they are listable and the fast path is on, else
+    one payload-free Spark collect of the same columns. Both are
+    memoized per term set on the handle. A term set over
+    LOCAL_META_MAX_BLOCKS blocks (≈ 4·10^9 occurrences) gets no table
+    and routes to the full decode ("exhaustive_over_budget"): exact,
+    but without pruning.
 
     ``stats``, when given, receives {"n_blocks": total candidate blocks,
     "n_blocks_seeded": DISTINCT blocks decoded by the seed phase,
     "n_blocks_decoded": blocks decoded by the final pass, "route": which
     gate routed ("wand" | "exhaustive_small" | "exhaustive_unprunable" |
-    "exhaustive_underfull" | "exhaustive_post_theta")} for prune-ratio
-    reporting off the persisted candidate-block cache.
+    "exhaustive_underfull" | "exhaustive_post_theta" |
+    "exhaustive_over_budget")} for prune-ratio reporting. Over budget,
+    "n_blocks" and "n_blocks_decoded" are None (not counted).
 
     Scale shape: the residual side (per-(cell, term) maxima) is block
     METADATA — ~1 row per 4096 occurrences, explode-bounded by the
-    grid — aggregated once and broadcast back onto the block set; no
-    payload is touched before the survivor decode.
+    grid; no payload is touched before the survivor decode.
     """
     manifest = getattr(index, "manifest", None)
     mtype = manifest["type"] if manifest else {}
@@ -664,207 +658,6 @@ def rank_terms_wand(
         )
     n_docs, avgdl = index.collection_stats()
     avgdl = avgdl or 1.0  # empty index: avoid a 0-division in the bound
-    # driver-resident control plane when the candidate block METADATA
-    # fits the driver budget (the common interactive case); the
-    # distributed plane below is the same algorithm for over-budget
-    # term sets and handles without local file access
-    meta_fn = getattr(index, "local_block_meta", None)
-    meta = meta_fn(terms, with_impacts=True) if meta_fn is not None else None
-    if meta is not None:
-        return _rank_wand_driver_cp(
-            index, terms, k, stats, gates, meta, n_docs, avgdl
-        )
-    dictionary = index.dictionary().where(F.col("term").isin(terms))
-    blocks = index.blocks(exact_terms=terms).join(F.broadcast(dictionary), "term")
-    # exact impact bound when the frontier exists; dl→0 majorization
-    # otherwise (array_max over an empty/null array yields null)
-    k1, b = BM25_K1, BM25_B
-    imp_tfn = F.array_max(
-        F.zip_with(
-            "imp_tf",
-            "imp_dl",
-            lambda tf, dl: tf.cast("double")
-            * (k1 + 1.0)
-            / (
-                tf.cast("double")
-                + k1 * (1.0 - b + b * dl.cast("double") / F.lit(avgdl))
-            ),
-        )
-        if "imp_tf" in blocks.columns
-        else F.lit(None).cast("array<double>")
+    return _rank_wand_driver_cp(
+        index, terms, k, stats, gates, index.block_meta(terms), n_docs, avgdl
     )
-    fallback_tfn = (
-        F.col("max_tf") * (k1 + 1.0) / (F.col("max_tf") + k1 * (1.0 - b))
-    )
-    ub = _idf_col(n_docs) * F.coalesce(imp_tfn, fallback_tfn)
-    blocks = blocks.withColumn("ub", ub).persist()
-    try:
-        agg = (
-            blocks.groupBy("term")
-            .agg(F.max("ub").alias("m"), F.count("*").alias("n"))
-            .collect()
-        )
-        ubmax = {r["term"]: r["m"] for r in agg}
-        n_total = sum(r["n"] for r in agg)
-        if not ubmax:
-            return index.spark.createDataFrame([], "doc_id long, score double")
-        block_cols = ["term", "payload"]
-
-        def exact_scores(bdf) -> DataFrame:
-            return _wand_exact_scores(
-                index, dictionary, n_docs, avgdl, bdf.select(*block_cols),
-                single_term=len(set(terms)) == 1,
-            )
-
-        def finish(bdf, route: str, n_seeded: int, n_decoded: int) -> DataFrame:
-            if stats is not None:
-                stats["n_blocks"] = n_total
-                stats["n_blocks_seeded"] = min(n_seeded, n_total)
-                stats["n_blocks_decoded"] = n_decoded
-                stats["route"] = route
-            return (
-                exact_scores(bdf)
-                .orderBy(F.desc("score"), F.asc("doc_id"))
-                .limit(k)
-            )
-
-        n_seed = max(k, WAND_SEED_BLOCKS)
-        # Gate A: candidate set at/below ~2 seed budgets — the seed
-        # phase would decode a comparable share anyway; one decode job
-        # beats seed + θ + prune round-trips (the 3-block skew case).
-        # The seed round-trip's fixed job cost is priced in block units
-        # on top (VERDICT r5 #2). ``gates=False`` (tests) exercises the
-        # pruning machinery on fixture-sized corpora the gates would
-        # route around.
-        if gates and n_total <= 2 * n_seed + WAND_ROUNDTRIP_OVERHEAD_BLOCKS:
-            return finish(blocks, "exhaustive_small", 0, n_total)
-        cells = gub = tot = others = None
-        seeded_n = n_seed
-        if len(ubmax) == 1:
-            seed = blocks.orderBy(F.desc("ub")).limit(n_seed)
-        else:
-            # doc-range-grid metadata (see docstring), shared by the
-            # seed and prune phases; all projections of the persisted
-            # candidate-block cache. Cell width covers the doc-ID SPAN
-            # (manifest high water), not n_docs — preassigned sparse
-            # ids would otherwise explode millions of cells per block.
-            cell_w = max(1, -(-_id_span(index, n_docs) // GRID_CELLS))
-            cells = blocks.select(
-                "term",
-                "first_doc",
-                "ub",
-                F.explode(
-                    F.sequence(
-                        (F.col("first_doc") / cell_w).cast("long"),
-                        (F.col("last_doc") / cell_w).cast("long"),
-                    )
-                ).alias("cell"),
-            )
-            gub = cells.groupBy("cell", "term").agg(F.max("ub").alias("gub"))
-            tot = gub.groupBy("cell").agg(F.sum("gub").alias("tot_gub"))
-            # per (block, term): the best cell's other-terms sum;
-            # (term, first_doc) is a unique block key (a term's
-            # blocks never overlap in doc range, across segments)
-            others = (
-                cells.join(gub, ["cell", "term"])
-                .join(tot, "cell")
-                .groupBy("term", "first_doc")
-                .agg(F.max(F.col("tot_gub") - F.col("gub")).alias("others_ub"))
-            )
-            # Gate P: predicted payoff check BEFORE any payload decode.
-            # θ can never exceed θ_cap = the top cell's combined bound
-            # (a doc's score ≤ Σ_u gub(u, its cell)); hot tf-saturated
-            # pairs land their real θ just under it, so survivors at
-            # the WAND_THETA_EST_FRAC·θ_cap estimate predict the real
-            # decode set. Same-grade hot term pairs (narrow ub bands)
-            # bottom out near 100% here — route them to the one-job
-            # exhaustive decode instead of paying seed + grid
-            # round-trips to prune ~0 (round-3: q_bm25_or decoded
-            # 1961/1965 blocks through full WAND and lost 3x).
-            if gates:
-                # one metadata job: θ_cap rides in as a broadcast 1-row
-                # aggregate instead of its own collect round-trip
-                cap = tot.agg(
-                    (F.max("tot_gub") * WAND_THETA_EST_FRAC).alias(
-                        "theta_est"
-                    )
-                )
-                n_floor = (
-                    blocks.join(F.broadcast(others), ["term", "first_doc"])
-                    .crossJoin(F.broadcast(cap))
-                    .where(
-                        F.col("ub") + F.col("others_ub")
-                        >= F.col("theta_est")
-                    )
-                    .count()
-                )
-                if (
-                    n_floor > WAND_MAX_SURVIVOR_FRAC * n_total
-                    or n_total - n_floor
-                    <= n_seed + WAND_ROUNDTRIP_OVERHEAD_BLOCKS
-                ):
-                    return finish(blocks, "exhaustive_unprunable", 0, n_total)
-            # SEED BY CELLS, not by blocks: decode every term's blocks
-            # touching the top cells by combined bound, so each doc in
-            # a seed cell gets its COMPLETE multi-term score (its block
-            # for every query term touches the doc's cell). Per-block
-            # seeding gives seeded docs only one term's contribution,
-            # so θ lands a whole term's share low and nothing prunes.
-            cell_counts = (
-                cells.groupBy("cell")
-                .agg(F.count("*").alias("nb"))
-                .join(tot, "cell")
-                # cell-asc tiebreak: the driver plane breaks tot_gub
-                # ties with a stable argsort by cell index, so the
-                # distributed twin must too — otherwise seed-cell picks
-                # (and seeded counts) diverge between planes on ties
-                # (ADVICE r5; ranks stay exact either way)
-                .orderBy(F.desc("tot_gub"), F.asc("cell"))
-                .limit(64)
-                .collect()
-            )
-            picked, budget = [], 0
-            for r in cell_counts:
-                picked.append(r["cell"])
-                budget += r["nb"]
-                if budget >= n_seed:
-                    break
-            seed_keys = (
-                cells.where(F.col("cell").isin(picked))
-                .select("term", "first_doc")
-                .distinct()
-            )
-            seed = blocks.join(F.broadcast(seed_keys), ["term", "first_doc"])
-            # distinct block count, not (block, cell) incidences
-            # (ADVICE r3 low: budget overcounted multi-cell blocks)
-            seeded_n = seed_keys.count() if stats is not None else budget
-        seed_scores = (
-            exact_scores(seed).orderBy(F.desc("score")).limit(k).collect()
-        )
-        if len(seed_scores) < k:
-            # not enough candidates to prune safely
-            return finish(blocks, "exhaustive_underfull", seeded_n, n_total)
-        theta = seed_scores[-1]["score"]
-        if len(ubmax) == 1:
-            # single term: no other-term residual — pure block-max
-            survivors = blocks.where(F.col("ub") >= F.lit(theta))
-        else:
-            survivors = blocks.join(
-                F.broadcast(others), ["term", "first_doc"]
-            ).where(F.col("ub") + F.col("others_ub") >= F.lit(theta))
-        # Gate B: measured payoff. A survivor set over half the
-        # candidates decodes as much as the plain path WITH the extra
-        # residual join riding on every decoded block — drop to the
-        # straight full decode. The count is metadata-only over the
-        # persisted cache (no payload touched).
-        if gates or stats is not None:
-            n_surv = survivors.count()
-            if gates and n_surv > WAND_MAX_SURVIVOR_FRAC * n_total:
-                return finish(
-                    blocks, "exhaustive_post_theta", seeded_n, n_total
-                )
-        else:
-            n_surv = -1  # uncounted (gates off, no stats requested)
-        return finish(survivors, "wand", seeded_n, n_surv)
-    finally:
-        blocks.unpersist()

@@ -85,16 +85,33 @@ BLOCK_MODES = ("blocks", "groupvarint", "packedints", "binary")
 # the driver (the metadata pre-read bails out first).
 LOCAL_FAST_MAX_OCC = 1 << 16
 
-# Driver-side block-METADATA budget (local_block_meta): ~1 row per
-# BLOCK_MAX_OCC (4096) occurrences, so 1M metadata rows covers terms
-# with ~4·10^9 occurrences — far past any interactive query — while a
-# true stop word on a web-scale corpus (10^8+ blocks) aborts the read
-# and keeps its control plane distributed.
+# Driver-side block-METADATA budget (Index.block_meta, from either of
+# its sources): ~1 row per BLOCK_MAX_OCC (4096) occurrences, so 1M
+# metadata rows covers terms with ~4·10^9 occurrences — far past any
+# interactive query — while a true stop word on a web-scale corpus
+# (10^8+ blocks) aborts the read, and block-max WAND ranks it by the
+# exact full decode instead ("exhaustive_over_budget").
 LOCAL_META_MAX_BLOCKS = 1 << 20
 
 
 def _local_fast_enabled() -> bool:
     return not os.environ.get("FTS_NO_LOCAL_FAST_PATH")
+
+
+# block-metadata columns (Index.block_meta); legacy segments lack the
+# impact frontiers
+BLOCK_META_COLS = (
+    "term", "first_doc", "last_doc", "n_occ", "n_docs", "max_tf",
+    "imp_tf", "imp_dl",
+)
+
+
+def _sort_block_meta(tbl):
+    """(term, first_doc) order — a unique block key (a term's blocks
+    never overlap in doc range, across segments), so both metadata
+    sources give the same row order whatever their file or partition
+    order. The single-term WAND seed breaks ub ties by row order."""
+    return tbl.sort_by([("term", "ascending"), ("first_doc", "ascending")])
 
 
 def term_bucket(col, n_buckets: int):
@@ -843,6 +860,8 @@ class Index:
     # guards the per-handle driver caches touched by concurrent rank
     # queries sharing one handle (pdf/meta memoization + eviction)
     _cache_lock: object = field(repr=False, default_factory=threading.Lock)
+    # term set -> block-metadata table, or False when over budget
+    _blockmeta_cache: dict = field(repr=False, default_factory=dict)
 
     @classmethod
     def open(cls, spark: SparkSession, root: str) -> "Index":
@@ -1103,18 +1122,15 @@ class Index:
             )
         return df
 
-    def local_block_meta(
-        self, terms: list[str], with_impacts: bool = False
-    ):
+    def local_block_meta(self, terms: list[str]):
         """Driver-side block METADATA for exact terms (payloads never
         read): a pyarrow Table of (term, first_doc, last_doc, n_occ,
-        n_docs, max_tf[, imp_tf, imp_dl]), or None when the index has
-        no block layout, the fast path is disabled, files are not
-        driver-listable, or the terms' block count exceeds
-        LOCAL_META_MAX_BLOCKS (the budget guard: a stop-word at 10^11
-        occurrences owns ~10^8 blocks — that control plane must stay
-        distributed). Budgeted scanner with early abort, memoized per
-        (terms, with_impacts) on the handle (segments are immutable).
+        n_docs, max_tf[, imp_tf, imp_dl]) sorted by (term, first_doc),
+        or None when the index has no block layout, the fast path is
+        disabled, files are not driver-listable, or the terms' block
+        count exceeds LOCAL_META_MAX_BLOCKS (budgeted scanner with early
+        abort). Memoized per term set on the handle, shared with
+        block_meta (segments are immutable).
 
         This is what lets conjunction pruning and the WAND routing
         gates run with ZERO metadata Spark jobs at interactive corpus
@@ -1122,17 +1138,13 @@ class Index:
         so even a 250k-doc hot term is a few thousand rows."""
         if self.mode not in BLOCK_MODES or not _local_fast_enabled():
             return None
-        cache = getattr(self, "_blockmeta_cache", None)
-        if cache is None:
-            cache = {}
-            setattr(self, "_blockmeta_cache", cache)
         # one cache entry per term set, ALWAYS including the impact
         # columns: a ranked AND otherwise scanned the same parquet
         # footers twice on the GIL-bound driver — once with impacts for
         # WAND, once without for the exchange-reuse gate (ADVICE r5).
         # Impact frontiers are ≤16 ints per block, so the extra read is
         # noise next to a second footer+metadata pass.
-        del with_impacts  # kept in the signature for call-site clarity
+        cache = self._blockmeta_cache
         key = tuple(sorted(set(terms)))
         if key in cache:
             tbl = cache[key]
@@ -1145,9 +1157,7 @@ class Index:
         dataset = self._local_dataset(terms)
         if dataset is None:
             return None  # not listable here ≠ term absent (ADVICE r4)
-        cols = ["term", "first_doc", "last_doc", "n_occ", "n_docs", "max_tf"]
-        if "imp_tf" in dataset.schema.names:  # legacy segments lack impacts
-            cols += ["imp_tf", "imp_dl"]
+        cols = [c for c in BLOCK_META_COLS if c in dataset.schema.names]
         scanner = dataset.scanner(
             columns=cols, filter=pads.field("term").isin(list(set(terms)))
         )
@@ -1161,8 +1171,28 @@ class Index:
                 return None
             batches.append(rb)
         tbl = pa.Table.from_batches(batches, schema=scanner.projected_schema)
-        cache[key] = tbl
-        return tbl
+        cache[key] = _sort_block_meta(tbl)
+        return cache[key]
+
+    def block_meta(self, terms: list[str]):
+        """The block-metadata table of local_block_meta, from whichever
+        source this handle can use: the driver-side pyarrow read, or —
+        when the bucket files are not driver-listable or the fast path
+        is off — ONE payload-free Spark collect of the same columns,
+        capped at LOCAL_META_MAX_BLOCKS + 1 rows. Both give the same
+        rows in the same (term, first_doc) order. None only when the
+        terms own more than LOCAL_META_MAX_BLOCKS blocks. Memoized per
+        term set on the handle (blocks mode only)."""
+        cache = self._blockmeta_cache
+        key = tuple(sorted(set(terms)))
+        if self.local_block_meta(terms) is None and key not in cache:
+            df = self.blocks(exact_terms=terms)
+            cols = [c for c in BLOCK_META_COLS if c in df.columns]
+            tbl = df.select(*cols).limit(LOCAL_META_MAX_BLOCKS + 1).toArrow()
+            over = tbl.num_rows > LOCAL_META_MAX_BLOCKS
+            cache[key] = False if over else _sort_block_meta(tbl)
+        tbl = cache[key]
+        return None if tbl is False else tbl
 
     def term_doc_ids(self, term: str):
         """Sorted int64 numpy array of one term's doc ids — driver-

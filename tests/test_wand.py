@@ -120,44 +120,95 @@ def test_wand_multi_term_grid_residuals_prune(spark, tmp_path):
     assert stats["n_blocks_decoded"] < stats["n_blocks"], stats
 
 
-def test_wand_distributed_plane_matches_driver_plane(
-    spark, synth_blocks_idx, monkeypatch
+def _wand_run(idx, terms, k, gates):
+    stats: dict = {}
+    rows = [
+        (r["doc_id"], round(r["score"], 9))
+        for r in rank_terms_wand(
+            idx, terms, k, stats=stats, gates=gates
+        ).collect()
+    ]
+    return rows, stats
+
+
+@pytest.mark.parametrize("gates", [True, False])
+def test_wand_spark_meta_source_matches_local(
+    spark, synth_blocks_idx, monkeypatch, gates
 ):
-    """rank_terms_wand has two control planes — driver-resident numpy
-    over local block metadata (the interactive default) and the
-    distributed Spark plane (over-budget terms / no local files). Both
-    must make the same routing decisions and return identical ranks."""
+    """rank_terms_wand has one control plane fed by two block-metadata
+    sources — the driver's pyarrow read (the interactive default) and a
+    payload-free Spark collect (no driver-listable files, or the fast
+    path off). Both must give the same table, hence the same ranks and
+    the same routing, seed and decode counts."""
     idx = synth_blocks_idx
     cases = [(["t0"], 5), (["t3", "t11"], 10)]
-    driver = []
-    for terms, k in cases:
-        st: dict = {}
-        driver.append(
-            (
-                [
-                    (r["doc_id"], round(r["score"], 9))
-                    for r in rank_terms_wand(
-                        idx, terms, k, stats=st, gates=False
-                    ).collect()
-                ],
-                st["route"],
-                st["n_blocks"],
-            )
-        )
+    local = [
+        (idx.block_meta(terms).to_pylist(), _wand_run(idx, terms, k, gates))
+        for terms, k in cases
+    ]
     monkeypatch.setenv("FTS_NO_LOCAL_FAST_PATH", "1")
     idx_off = Index.open(spark, idx.root)
-    assert idx_off.local_block_meta(["t0"]) is None  # plane disabled
-    for (terms, k), (rows, route, n_blocks) in zip(cases, driver):
-        st: dict = {}
-        dist = [
+    assert idx_off.local_block_meta(["t0"]) is None  # local source off
+    for (terms, k), (meta, (rows, stats)) in zip(cases, local):
+        assert idx_off.block_meta(terms).to_pylist() == meta
+        got_rows, got_stats = _wand_run(idx_off, terms, k, gates)
+        assert got_rows == rows
+        assert set(got_stats) == {
+            "n_blocks", "n_blocks_seeded", "n_blocks_decoded", "route"
+        }
+        assert got_stats == stats
+
+
+@pytest.mark.parametrize("fast_path", [True, False])
+def test_wand_over_budget_routes_exhaustive(
+    spark, synth_blocks_idx, monkeypatch, fast_path
+):
+    """A term set owning more than LOCAL_META_MAX_BLOCKS blocks gets no
+    metadata table from either source; rank_terms_wand then ranks it by
+    the full decode — no seed phase, ranks still exact."""
+    from fulltextsearch_spark.sources import index_io
+
+    cases = [(["t0"], 5), (["t3", "t11"], 10)]
+    for terms, _ in cases:
+        assert synth_blocks_idx.block_meta(terms).num_rows > 1
+    monkeypatch.setattr(index_io, "LOCAL_META_MAX_BLOCKS", 1)
+    if not fast_path:
+        monkeypatch.setenv("FTS_NO_LOCAL_FAST_PATH", "1")
+    idx = Index.open(spark, synth_blocks_idx.root)  # fresh metadata memo
+    for terms, k in cases:
+        assert idx.block_meta(terms) is None
+        rows, stats = _wand_run(idx, terms, k, gates=False)
+        assert stats["route"] == "exhaustive_over_budget", stats
+        assert stats["n_blocks_seeded"] == 0
+        query = "OR(" + ",".join(f"WORD({t})" for t in terms) + ")"
+        assert rows == [
             (r["doc_id"], round(r["score"], 9))
-            for r in rank_terms_wand(
-                idx_off, terms, k, stats=st, gates=False
-            ).collect()
+            for r in rank_query_exhaustive(idx, query, k).collect()
         ]
-        assert dist == rows
-        assert st["route"] == route
-        assert st["n_blocks"] == n_blocks
+
+
+def test_wand_spark_meta_source_job_budget(
+    spark, synth_blocks_idx, monkeypatch
+):
+    """The Spark metadata source costs at most ONE job on a fresh
+    handle, and none when the same term set repeats (memoized per term
+    set, in any order)."""
+    from test_query_job_budget import _jobs_for
+
+    monkeypatch.setenv("FTS_NO_LOCAL_FAST_PATH", "1")
+    idx = Index.open(spark, synth_blocks_idx.root)
+    # one-time handle warm-up outside the counted step: resolving the
+    # blocks table (parquet schema inference) is one job, shared by
+    # every later metadata read and decode on the handle
+    idx.blocks()
+    first = _jobs_for(
+        spark, "wand-meta-1", lambda: idx.block_meta(["t3", "t11"])
+    )
+    assert first <= 1, first
+    again = _jobs_for(
+        spark, "wand-meta-2", lambda: idx.block_meta(["t11", "t3"])
+    )
+    assert again == 0, again
 
 
 def test_wand_gate_small_candidate_set(spark, synth_blocks_idx):
