@@ -1,8 +1,9 @@
 """Codec micro-benchmark — the reference's `benchmark` verb analog
 (ConsoleUtil/Program.cs:122-206 prints posting-codec timings to the
-console; SURVEY.md §2.D17). Pure numpy, no Spark: measures the payload
-codecs exactly as the block build (`_encode_term_group`) and
-`decode_blocks` call them.
+console; SURVEY.md §2.D17). Pure numpy, no Spark: measures the
+single-block payload codecs (`codec.encode_block*`, which the build's
+batched `codec.encode_blocks*` entry points match byte for byte) and
+the decoders as `decode_blocks` calls them.
 
 Per mode {blocks (delta+varint), groupvarint, packedints, binary}:
   encode MB/s, full-scan decode MB/s (of raw occurrence bytes),

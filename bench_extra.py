@@ -4,8 +4,7 @@ Builds the same synthetic blocks-mode index as bench.py, then:
 
 - times each query of the bench mix individually with the noop sink
   (guide §1.4) so the computation is isolated from the collect/sink;
-- captures .explain("formatted") for each query into plans/r06/;
-- optionally times build phases (FTS_BUILD_PHASE_LOG=1 prints them).
+- captures .explain("formatted") for each query into plans/r06/.
 
 Usage:
     python bench_extra.py [--explain-dir plans/r06 --suffix before]

@@ -289,7 +289,8 @@ def _impact_frontier(
 ) -> tuple[np.ndarray, np.ndarray]:
     """Pareto frontier of (tf, dl): keep pairs not dominated by another
     pair with tf >= and dl <=. Returned sorted tf-descending (dl is then
-    strictly decreasing too)."""
+    strictly decreasing too). The one-block definition that the build's
+    batched _impact_frontiers is tested against."""
     order = np.lexsort((dl_doc, -tf_doc))
     tf_s, dl_s = tf_doc[order], dl_doc[order]
     keep = np.empty(len(tf_s), dtype=bool)
@@ -302,85 +303,18 @@ def _impact_frontier(
         dl_f = np.array([dl_f[e - 1] for e in cuts[1:]])
     return tf_f.astype(np.int32), dl_f.astype(np.int32)
 
+
 # Docs per salt group when assembling blocks. A stop-word term at
 # 10^12 docs is split over doc-ranges of this span, so no task owns a
 # full posting list; groups stay doc-ordered because the group key IS
 # the doc range (blocks keep global order without a global sort).
 DOC_GROUP_SPAN = 1 << 22
 BLOCK_MAX_OCC = 4096
-
-
-def _encode_term_group(
-    out: dict,
-    term,
-    bucket_val,
-    doc_grp: int,
-    docs: np.ndarray,
-    fields: np.ndarray,
-    tfs: np.ndarray,
-    dls: np.ndarray,
-    flat: np.ndarray,
-    encode_block,
-    block_max_occ: int,
-) -> None:
-    """Chunk ONE (term, doc_grp) group's doc-ordered posting rows into
-    block rows (BLOCK_SCHEMA_BUCKETED columns) appended to ``out`` —
-    THE block-boundary/payload kernel.
-
-    ``docs``/``fields``/``tfs``/``dls`` are row-level (one entry per
-    (doc, field) posting row, doc-ascending, a doc's field rows
-    adjacent; ``dls`` is the (doc, field) token count); ``flat`` is the
-    concatenated positions. Blocks chunk greedily at DOC boundaries (a
-    doc's rows never split). Impact frontiers come from per-doc summed
-    tf and summed dl: for a multi-field doc the sum covers only the
-    fields the term occurs in, a lower bound of the true dl, which
-    over-estimates tfn — still a safe upper bound."""
-    n_rows = len(docs)
-    occ_docs = np.repeat(docs, tfs)
-    occ_fields = np.repeat(fields, tfs)
-    row_off = np.zeros(n_rows + 1, dtype=np.int64)
-    np.cumsum(tfs, out=row_off[1:])
-    doc_start = np.empty(n_rows, dtype=bool)
-    doc_start[0] = True
-    doc_start[1:] = docs[1:] != docs[:-1]
-    dstarts = np.nonzero(doc_start)[0]
-    d_off = np.append(row_off[dstarts], row_off[n_rows])
-    n_grp_docs = len(dstarts)
-    bno = 0
-    di = 0
-    while di < n_grp_docs:
-        dj = int(
-            np.searchsorted(d_off, d_off[di] + block_max_occ, side="right")
-            - 1
-        )
-        if dj <= di:  # one oversized document
-            dj = di + 1
-        dj = min(dj, n_grp_docs)
-        s_row = int(dstarts[di])
-        e_row = int(dstarts[dj]) if dj < n_grp_docs else n_rows
-        s, e = int(row_off[s_row]), int(row_off[e_row])
-        # per-doc summed tf + lower-bound dl for the impacts
-        loc_starts = dstarts[di:dj] - s_row
-        tf_doc = np.add.reduceat(tfs[s_row:e_row], loc_starts)
-        dl_doc = np.add.reduceat(dls[s_row:e_row], loc_starts)
-        imp_tf, imp_dl = _impact_frontier(tf_doc, dl_doc)
-        out["term"].append(term)
-        out["bucket"].append(bucket_val)
-        out["doc_grp"].append(doc_grp)
-        out["block_no"].append(bno)
-        out["first_doc"].append(int(occ_docs[s]))
-        out["last_doc"].append(int(occ_docs[e - 1]))
-        out["n_occ"].append(e - s)
-        out["n_docs"].append(dj - di)
-        out["max_tf"].append(int(tf_doc.max()))
-        out["imp_tf"].append(imp_tf)
-        out["imp_dl"].append(imp_dl)
-        out["payload"].append(
-            encode_block(occ_docs[s:e], occ_fields[s:e], flat[s:e])
-        )
-        bno += 1
-        di = dj
-
+# one output Arrow batch of the block assembly holds at most this many
+# blocks, and at most OUT_MAX_OCC occurrences (or sentinel position
+# values) are encoded per batch — a lone oversized document may exceed it
+OUT_MAX_BLOCKS = 8192
+OUT_MAX_OCC = 1 << 14
 
 # bucketed variant: bucket leads so block rows sort/write directly via
 # partitionBy("bucket") with no second shuffle (assemble_packed_blocks)
@@ -389,45 +323,36 @@ BLOCK_SCHEMA_BUCKETED = T.StructType(
 )
 
 
-def _block_out_batch(out: dict, out_schema):
-    """Per-block output dict → Arrow batch (block cardinality is
-    ~1/BLOCK_MAX_OCC of the input, so this side is cheap)."""
-    import pyarrow as pa
-
-    arrays = []
-    for f in out_schema.fields:
-        vals = out[f.name]
-        if f.name in ("imp_tf", "imp_dl"):
-            arrays.append(
-                pa.array(
-                    [np.asarray(v, dtype=np.int32) for v in vals],
-                    type=pa.list_(pa.int32()),
-                )
-            )
-        elif f.name == "payload":
-            arrays.append(pa.array(vals, type=pa.binary()))
-        elif f.name == "term":
-            arrays.append(pa.array(vals, type=pa.string()))
-        elif f.name in ("doc_grp", "first_doc", "last_doc"):
-            arrays.append(pa.array(vals, type=pa.int64()))
-        else:  # bucket, block_no, n_occ, n_docs, max_tf
-            arrays.append(pa.array(vals, type=pa.int32()))
-    return pa.RecordBatch.from_arrays(
-        arrays, names=[f.name for f in out_schema.fields]
-    )
-
-
 def _block_codec(codec: str):
-    """Payload (encode, decode) pair for a block codec/mode name."""
+    """(batched encode, single-block decode) pair for a block codec/mode
+    name."""
     from fulltextsearch_spark.operators import codec as C
 
     if codec == "groupvarint":
-        return C.encode_block_gv, C.decode_block_gv
+        return C.encode_blocks_gv, C.decode_block_gv
     if codec == "packedints":
-        return C.encode_block_packed, C.decode_block_packed
+        return C.encode_blocks_packed, C.decode_block_packed
     if codec == "binary":
-        return C.encode_block_binary, C.decode_block_binary
-    return C.encode_block, C.decode_block
+        return C.encode_blocks_binary, C.decode_block_binary
+    return C.encode_blocks, C.decode_block
+
+
+def _binary_buffers(arr) -> tuple[np.ndarray, np.ndarray]:
+    """(int64 offsets, uint8 data) of an Arrow binary array, zero-copy:
+    value i is data[offsets[i]:offsets[i+1]]."""
+    import pyarrow as pa
+
+    bufs = arr.buffers()
+    width = 8 if pa.types.is_large_binary(arr.type) else 4
+    offsets = np.frombuffer(
+        bufs[1], dtype=f"<i{width}", count=len(arr) + 1, offset=arr.offset * width
+    ).astype(np.int64)
+    data = (
+        np.frombuffer(bufs[2], dtype=np.uint8)
+        if bufs[2] is not None
+        else np.empty(0, dtype=np.uint8)
+    )
+    return offsets, data
 
 
 # ---------------------------------------------------------------------------
@@ -444,15 +369,25 @@ def _block_codec(codec: str):
 # binary blob of the run's posting rows (raw little-endian numpy
 # sections, shuffle-transient, never persisted). The JVM only hashes
 # and sorts the (bucket, term, doc_grp) key columns; all posting data
-# crosses each boundary as one memcpy per run.
+# crosses each boundary as one buffer per Arrow batch.
+#
+# Both sides work a whole Arrow batch at a time in a constant number of
+# numpy passes, never one pass per run, group or block (the per-call
+# Python cost of a small group dwarfs its numpy work): the tokenize
+# side packs all of a batch's runs into one word buffer (_pack_runs);
+# the reduce side parses all of a batch's blobs at once (_unpack_runs),
+# sorts every posting row by (group, doc, field), cuts and describes
+# all blocks with reduceat and encodes all payloads with one batched
+# codec call (_assemble_groups).
 #
 # Correctness: a doc lives wholly inside one Arrow batch, so a (term,
 # doc, field) posting row exists in exactly ONE run; the reduce side
-# concatenates a group's runs and sorts rows by (doc, field) — unique
-# keys, so the result is deterministic regardless of run arrival order
-# — and feeds the block-chunking kernel (_encode_term_group), so block
-# boundaries and payload bytes do not depend on batch or run layout
-# (golden-tested).
+# sorts a group's rows by (doc, field) — unique keys, so the result is
+# deterministic regardless of run arrival order or of where Arrow batch
+# boundaries split a group — so block boundaries and payload bytes do
+# not depend on batch or run layout (tests/test_block_bytes.py pins
+# them; tests/test_assemble_kernel.py checks the kernel against a
+# per-block reference).
 
 RUN_SCHEMA = T.StructType(
     [
@@ -472,35 +407,91 @@ TFDL_MASK = (1 << 32) - 1
 DP_RUN_DOCS = 128
 
 
-def _pack_run_blob(docs, tfdl, fields, rowlen, flat) -> bytes:
-    """[i64 n][i64 docs×n][i64 tfdl×n][i32 field×n][i32 rowlen×n]
-    [i32 flat×Σrowlen] — raw little-endian sections. Shuffle-transient
-    format only; never written to disk."""
-    return b"".join(
-        (
-            np.int64(len(docs)).tobytes(),
-            docs.tobytes(),
-            tfdl.tobytes(),
-            fields.tobytes(),
-            rowlen.tobytes(),
-            flat.tobytes(),
-        )
+def _pack_runs(run_starts, docs, tfdl, fields, rowlen, flat):
+    """Posting rows → one blob per run as an Arrow binary array; run i
+    holds rows [run_starts[i], run_starts[i+1]). Blob layout:
+    [i64 n][i64 docs×n][i64 tfdl×n][i32 field×n][i32 rowlen×n]
+    [i32 flat×Σrowlen] — raw little-endian sections, every one a whole
+    number of 32-bit words, so all blobs are written into one int32
+    word buffer by index. Shuffle-transient format only; never written
+    to disk."""
+    import pyarrow as pa
+
+    run_starts = np.asarray(run_starts, dtype=np.int64)
+    n_rows, n_runs = len(docs), len(run_starts)
+    n = np.diff(np.append(run_starts, n_rows))
+    flat_at = np.zeros(n_rows + 1, dtype=np.int64)
+    np.cumsum(rowlen, out=flat_at[1:])
+    n_flat = np.diff(np.append(flat_at[run_starts], flat_at[-1]))
+    w_at = np.zeros(n_runs + 1, dtype=np.int64)
+    np.cumsum(2 + 6 * n + n_flat, out=w_at[1:])
+    words = np.empty(int(w_at[-1]), dtype="<i4")
+
+    def put64(at, vals):
+        pair = np.asarray(vals).astype("<i8").view("<i4").reshape(-1, 2)
+        words[at] = pair[:, 0]
+        words[at + 1] = pair[:, 1]
+
+    run = np.repeat(np.arange(n_runs, dtype=np.int64), n)
+    k = np.arange(n_rows, dtype=np.int64) - run_starts[run]
+    put64(w_at[:-1], n)
+    base = w_at[run] + 2
+    put64(base + 2 * k, docs)
+    put64(base + 2 * n[run] + 2 * k, tfdl)
+    words[base + 4 * n[run] + k] = fields
+    words[base + 5 * n[run] + k] = rowlen
+    flat_run = np.repeat(np.arange(n_runs, dtype=np.int64), n_flat)
+    words[
+        w_at[flat_run]
+        + 2
+        + 6 * n[flat_run]
+        + np.arange(len(flat), dtype=np.int64)
+        - flat_at[run_starts][flat_run]
+    ] = flat
+    return pa.Array.from_buffers(
+        pa.binary(),
+        n_runs,
+        [None, pa.py_buffer((4 * w_at).astype(np.int32)), pa.py_buffer(words)],
     )
 
 
-def _unpack_run_blob(blob: bytes):
-    n = int(np.frombuffer(blob, np.int64, 1)[0])
-    o = 8
-    docs = np.frombuffer(blob, np.int64, n, o)
-    o += 8 * n
-    tfdl = np.frombuffer(blob, np.int64, n, o)
-    o += 8 * n
-    fields = np.frombuffer(blob, np.int32, n, o)
-    o += 4 * n
-    rowlen = np.frombuffer(blob, np.int32, n, o)
-    o += 4 * n
-    flat = np.frombuffer(blob, np.int32, (len(blob) - o) // 4, o)
-    return docs, tfdl, fields, rowlen, flat
+def _unpack_runs(blobs):
+    """Parse every run blob of an Arrow binary array at once → row
+    arrays (run index, docs, tfdl, fields, rowlen) in blob order, plus
+    each row's first flat position as an index into ``words``, the
+    blobs' buffer viewed as int32 words."""
+    offsets, data = _binary_buffers(blobs)
+    data = data[offsets[0] : offsets[-1]]
+    w_at = (offsets - offsets[0]) // 4
+    words = data[: len(data) // 4 * 4].view("<i4")
+
+    def get64(at):
+        return (words[at].astype(np.int64) & TFDL_MASK) | (
+            words[at + 1].astype(np.int64) << 32
+        )
+
+    n = get64(w_at[:-1])
+    run = np.repeat(np.arange(len(n), dtype=np.int64), n)
+    row_at = np.cumsum(n) - n
+    k = np.arange(len(run), dtype=np.int64) - row_at[run]
+    base = w_at[:-1][run] + 2
+    docs = get64(base + 2 * k)
+    tfdl = get64(base + 2 * n[run] + 2 * k)
+    fields = words[base + 4 * n[run] + k]
+    rowlen = words[base + 5 * n[run] + k].astype(np.int64)
+    before = np.cumsum(rowlen) - rowlen  # flat values before each row
+    flat_at = (w_at[:-1] + 2 + 6 * n)[run] + before - before[row_at][run]
+    return run, docs, tfdl, fields, rowlen, flat_at, words
+
+
+def _gather_flat(words, flat_at, rowlen):
+    """The flat values of rows (first word ``flat_at``, ``rowlen``
+    values each), back to back in row order."""
+    before = np.cumsum(rowlen) - rowlen
+    return words[
+        np.repeat(flat_at - before, rowlen)
+        + np.arange(int(before[-1] + rowlen[-1]) if len(rowlen) else 0)
+    ]
 
 
 def tokenize_packed_runs(
@@ -514,11 +505,12 @@ def tokenize_packed_runs(
     Per Arrow batch: tokenize each doc (the same tokenize_text kernel),
     dictionary-encode the batch's tokens (Arrow C++ hash — replaces the
     per-doc Python string argsort of tokenize_postings), one int
-    lexsort by (term code, doc), then slice per-(term, doc group) runs
-    out of the flat arrays. Emitted term strings come from the batch
-    dictionary via Array.take — no per-token Python strings cross the
-    boundary. Sentinel doc-position rows pack DP_RUN_DOCS docs per run
-    with the same blob layout (rowlen = vector length, tf = 0)."""
+    lexsort by (term code, doc), then cut per-(term, doc group) runs
+    out of the flat arrays and pack them all with one gather
+    (_pack_runs). Emitted term strings come from the batch dictionary
+    via Array.take — no per-token Python strings cross the boundary.
+    Sentinel doc-position rows pack DP_RUN_DOCS docs per run with the
+    same blob layout (rowlen = vector length, tf = 0)."""
     import pyarrow as pa
 
     from fulltextsearch_spark.functions.tokenizer import tokenize_text
@@ -586,22 +578,6 @@ def tokenize_packed_runs(
                 row_grp[1:] != row_grp[:-1]
             )
             run_starts = np.nonzero(rbnd)[0]
-            run_ends = np.append(run_starts[1:], n_rows)
-            fields_arr = np.full(n_rows, field_id, dtype=np.int32)
-            row_len32 = row_len.astype(np.int32)
-            blobs = []
-            for rs, re_ in zip(run_starts, run_ends):
-                fs = int(row_starts[rs])
-                fe = int(row_starts[re_]) if re_ < n_rows else n_occ
-                blobs.append(
-                    _pack_run_blob(
-                        row_doc[rs:re_],
-                        row_tfdl[rs:re_],
-                        fields_arr[rs:re_],
-                        row_len32[rs:re_],
-                        p[fs:fe],
-                    )
-                )
             term_col = dic.dictionary.take(
                 pa.array(row_code[run_starts], type=pa.int64())
             )
@@ -609,43 +585,38 @@ def tokenize_packed_runs(
                 [
                     term_col,
                     pa.array(row_grp[run_starts], type=pa.int64()),
-                    pa.array(blobs, type=pa.binary()),
+                    _pack_runs(
+                        run_starts,
+                        row_doc,
+                        row_tfdl,
+                        np.full(n_rows, field_id, dtype=np.int32),
+                        row_len.astype(np.int32),
+                        p,
+                    ),
                 ],
                 names=["term", "doc_grp", "blob"],
             )
             if emit_doc_positions and sent_docs:
                 sdocs = np.array(sent_docs, dtype=np.int64)
                 sn = np.array(sent_n, dtype=np.int64)
-                svec_lens = (2 * sn).astype(np.int32)
-                sflat = np.concatenate(sent_vecs)
-                stfdl = sn << 32  # tf = 0, dl = n
-                sfields = np.full(len(sdocs), field_id, dtype=np.int32)
-                s_off = np.cumsum(svec_lens.astype(np.int64)) - svec_lens
-                dp_grps, dp_blobs = [], []
-                for cs in range(0, len(sdocs), DP_RUN_DOCS):
-                    ce = min(cs + DP_RUN_DOCS, len(sdocs))
-                    fs = int(s_off[cs])
-                    fe = int(s_off[ce - 1] + svec_lens[ce - 1])
-                    dp_blobs.append(
-                        _pack_run_blob(
-                            sdocs[cs:ce],
-                            stfdl[cs:ce],
-                            sfields[cs:ce],
-                            svec_lens[cs:ce],
-                            sflat[fs:fe],
-                        )
-                    )
-                    # doc_grp is only a shuffle salt for runs; the
-                    # assemble emits per-doc sentinel BLOCK rows with
-                    # doc_grp = doc_id
-                    dp_grps.append(int(sdocs[cs]))
+                dp_starts = np.arange(0, len(sdocs), DP_RUN_DOCS)
                 yield pa.RecordBatch.from_arrays(
                     [
                         pa.array(
-                            [DP_TERM] * len(dp_blobs), type=pa.string()
+                            [DP_TERM] * len(dp_starts), type=pa.string()
                         ),
-                        pa.array(dp_grps, type=pa.int64()),
-                        pa.array(dp_blobs, type=pa.binary()),
+                        # doc_grp is only a shuffle salt for runs; the
+                        # assemble emits per-doc sentinel BLOCK rows
+                        # with doc_grp = doc_id
+                        pa.array(sdocs[dp_starts], type=pa.int64()),
+                        _pack_runs(
+                            dp_starts,
+                            sdocs,
+                            sn << 32,  # tf = 0, dl = n
+                            np.full(len(sdocs), field_id, dtype=np.int32),
+                            (2 * sn).astype(np.int32),
+                            np.concatenate(sent_vecs),
+                        ),
                     ],
                     names=["term", "doc_grp", "blob"],
                 )
@@ -653,6 +624,320 @@ def tokenize_packed_runs(
     return pages_with_ids.select("doc_id", "text").mapInArrow(
         run, RUN_SCHEMA
     )
+
+
+def _starts(*keys) -> np.ndarray:
+    """Indices where any of the equal-length key arrays changes value
+    (index 0 included)."""
+    n = len(keys[0])
+    chg = np.zeros(n, dtype=bool)
+    if n:
+        chg[0] = True
+    for k in keys:
+        chg[1:] |= k[1:] != k[:-1]
+    return np.flatnonzero(chg)
+
+
+def _group_starts(runs) -> np.ndarray:
+    """Index of the first run of each (term, doc_grp) group in a batch
+    of runs (bucket, term, doc_grp, blob) sorted by that key."""
+    import pyarrow.compute as pc
+
+    terms, grps, n = runs.column(1), runs.column(2).to_numpy(), runs.num_rows
+    chg = np.ones(n, dtype=bool)
+    if n > 1:
+        chg[1:] = (grps[1:] != grps[:-1]) | pc.not_equal(
+            terms.slice(1), terms.slice(0, n - 1)
+        ).to_numpy(zero_copy_only=False)
+    return np.flatnonzero(chg)
+
+
+def _greedy_cuts(doc_occ: np.ndarray, block_max_occ: int) -> np.ndarray:
+    """Block starts (doc indices) of ONE group whose docs start at
+    occurrence offsets ``doc_occ`` (plus the end): blocks chunk greedily
+    at DOC boundaries (a doc never splits) up to ``block_max_occ``
+    occurrences; a larger doc is a block of its own."""
+    n_docs = len(doc_occ) - 1
+    cuts = []
+    di = 0
+    while di < n_docs:
+        cuts.append(di)
+        dj = int(
+            np.searchsorted(doc_occ, doc_occ[di] + block_max_occ, side="right")
+            - 1
+        )
+        di = min(max(dj, di + 1), n_docs)
+    return np.array(cuts, dtype=np.int64)
+
+
+def _impact_frontiers(doc_tf, doc_dl, blk_doc):
+    """Every block's impact frontier, equal to _impact_frontier on the
+    docs [blk_doc[i], blk_doc[i+1]) of block i: one lexsort by (block,
+    −tf, dl) and a segmented running minimum of dl for all blocks, then
+    the same MAX_IMPACTS collapse for every longer frontier (linspace
+    puts cut k of a length-L frontier at ⌊k·L / MAX_IMPACTS⌋). →
+    (count per block, tf values, dl values), the frontiers back to
+    back."""
+    n_docs = len(doc_tf)
+    lens = np.diff(np.append(blk_doc, n_docs))
+    doc_blk = np.repeat(np.arange(len(blk_doc), dtype=np.int64), lens)
+    order = np.lexsort((doc_dl, -doc_tf, doc_blk))  # stays block-ordered
+    tf_s, dl_s = doc_tf[order], doc_dl[order]
+    # shift each later block's dl below all of an earlier block's, so
+    # one running minimum never carries across a block start
+    shifted = dl_s - doc_blk * (int(dl_s.max()) + 1)
+    keep = np.empty(n_docs, dtype=bool)
+    keep[0] = True
+    keep[1:] = shifted[1:] < np.minimum.accumulate(shifted)[:-1]
+    counts = np.bincount(doc_blk[keep], minlength=len(blk_doc))
+    out_n = np.minimum(counts, MAX_IMPACTS)
+    blk = np.repeat(np.arange(len(out_n), dtype=np.int64), out_n)
+    j = np.arange(len(blk), dtype=np.int64) - (np.cumsum(out_n) - out_n)[blk]
+    at, size = (np.cumsum(counts) - counts)[blk], counts[blk]
+    long_ = size > MAX_IMPACTS
+    tf_at = at + np.where(long_, j * size // MAX_IMPACTS, j)
+    dl_at = at + np.where(long_, (j + 1) * size // MAX_IMPACTS - 1, j)
+    return (
+        out_n,
+        tf_s[keep][tf_at].astype(np.int32),
+        dl_s[keep][dl_at].astype(np.int32),
+    )
+
+
+def _blocks_batch(cols: dict, imp_counts, imp_tf, imp_dl, payload):
+    """One BLOCK_SCHEMA_BUCKETED Arrow batch from per-block numpy
+    columns (the term column already Arrow), the blocks' impact
+    frontiers back to back and the (offsets, data) payload buffers."""
+    import pyarrow as pa
+
+    imp_at = np.zeros(len(imp_counts) + 1, dtype=np.int32)
+    np.cumsum(imp_counts, out=imp_at[1:])
+    offsets, data = payload
+    arrays = {
+        "bucket": pa.array(cols["bucket"], type=pa.int32()),
+        "term": cols["term"],
+        **{
+            c: pa.array(cols[c], type=pa.int64())
+            for c in ("doc_grp", "first_doc", "last_doc")
+        },
+        **{
+            c: pa.array(cols[c], type=pa.int32())
+            for c in ("block_no", "n_occ", "n_docs", "max_tf")
+        },
+        "imp_tf": pa.ListArray.from_arrays(imp_at, pa.array(imp_tf, pa.int32())),
+        "imp_dl": pa.ListArray.from_arrays(imp_at, pa.array(imp_dl, pa.int32())),
+        "payload": pa.Array.from_buffers(
+            pa.binary(),
+            len(offsets) - 1,
+            [None, pa.py_buffer(offsets.astype(np.int32)), pa.py_buffer(data)],
+        ),
+    }
+    names = [f.name for f in BLOCK_SCHEMA_BUCKETED.fields]
+    return pa.RecordBatch.from_arrays([arrays[c] for c in names], names=names)
+
+
+def _assemble_groups(runs, encode_blocks, block_max_occ: int):
+    """Run rows (bucket, term, doc_grp, blob) holding only WHOLE
+    (term, doc_grp) groups, contiguous → their block rows, in group
+    order then block order, as Arrow batches of ≤ OUT_MAX_BLOCKS blocks.
+    A constant number of numpy passes over all groups; Python loops
+    only over output batches and the greedy cut inside groups larger
+    than ``block_max_occ``."""
+    import pyarrow as pa
+
+    buckets = runs.column(0).to_numpy()
+    terms = runs.column(1)
+    grps = runs.column(2).to_numpy()
+    g_run = _group_starts(runs)  # first run of each group
+    run_gid = np.repeat(
+        np.arange(len(g_run), dtype=np.int64), np.diff(np.append(g_run, len(grps)))
+    )
+    run, docs, tfdl, fields, _, flat_at, words = _unpack_runs(runs.column(3))
+    gid = run_gid[run]
+    # deterministic (doc, field) row order inside each group whatever
+    # the run arrival order; a doc's rows (one per field) end adjacent
+    order = np.lexsort((fields, docs, gid))
+    gid, docs, fields = gid[order], docs[order], fields[order]
+    tf, dl = tfdl[order] & TFDL_MASK, tfdl[order] >> 32
+    flat_at = flat_at[order]
+    row_occ = np.cumsum(tf) - tf
+    n_occ = int(row_occ[-1] + tf[-1])
+
+    # docs: summed tf and summed dl over a doc's fields (for a
+    # multi-field doc the dl sum covers only the fields the term occurs
+    # in, a lower bound of the true dl, which over-estimates tfn — still
+    # a safe upper bound for the impacts)
+    d_row = _starts(gid, docs)
+    doc_tf = np.add.reduceat(tf, d_row)
+    doc_dl = np.add.reduceat(dl, d_row)
+    doc_gid = gid[d_row]
+    doc_occ = np.append(row_occ[d_row], n_occ)
+
+    # blocks as doc-index starts: a group of ≤ block_max_occ occurrences
+    # is one block; only larger groups take the greedy doc-boundary cut
+    g_doc = _starts(doc_gid)
+    g_end = np.append(g_doc[1:], len(doc_gid))
+    big = np.flatnonzero(doc_occ[g_end] - doc_occ[g_doc] > block_max_occ)
+    b_doc = g_doc
+    if len(big):
+        b_doc = np.concatenate(
+            [g_doc]
+            + [
+                lo + _greedy_cuts(doc_occ[lo : hi + 1], block_max_occ)[1:]
+                for lo, hi in zip(g_doc[big].tolist(), g_end[big].tolist())
+            ]
+        )
+        b_doc.sort()
+    n_blocks = len(b_doc)
+    b_end = np.append(b_doc[1:], len(doc_gid))
+    b_gid = doc_gid[b_doc]
+    g_blk = _starts(b_gid)
+    b_run = g_run[b_gid]  # a run of the block's group: its key columns
+    cols = {
+        "bucket": buckets[b_run],
+        "doc_grp": grps[b_run],
+        "block_no": np.arange(n_blocks)
+        - np.repeat(g_blk, np.diff(np.append(g_blk, n_blocks))),
+        "first_doc": docs[d_row[b_doc]],
+        "last_doc": docs[d_row[b_end - 1]],
+        "n_occ": doc_occ[b_end] - doc_occ[b_doc],
+        "n_docs": b_end - b_doc,
+        "max_tf": np.maximum.reduceat(doc_tf, b_doc),
+    }
+    imp_counts, imp_tf, imp_dl = _impact_frontiers(doc_tf, doc_dl, b_doc)
+    imp_at = np.append(np.cumsum(imp_counts) - imp_counts, len(imp_tf))
+    b_row = np.append(d_row[b_doc], len(docs))
+
+    for lo, hi in _out_chunks(doc_occ[np.append(b_doc, len(doc_gid))]):
+        r0, r1 = b_row[lo], b_row[hi]
+        occ_tf = tf[r0:r1]
+        payload = encode_blocks(
+            np.repeat(docs[r0:r1], occ_tf),
+            np.repeat(fields[r0:r1], occ_tf),
+            _gather_flat(words, flat_at[r0:r1], occ_tf),
+            doc_occ[b_doc[lo:hi]] - doc_occ[b_doc[lo]],
+        )
+        chunk = {c: v[lo:hi] for c, v in cols.items()}
+        chunk["term"] = terms.take(pa.array(b_run[lo:hi]))
+        yield _blocks_batch(
+            chunk,
+            imp_counts[lo:hi],
+            imp_tf[imp_at[lo] : imp_at[hi]],
+            imp_dl[imp_at[lo] : imp_at[hi]],
+            payload,
+        )
+
+
+def _out_chunks(blk_occ: np.ndarray):
+    """[lo, hi) ranges of at most OUT_MAX_BLOCKS block rows and
+    OUT_MAX_OCC encoded values (at least one row each), for rows whose
+    value offsets are ``blk_occ`` (plus the end) — bounds the encode's
+    transient memory and the output batch size."""
+    n_blocks = len(blk_occ) - 1
+    lo = 0
+    while lo < n_blocks:
+        hi = int(np.searchsorted(blk_occ, blk_occ[lo] + OUT_MAX_OCC, "right")) - 1
+        hi = min(max(hi, lo + 1), lo + OUT_MAX_BLOCKS, n_blocks)
+        yield lo, hi
+        lo = hi
+
+
+def _assemble_sentinels(blobs, n_buckets: int, strip_payload: bool):
+    """Sentinel doc-position runs → one block row per (doc, field), in
+    run order: term DP_TERM, bucket n_buckets, doc_grp = first_doc =
+    last_doc = doc, block_no = the field id, n_occ = the position
+    vector's length, payload = its delta+varint encoding (empty when
+    stripped); the payloads of each output batch encoded by one
+    batched call."""
+    import pyarrow as pa
+
+    from fulltextsearch_spark.operators.codec import encode_positions_payloads
+
+    _, docs, _, fields, rowlen, flat_at, words = _unpack_runs(blobs)
+    for lo, hi in _out_chunks(np.append(0, np.cumsum(rowlen))):
+        n = hi - lo
+        lens = rowlen[lo:hi]
+        payload = (
+            (np.zeros(n + 1, dtype=np.int64), np.empty(0, dtype=np.uint8))
+            if strip_payload
+            else encode_positions_payloads(
+                _gather_flat(words, flat_at[lo:hi], lens), lens
+            )
+        )
+        cols = {
+            "bucket": np.full(n, n_buckets, dtype=np.int32),
+            "term": pa.array([DP_TERM], type=pa.string()).take(
+                pa.array(np.zeros(n, dtype=np.int64))
+            ),
+            "doc_grp": docs[lo:hi],
+            "block_no": fields[lo:hi],
+            "first_doc": docs[lo:hi],
+            "last_doc": docs[lo:hi],
+            "n_occ": lens,
+            "n_docs": np.ones(n, dtype=np.int32),
+            "max_tf": np.zeros(n, dtype=np.int32),
+        }
+        empty = np.empty(0, dtype=np.int32)
+        yield _blocks_batch(cols, np.zeros(n, dtype=np.int64), empty, empty, payload)
+
+
+def _same_group(a, b) -> bool:
+    """Whether run batch ``a``'s last row and ``b``'s first row share
+    the (term, doc_grp) group key."""
+    return (
+        a.column(1)[a.num_rows - 1].as_py() == b.column(1)[0].as_py()
+        and a.column(2)[a.num_rows - 1].as_py() == b.column(2)[0].as_py()
+    )
+
+
+def _assemble_run_batches(
+    batches,
+    codec: str,
+    n_buckets: int,
+    strip_dp_payload: bool,
+    block_max_occ: int = BLOCK_MAX_OCC,
+):
+    """The block-assembly kernel over one task's run batches (bucket,
+    term, doc_grp, blob), sorted by (bucket, term, doc_grp) → block row
+    batches (BLOCK_SCHEMA_BUCKETED) in (bucket, term, doc_grp, block_no)
+    order, sentinel rows last.
+
+    One input batch at a time: its whole groups are assembled at once;
+    only the trailing group, which may continue in the next batch, is
+    carried over (as zero-copy slices, joined once when it closes)."""
+    import pyarrow as pa
+
+    encode_blocks, _ = _block_codec(codec)
+    pending: list = []  # the carried trailing group
+
+    def close(parts):
+        if len(parts) > 1:
+            parts = pa.Table.from_batches(parts).combine_chunks().to_batches()
+        return _assemble_groups(parts[0], encode_blocks, block_max_occ)
+
+    for rb in batches:
+        if rb.num_rows == 0:
+            continue
+        # sentinel runs (bucket n_buckets) sort after every term's runs
+        n_real = int(np.searchsorted(rb.column(0).to_numpy(), n_buckets))
+        if n_real:
+            real = rb.slice(0, n_real)
+            last = int(_group_starts(real)[-1])
+            if last == 0 and (not pending or _same_group(pending[-1], real)):
+                pending.append(real)
+            else:
+                head = pending + ([real.slice(0, last)] if last else [])
+                yield from close(head)
+                pending = [real.slice(last)]
+        if n_real < rb.num_rows:
+            if pending:
+                yield from close(pending)
+                pending = []
+            yield from _assemble_sentinels(
+                rb.column(3).slice(n_real), n_buckets, strip_dp_payload
+            )
+    if pending:
+        yield from close(pending)
 
 
 def assemble_packed_blocks(
@@ -666,14 +951,14 @@ def assemble_packed_blocks(
     for the partitionBy("bucket") writer with no further shuffle.
 
     The shuffle keys (bucket, term, doc_grp) are computed as JVM
-    expressions — they never ride as data columns through the Python
-    boundary; Python recomputes the bucket once per (term, doc_grp)
-    group with the xxhash64 twin. Groups arrive contiguous (sorted by
-    the same expressions); a group's runs concatenate and row-sort by
-    (doc, field) — unique per row, so any run arrival order yields the
-    same bytes — then feed the _encode_term_group kernel."""
-    from fulltextsearch_spark.functions.xxhash import term_bucket_py
-
+    expressions — they never ride as data columns through the shuffle;
+    the bucket is projected once more after the sort, so Python gets it
+    without re-hashing a term. Groups arrive contiguous (sorted by the
+    same expressions); each Arrow batch is assembled whole by
+    _assemble_run_batches — all its blobs parsed at once, all its rows
+    sorted by (group, doc, field) (unique per row, so any run arrival
+    order yields the same bytes), all blocks cut, described and encoded
+    in a constant number of numpy passes."""
     bucket_expr = F.when(
         F.col("term") == DP_TERM, F.lit(n_buckets)
     ).otherwise(
@@ -685,121 +970,13 @@ def assemble_packed_blocks(
     ).sortWithinPartitions(bucket_expr, F.col("term"), F.col("doc_grp"))
 
     def assemble(batches):
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        from fulltextsearch_spark.operators.codec import (
-            encode_positions_payload,
+        return _assemble_run_batches(
+            batches, codec, n_buckets, strip_dp_payload, block_max_occ
         )
 
-        encode_block, _ = _block_codec(codec)
-        empty_imp = np.empty(0, dtype=np.int32)
-
-        def new_out():
-            return {f.name: [] for f in BLOCK_SCHEMA_BUCKETED.fields}
-
-        out = new_out()
-        carry_key: tuple | None = None
-        carry_parts: list = []
-
-        def flush_group():
-            nonlocal carry_key, carry_parts
-            if carry_key is None:
-                return
-            term, grp = carry_key
-            docs = np.concatenate([x[0] for x in carry_parts])
-            tfdl = np.concatenate([x[1] for x in carry_parts])
-            fields = np.concatenate([x[2] for x in carry_parts])
-            rowlen = np.concatenate([x[3] for x in carry_parts])
-            flat = np.concatenate([x[4] for x in carry_parts])
-            carry_key, carry_parts = None, []
-            # deterministic (doc, field) row order whatever the run
-            # arrival order; variable-length flat gather is vectorized
-            order = np.lexsort((fields, docs))
-            src_starts = np.cumsum(rowlen, dtype=np.int64) - rowlen
-            new_lens = rowlen[order].astype(np.int64)
-            new_off = np.cumsum(new_lens) - new_lens
-            idx = np.repeat(src_starts[order], new_lens) + (
-                np.arange(len(flat), dtype=np.int64)
-                - np.repeat(new_off, new_lens)
-            )
-            tfdl_s = tfdl[order]
-            _encode_term_group(
-                out,
-                term,
-                term_bucket_py(term, n_buckets),
-                int(grp),
-                docs[order],
-                fields[order],
-                tfdl_s & TFDL_MASK,
-                tfdl_s >> 32,
-                flat[idx],
-                encode_block,
-                block_max_occ,
-            )
-
-        def emit_dp_run(blob):
-            docs, tfdl, fields, rowlen, flat = _unpack_run_blob(blob)
-            o = np.cumsum(rowlen.astype(np.int64)) - rowlen
-            for i in range(len(docs)):
-                out["term"].append(DP_TERM)
-                out["bucket"].append(n_buckets)
-                out["doc_grp"].append(int(docs[i]))
-                # sentinels reuse block_no to carry the FIELD id
-                out["block_no"].append(int(fields[i]))
-                out["first_doc"].append(int(docs[i]))
-                out["last_doc"].append(int(docs[i]))
-                out["n_occ"].append(int(rowlen[i]))
-                out["n_docs"].append(1)
-                out["max_tf"].append(0)
-                out["imp_tf"].append(empty_imp)
-                out["imp_dl"].append(empty_imp)
-                out["payload"].append(
-                    b""
-                    if strip_dp_payload
-                    else encode_positions_payload(
-                        flat[int(o[i]) : int(o[i]) + int(rowlen[i])]
-                    )
-                )
-
-        for rb in batches:
-            n = rb.num_rows
-            if n == 0:
-                continue
-            t_arr = rb.column(0)
-            grps = rb.column(1).to_numpy()
-            blobs = rb.column(2).to_pylist()
-            is_dp = pc.equal(t_arr, DP_TERM).to_numpy(zero_copy_only=False)
-            t_change = np.empty(n, dtype=bool)
-            t_change[0] = True
-            if n > 1:
-                t_change[1:] = pc.not_equal(
-                    t_arr.slice(1), t_arr.slice(0, n - 1)
-                ).to_numpy(zero_copy_only=False)
-            term_i: str | None = None
-            for i in range(n):
-                if is_dp[i]:
-                    # sentinel runs are self-contained (one block row
-                    # per doc) and sort after every real bucket; close
-                    # the open group so output bucket order holds
-                    flush_group()
-                    emit_dp_run(blobs[i])
-                    continue
-                if t_change[i]:
-                    term_i = t_arr[i].as_py()
-                key = (term_i, int(grps[i]))
-                if key != carry_key:
-                    flush_group()
-                    carry_key = key
-                carry_parts.append(_unpack_run_blob(blobs[i]))
-            if len(out["term"]) >= 8192:
-                yield _block_out_batch(out, BLOCK_SCHEMA_BUCKETED)
-                out = new_out()
-        flush_group()
-        if out["term"]:
-            yield _block_out_batch(out, BLOCK_SCHEMA_BUCKETED)
-
-    return shuffled.mapInArrow(assemble, BLOCK_SCHEMA_BUCKETED)
+    return shuffled.select(
+        bucket_expr.alias("bucket"), "term", "doc_grp", "blob"
+    ).mapInArrow(assemble, BLOCK_SCHEMA_BUCKETED)
 
 
 POSTING_SCHEMA = T.StructType(
@@ -825,30 +1002,36 @@ def decode_dp_blocks(blocks: DataFrame) -> DataFrame:
     """Sentinel block rows → (doc_id, field_id, positions) — the
     doc-positions table view over a blocks-only index layout. The
     field id rides in the sentinel's block_no (0 in legacy segments =
-    field 1)."""
+    field 1). mapInArrow: all of a batch's payloads decode in one
+    batched varint pass into ONE flat positions ListArray."""
 
-    def run(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from fulltextsearch_spark.operators.codec import decode_positions_payload
+    def run(batches):
+        import pyarrow as pa
 
-        for pdf in pdfs:
-            docs, fids, vecs = [], [], []
-            for doc_id, fid, payload in zip(
-                pdf["first_doc"], pdf["block_no"], pdf["payload"]
-            ):
-                docs.append(int(doc_id))
-                fids.append(max(int(fid), 1))
-                vecs.append(
-                    decode_positions_payload(bytes(payload)).astype(np.int32).tolist()
-                )
-            yield pd.DataFrame(
-                {
-                    "doc_id": docs,
-                    "field_id": np.array(fids, dtype=np.int32),
-                    "positions": vecs,
-                }
+        from fulltextsearch_spark.operators.codec import (
+            decode_positions_payloads,
+        )
+
+        for rb in batches:
+            lens, flat = decode_positions_payloads(
+                *_binary_buffers(rb.column(2))
+            )
+            offsets = np.zeros(len(lens) + 1, dtype=np.int32)
+            np.cumsum(lens, out=offsets[1:])
+            yield pa.RecordBatch.from_arrays(
+                [
+                    rb.column(0),
+                    pa.array(
+                        np.maximum(rb.column(1).to_numpy(), 1), type=pa.int32()
+                    ),
+                    pa.ListArray.from_arrays(
+                        offsets, pa.array(flat, type=pa.int32())
+                    ),
+                ],
+                names=["doc_id", "field_id", "positions"],
             )
 
-    return blocks.select("first_doc", "block_no", "payload").mapInPandas(
+    return blocks.select("first_doc", "block_no", "payload").mapInArrow(
         run, DOC_POSITIONS_SCHEMA
     )
 

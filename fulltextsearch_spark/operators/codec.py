@@ -27,13 +27,14 @@ import numpy as np
 _MAX_VARINT_BYTES = 10
 
 
-def varint_encode(values: np.ndarray) -> bytes:
-    """LEB128-encode a uint64 array (vectorized)."""
-    a = values.astype(np.uint64, copy=True)
+def _varint_pack(values: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """LEB128-encode a uint64 array → (bytes as uint8, byte length of
+    each value) — the per-value lengths locate every value's bytes."""
+    a = values.astype(np.uint64, copy=False)
     n = len(a)
-    if n == 0:
-        return b""
     nbytes = np.ones(n, dtype=np.int64)
+    if n == 0:
+        return np.empty(0, dtype=np.uint8), nbytes
     v = a >> np.uint64(7)
     while v.any():
         nbytes += v > 0
@@ -48,7 +49,12 @@ def varint_encode(values: np.ndarray) -> bytes:
         byte = (a[mask] >> np.uint64(7 * k)) & np.uint64(0x7F)
         cont = (nbytes[mask] - 1 > k).astype(np.uint8) << 7
         out[starts[mask] + k] = byte.astype(np.uint8) | cont
-    return out.tobytes()
+    return out, nbytes
+
+
+def varint_encode(values: np.ndarray) -> bytes:
+    """LEB128-encode a uint64 array (vectorized)."""
+    return _varint_pack(values)[0].tobytes()
 
 
 def varint_decode(buf: bytes | np.ndarray, count: int | None = None) -> np.ndarray:
@@ -80,21 +86,33 @@ def _grouped_cumsum(deltas: np.ndarray, reset: np.ndarray) -> np.ndarray:
 
 
 def _delta_streams(
-    docs: np.ndarray, fields: np.ndarray, pos: np.ndarray
+    docs: np.ndarray,
+    fields: np.ndarray,
+    pos: np.ndarray,
+    starts: np.ndarray | tuple = (0,),
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """Occurrence columns → the three delta streams (shared by the
-    varint and group-varint payload codecs)."""
+    varint and group-varint payload codecs). Every stream restarts at
+    each index in ``starts`` (the block starts of a batched encode)."""
     n = len(docs)
     docs = docs.astype(np.int64)
     fields = fields.astype(np.int64)
     pos = pos.astype(np.int64)
-    ddoc = np.diff(docs, prepend=np.int64(0))
-    new_doc = np.empty(n, dtype=bool)
-    new_doc[0] = True
-    new_doc[1:] = ddoc[1:] > 0
-    dfield = np.where(new_doc, fields, fields - np.concatenate(([0], fields[:-1])))
+    first = np.zeros(n, dtype=bool)
+    first[np.asarray(starts, dtype=np.int64)] = True
+
+    def prev(a):
+        p = np.empty_like(a)
+        p[0] = 0
+        p[1:] = a[:-1]
+        p[first] = 0
+        return p
+
+    ddoc = docs - prev(docs)
+    new_doc = first | (ddoc > 0)
+    dfield = np.where(new_doc, fields, fields - prev(fields))
     new_df = new_doc | (dfield > 0)
-    dpos = np.where(new_df, pos, pos - np.concatenate(([0], pos[:-1])))
+    dpos = np.where(new_df, pos, pos - prev(pos))
     return ddoc, dfield, dpos
 
 
@@ -258,26 +276,145 @@ def decode_block_binary(payload: bytes) -> tuple[np.ndarray, np.ndarray, np.ndar
     return docs.astype(np.int64), fields.astype(np.int64), pos.astype(np.int64)
 
 
-def encode_positions_payload(vec) -> bytes:
-    """Delta+varint for a monotone non-decreasing int vector — used for
-    the per-document flat (off+1, off+1+len) position vectors carried
-    as sentinel rows in the blocks table (C10 analog: the reference's
-    delta-compressed monotone position list)."""
-    a = np.asarray(vec, dtype=np.int64)
+# ---------------------------------------------------------------------------
+# Batched encoders: one call encodes many blocks. ``docs``/``fields``/
+# ``pos`` hold the occurrences of all blocks back to back and block i is
+# [starts[i], starts[i+1]) (the last block runs to the end). Each returns
+# (offsets, data): payload i is data[offsets[i]:offsets[i+1]], byte-equal
+# to the single-block encoder's output for that block.
+
+
+def _block_layout(starts: np.ndarray, n_occ: int):
+    """Block lengths, each occurrence's block and its index within it."""
+    starts = np.asarray(starts, dtype=np.int64)
+    lens = np.diff(np.append(starts, n_occ))
+    blk = np.repeat(np.arange(len(starts), dtype=np.int64), lens)
+    return starts, lens, blk, np.arange(n_occ, dtype=np.int64) - starts[blk]
+
+
+def encode_blocks(docs, fields, pos, starts) -> tuple[np.ndarray, np.ndarray]:
+    """Batched :func:`encode_block`: every block's [n, ddoc…, dfield…,
+    dpos…] values laid out in one array and varint-encoded once."""
+    starts, lens, blk, k = _block_layout(starts, len(docs))
+    ddoc, dfield, dpos = _delta_streams(docs, fields, pos, starts)
+    head = np.arange(len(starts), dtype=np.int64) + 3 * starts
+    vals = np.empty(len(starts) + 3 * len(docs), dtype=np.uint64)
+    vals[head] = lens
+    at = head[blk] + 1 + k
+    vals[at] = ddoc
+    at += lens[blk]
+    vals[at] = dfield
+    at += lens[blk]
+    vals[at] = dpos
+    data, nbytes = _varint_pack(vals)
+    ends = np.cumsum(nbytes)
+    return np.append(ends[head] - nbytes[head], len(data)), data
+
+
+def _place(out: np.ndarray, src: np.ndarray, lens: np.ndarray, dst: np.ndarray):
+    """Copy ``src`` — segments of ``lens`` elements back to back — into
+    the byte buffer ``out``, segment i starting at byte ``dst[i]``, in
+    the elements' little-endian byte order."""
+    size = src.dtype.itemsize
+    b = src.view(np.uint8).reshape(len(src), size)
+    seg_start = np.cumsum(lens) - lens
+    at = np.repeat(dst - seg_start * size, lens) + np.arange(
+        len(src), dtype=np.int64
+    ) * size
+    for j in range(size):
+        out[at + j] = b[:, j]
+
+
+def encode_blocks_binary(
+    docs, fields, pos, starts
+) -> tuple[np.ndarray, np.ndarray]:
+    """Batched :func:`encode_block_binary`."""
+    starts, lens, _, _ = _block_layout(starts, len(docs))
+    head, head_len = _varint_pack(lens)
+    offsets = np.zeros(len(starts) + 1, dtype=np.int64)
+    np.cumsum(head_len + 16 * lens, out=offsets[1:])
+    out = np.empty(int(offsets[-1]), dtype=np.uint8)
+    _place(out, head, head_len, offsets[:-1])
+    at = offsets[:-1] + head_len
+    _place(out, np.asarray(docs).astype("<i8"), lens, at)
+    _place(out, np.asarray(fields).astype("<i4"), lens, at + 8 * lens)
+    _place(out, np.asarray(pos).astype("<i4"), lens, at + 12 * lens)
+    return offsets, out
+
+
+def _encode_each(encode_one):
+    """Batched form of a single-block encoder that loops over the
+    blocks (groupvarint, packedints: their per-block bytes and 32-bit
+    overflow errors stay those of the single-block encoder)."""
+
+    def encode(docs, fields, pos, starts):
+        starts = np.asarray(starts, dtype=np.int64)
+        ends = np.append(starts[1:], len(docs))
+        parts = [
+            encode_one(docs[s:e], fields[s:e], pos[s:e])
+            for s, e in zip(starts.tolist(), ends.tolist())
+        ]
+        offsets = np.zeros(len(parts) + 1, dtype=np.int64)
+        np.cumsum([len(p) for p in parts], out=offsets[1:])
+        return offsets, np.frombuffer(b"".join(parts), dtype=np.uint8)
+
+    return encode
+
+
+encode_blocks_gv = _encode_each(encode_block_gv)
+encode_blocks_packed = _encode_each(encode_block_packed)
+
+
+def encode_positions_payloads(
+    flat: np.ndarray, lens: np.ndarray
+) -> tuple[np.ndarray, np.ndarray]:
+    """Delta+varint for monotone non-decreasing int vectors — the
+    per-document flat (off+1, off+1+len) position vectors carried as
+    sentinel rows in the blocks table (C10 analog: the reference's
+    delta-compressed monotone position list). ``flat`` holds the vectors
+    back to back, vector i of ``lens[i]`` values; payload i is
+    varint([len, v0, v1 - v0, …]) at data[offsets[i]:offsets[i+1]]."""
+    lens = np.asarray(lens, dtype=np.int64)
+    starts = np.cumsum(lens) - lens
+    a = np.asarray(flat, dtype=np.int64)
     d = np.diff(a, prepend=np.int64(0))
-    return varint_encode(
-        np.concatenate([np.array([len(a)], dtype=np.int64), d]).astype(np.uint64)
+    d[starts[lens > 0]] = a[starts[lens > 0]]
+    head = np.arange(len(lens), dtype=np.int64) + starts
+    vals = np.empty(len(lens) + len(a), dtype=np.uint64)
+    vals[head] = lens
+    body = np.ones(len(vals), dtype=bool)
+    body[head] = False
+    vals[body] = d
+    data, nbytes = _varint_pack(vals)
+    ends = np.cumsum(nbytes)
+    return np.append(ends[head] - nbytes[head], len(data)), data
+
+
+def decode_positions_payloads(
+    offsets: np.ndarray, data: np.ndarray
+) -> tuple[np.ndarray, np.ndarray]:
+    """Inverse of :func:`encode_positions_payloads` over a whole batch:
+    payload i is data[offsets[i]:offsets[i+1]] → (vector lengths, flat
+    vectors back to back), one varint decode for all payloads. An empty
+    payload (stripped: keep_positions=False builds keep the sentinel
+    METADATA — n_occ still yields dl — but no vector) decodes to an
+    empty vector."""
+    offsets = np.asarray(offsets, dtype=np.int64)
+    b = data[offsets[0] : offsets[-1]]
+    vals = varint_decode(b).astype(np.int64)
+    # values before each payload = varint terminators before its start
+    ends_before = np.concatenate(([0], np.cumsum((b & 0x80) == 0)))
+    head = ends_before[offsets[:-1] - offsets[0]]
+    lens = np.zeros(len(head), dtype=np.int64)
+    has = offsets[1:] > offsets[:-1]
+    lens[has] = vals[head[has]]
+    seg = np.repeat(np.arange(len(lens)), lens)
+    k = np.arange(len(seg), dtype=np.int64) - np.repeat(
+        np.cumsum(lens) - lens, lens
     )
-
-
-def decode_positions_payload(payload: bytes) -> np.ndarray:
-    if len(payload) == 0:
-        # stripped payload (keep_positions=False builds keep the
-        # sentinel METADATA — n_occ still yields dl — but no vector)
-        return np.empty(0, dtype=np.int64)
-    v = varint_decode(payload)
-    n = int(v[0])
-    return np.cumsum(v[1 : 1 + n].astype(np.int64))
+    if len(k) == 0:
+        return lens, np.empty(0, dtype=np.int64)
+    return lens, _grouped_cumsum(vals[head[seg] + 1 + k], k == 0)
 
 
 def decode_block_lower_bound(

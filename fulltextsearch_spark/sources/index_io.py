@@ -33,7 +33,6 @@ from __future__ import annotations
 
 import json
 import os
-import sys
 import threading
 import time
 from concurrent.futures import ThreadPoolExecutor
@@ -469,7 +468,6 @@ def build_index(
         # term, doc group) instead of one per posting, because the
         # per-row JVM↔Arrow conversion, not the codec, dominates a
         # row-granular build (operators/build.py packed-run notes).
-        _phase_t = {"ids": time.time() - t0}
         run_parts = [
             B.tokenize_packed_runs(
                 with_ids.select("doc_id", F.col(c).alias("text")),
@@ -486,14 +484,13 @@ def build_index(
         blocks_df.write.mode("overwrite").partitionBy("bucket").parquet(
             os.path.join(seg_path, "blocks")
         )
-        _phase_t["blocks_write"] = time.time() - t0 - _phase_t["ids"]
         blocks_committed = spark.read.parquet(os.path.join(seg_path, "blocks"))
         real_blocks = blocks_committed.where(F.col("bucket") < n_buckets)
 
         def _write_dictionary() -> None:
             # df = Σ n_docs is exact even for multi-field: a document
-            # never splits across blocks (_encode_term_group doc-boundary
-            # chunking) and (doc_grp, segment) doc ranges are disjoint
+            # never splits across blocks (the assembly cuts blocks at doc
+            # boundaries) and (doc_grp, segment) doc ranges are disjoint
             real_blocks.groupBy("term").agg(
                 F.sum("n_docs").cast("long").alias("df"),
                 F.sum("n_occ").cast("long").alias("cf"),
@@ -562,7 +559,6 @@ def build_index(
     # one job's scheduling gaps and straggler tails fill with another's
     # tasks (works identically on a real cluster: the driver is free to
     # run independent jobs in parallel)
-    _outputs_t0 = time.time()
     with ThreadPoolExecutor(max_workers=3) as pool:
         futures = [
             pool.submit(fn)
@@ -570,13 +566,6 @@ def build_index(
         ]
         for fut in futures:
             fut.result()  # propagate the first failure
-    if os.environ.get("FTS_BUILD_PHASE_LOG") and mode in BLOCK_MODES:
-        _phase_t["outputs"] = time.time() - _outputs_t0
-        print(
-            "[build phases] "
-            + " ".join(f"{k}={v:.1f}s" for k, v in _phase_t.items()),
-            file=sys.stderr,
-        )
     # collection stats from the tiny WRITTEN dictionary (one row per
     # term) — not a recomputation of the full postings aggregation
     stats = (

@@ -74,3 +74,73 @@ def test_compression_beats_raw():
     p = np.ones(5000, dtype=np.int64)
     payload = codec.encode_block(d, f, p)
     assert len(payload) < 5000 * 4
+
+
+@settings(max_examples=60, deadline=None)
+@given(
+    st.lists(
+        st.lists(
+            st.tuples(
+                st.integers(min_value=1, max_value=2**31),  # doc
+                st.integers(min_value=1, max_value=4),  # field
+                st.integers(min_value=1, max_value=10**6),  # pos
+            ),
+            min_size=1,
+            max_size=60,
+            unique=True,
+        ),
+        min_size=1,
+        max_size=12,
+    )
+)
+def test_batched_encoders_equal_single_block(blocks):
+    """Each batched encoder's payload i is byte-equal to its single-block
+    encoder on block i (the delta streams restart at every block)."""
+    blocks = [sorted(b) for b in blocks]
+    lens = [len(b) for b in blocks]
+    occ = np.array([o for b in blocks for o in b], dtype=np.int64)
+    starts = np.cumsum(lens) - lens
+    for batched, single in (
+        (codec.encode_blocks, codec.encode_block),
+        (codec.encode_blocks_gv, codec.encode_block_gv),
+        (codec.encode_blocks_packed, codec.encode_block_packed),
+        (codec.encode_blocks_binary, codec.encode_block_binary),
+    ):
+        offsets, data = batched(occ[:, 0], occ[:, 1], occ[:, 2], starts)
+        assert len(offsets) == len(blocks) + 1
+        for i, b in enumerate(blocks):
+            a = np.array(b, dtype=np.int64)
+            want = single(a[:, 0], a[:, 1], a[:, 2])
+            assert data[offsets[i] : offsets[i + 1]].tobytes() == want
+
+
+@settings(max_examples=60, deadline=None)
+@given(
+    st.lists(
+        st.lists(st.integers(min_value=1, max_value=10**7), max_size=40),
+        min_size=1,
+        max_size=12,
+    )
+)
+def test_positions_payloads_roundtrip(vectors):
+    """Batched position-vector payloads: varint([len, v0, v1 - v0, …])
+    per vector; decoding a batch (stripped empty payloads mixed in)
+    returns every vector."""
+    vectors = [sorted(v) for v in vectors]
+    lens = np.array([len(v) for v in vectors], dtype=np.int64)
+    flat = np.array([x for v in vectors for x in v], dtype=np.int64)
+    offsets, data = codec.encode_positions_payloads(flat, lens)
+    for i, v in enumerate(vectors):
+        want = codec.varint_encode(
+            np.array([len(v), *np.diff(v, prepend=0)], dtype=np.uint64)
+        )
+        assert data[offsets[i] : offsets[i + 1]].tobytes() == want
+    # interleave an empty (stripped) payload after every vector
+    parts = [data[offsets[i] : offsets[i + 1]] for i in range(len(vectors))]
+    both = np.concatenate([x for p in parts for x in (p, p[:0])])
+    sizes = [s for p in parts for s in (len(p), 0)]
+    out_lens, out_flat = codec.decode_positions_payloads(
+        np.concatenate(([0], np.cumsum(sizes))), both
+    )
+    assert out_lens.tolist() == [x for n in lens.tolist() for x in (n, 0)]
+    assert out_flat.tolist() == flat.tolist()
