@@ -20,8 +20,9 @@ Scoring semantics (mirrored exactly by the oracle):
 
 Scale shape: dictionary stats join is broadcast; per-(doc,term) scores
 aggregate map-side; top-k is a TakeOrdered (no global sort
-materialization). Block-max metadata (max_tf per block) gives an upper
-score bound per block for WAND-style pruning — see `rank_terms_wand`.
+materialization). Each block's stored (tf, dl) impact frontier gives an
+upper score bound per block for WAND-style pruning — see
+`rank_terms_wand`.
 """
 
 from __future__ import annotations
@@ -51,23 +52,15 @@ def _tfn_col(tf_col, avgdl: float):
 
 
 def _unique_term_doc_rows(index) -> bool:
-    """True when posting rows are provably unique per (term, doc):
-    single-field index, and (blocks modes) blocks never split a doc —
-    the block_impacts manifest flag marks builds with that invariant.
-    Then groupBy(term, doc).sum(tf) is the identity and its exchange
-    can be elided from every scorer (guide §2.4: remove shuffles that
-    re-derive an invariant the data already has)."""
+    """True when posting rows are provably unique per (term, doc): a
+    single-field index (blocks never split a doc). Then
+    groupBy(term, doc).sum(tf) is the identity and its exchange can be
+    elided from every scorer (guide §2.4: remove shuffles that re-derive
+    an invariant the data already has)."""
     manifest = getattr(index, "manifest", None)
     if manifest is None:
         return False  # unknown layout (memory handles): keep the agg
-    t = manifest["type"]
-    if t.get("n_fields", 1) != 1:
-        return False
-    from fulltextsearch_spark.sources.index_io import BLOCK_MODES
-
-    if index.mode in BLOCK_MODES and not t.get("block_impacts"):
-        return False  # legacy blocks may split a doc across blocks
-    return True
+    return manifest["type"]["n_fields"] == 1
 
 
 def _leaf_scores(
@@ -327,24 +320,16 @@ def _id_span(index, n_docs: int) -> int:
 
 
 def _wand_eligible(index, terms: list[str] | None, force: bool | None) -> bool:
-    """WAND needs a blocks-mode index. Multi-field corpora additionally
-    need impact frontiers (manifest flag ``block_impacts``): impact tf
+    """WAND needs a blocks-mode index, single- or multi-field: impact tf
     is the per-doc tf SUMMED over fields and blocks never split a doc,
-    so the bound stays score-safe; without impacts the per-(doc,field)
-    max_tf bound would undercount split docs. Cost-based gate on top:
-    collections below WAND_MIN_DOCS take the exhaustive single-job path
-    (override with ``force``)."""
+    so the bound stays score-safe. Cost-based gate on top: collections
+    below WAND_MIN_DOCS take the exhaustive single-job path (override
+    with ``force``)."""
     from fulltextsearch_spark.sources.index_io import BLOCK_MODES
 
     if force is not None and not force:
         return False
-    mtype = index.manifest["type"] if getattr(index, "manifest", None) else {}
-    structural = (
-        terms is not None
-        and getattr(index, "mode", None) in BLOCK_MODES
-        and (mtype.get("n_fields", 1) == 1 or mtype.get("block_impacts"))
-    )
-    if not structural:
+    if terms is None or getattr(index, "mode", None) not in BLOCK_MODES:
         return False
     if force:
         return True
@@ -356,8 +341,8 @@ def rank_query(
 ) -> DataFrame:
     """Deterministic BM25 top-k: (doc_id, score).
 
-    Flat term queries (WORD / OR-of-distinct-WORDs) on a single-field
-    blocks-mode index of ≥ WAND_MIN_DOCS docs route through block-max
+    Flat term queries (WORD / OR-of-distinct-WORDs) on a blocks-mode
+    index of ≥ WAND_MIN_DOCS docs route through block-max
     WAND pruning (`rank_terms_wand`); everything else takes the
     exhaustive scorer. Both paths are rank-identical (test_wand.py)."""
     ast = parser.parse(query)
@@ -440,28 +425,16 @@ def _rank_wand_driver_cp(
     term_col = np.array(meta.column("term").to_pylist(), dtype=object)
     first = meta.column("first_doc").to_numpy()
     last = meta.column("last_doc").to_numpy()
-    max_tf = meta.column("max_tf").to_numpy().astype(np.float64)
     n_docs_b = meta.column("n_docs").to_numpy().astype(np.int64)
-    # per-block exact impact bound (empty/absent frontier -> dl→0 fallback;
-    # legacy segments have no imp columns at all)
-    fallback = max_tf * (k1 + 1.0) / (max_tf + k1 * (1.0 - b))
-    if "imp_tf" in meta.column_names:
-        imp_tf = meta.column("imp_tf").combine_chunks()
-        imp_dl = meta.column("imp_dl").combine_chunks()
-        off = imp_tf.offsets.to_numpy().astype(np.int64)
-        tfv = imp_tf.values.to_numpy().astype(np.float64)
-        dlv = imp_dl.values.to_numpy().astype(np.float64)
-        tfn_flat = tfv * (k1 + 1.0) / (tfv + k1 * (1.0 - b + b * dlv / avgdl))
-        lens = off[1:] - off[:-1]
-        seg_max = np.full(nblocks, -np.inf)
-        ne = lens > 0
-        if ne.any():
-            # empty segments are zero-width in the flat values, so reducing
-            # between consecutive NON-EMPTY starts covers each exactly
-            seg_max[ne] = np.maximum.reduceat(tfn_flat, off[:-1][ne])
-        tfn_ub = np.where(np.isfinite(seg_max), seg_max, fallback)
-    else:
-        tfn_ub = fallback
+    # per-block exact impact bound: the max tfn over the block's frontier
+    # (every term block stores at least one (tf, dl) pair)
+    imp_tf = meta.column("imp_tf").combine_chunks()
+    imp_dl = meta.column("imp_dl").combine_chunks()
+    off = imp_tf.offsets.to_numpy().astype(np.int64)
+    tfv = imp_tf.values.to_numpy().astype(np.float64)
+    dlv = imp_dl.values.to_numpy().astype(np.float64)
+    tfn_flat = tfv * (k1 + 1.0) / (tfv + k1 * (1.0 - b + b * dlv / avgdl))
+    tfn_ub = np.maximum.reduceat(tfn_flat, off[:-1])
     # df from block metadata: blocks never split a doc and doc ranges
     # are disjoint, so Σ n_docs per term IS the document frequency
     uterms, tinv = np.unique(term_col, return_inverse=True)
@@ -581,9 +554,7 @@ def rank_terms_wand(
     evaluated at the live avgdl — the EXACT maximum score any doc in
     the block can contribute (impact tf sums a doc's fields and blocks
     never split a doc; impact dl lower-bounds the true dl, and tfn is
-    ↓ in dl, so multi-field bounds only over-estimate). Blocks without
-    impacts (legacy segments) fall back to the dl→0 majorization
-    tfn(max_tf, 0). Two phases:
+    ↓ in dl, so multi-field bounds only over-estimate). Two phases:
 
     1. SEED: single-term queries decode the highest-ub blocks.
        Multi-term queries seed BY CELL: the top grid cells by combined
@@ -615,9 +586,7 @@ def rank_terms_wand(
        work at any corpus size.
 
     Verified rank-identical to the exhaustive scorer in tests
-    (test_wand.py), including multi-field compound indexes (impact
-    frontiers required — no-impacts multi-field indexes raise and
-    rank_query routes them to the exhaustive path).
+    (test_wand.py), including multi-field compound indexes.
 
     Cost gates (routing only — every route returns exact ranks): Gate A
     skips seed/grid for candidate sets ≤ 2× the seed budget; Gate P
@@ -648,14 +617,6 @@ def rank_terms_wand(
     METADATA — ~1 row per 4096 occurrences, explode-bounded by the
     grid; no payload is touched before the survivor decode.
     """
-    manifest = getattr(index, "manifest", None)
-    mtype = manifest["type"] if manifest else {}
-    if mtype.get("n_fields", 1) != 1 and not mtype.get("block_impacts"):
-        raise ValueError(
-            "block-max WAND on a multi-field index requires impact "
-            "frontiers (per-(doc,field) max_tf is unsafe when a doc's "
-            "tf splits across fields) — rebuild, or use the exhaustive path"
-        )
     n_docs, avgdl = index.collection_stats()
     avgdl = avgdl or 1.0  # empty index: avoid a 0-division in the bound
     return _rank_wand_driver_cp(

@@ -4,96 +4,34 @@ Spark-first re-expression of the reference build pipeline (SURVEY.md
 §2.C, §3.1): the reference fills a single-process
 ``SortedDictionary<string, List<Occurrence>>`` doc-by-doc
 (FullTextIndexBuilder.cs:11,97-115) and flushes term-ordered posting
-lists (C2). Here the same result is one declarative plan:
+lists (C2). Here a posting's positions all live inside one document, so
+the per-doc assembly happens inside the tokenize pass itself, and the
+build has at most one full-data shuffle:
 
-    tokenize (pandas UDF, narrow)
-      → posexplode                         (narrow)
-      → groupBy(term, doc, field)          (THE shuffle — by term)
-      → collect sorted positions + tf
+    blocks modes:  tokenize_packed_runs   (mapInArrow, narrow: one packed
+                                           run per (batch, term, doc group))
+                     → assemble_packed_blocks (THE shuffle, keyed by
+                                           (bucket, term, doc group); sort,
+                                           cut, encode; write by bucket)
+    arrays mode:   tokenize_postings      (mapInArrow, narrow: posting rows)
+                     → bucketed write     (repartition by (bucket, term))
 
 Doc/collection statistics (df, cf, dl) fall out as cheap follow-up
-aggregations; they power BM25 (the reference has no ranking —
-SURVEY.md §0.1).
+aggregations over the written tables; they power BM25 (the reference has
+no ranking — SURVEY.md §0.1).
 
-Scale notes (10^12 docs):
-- the term shuffle has no skew: the key is (term, doc, field), so a
-  stop-word's postings spread over all reducers; the *block* assembly
-  step groups by (term, doc_group) — salted by doc-range — so no single
-  task ever owns a full stop-word posting list (SURVEY.md §7 hard parts).
-- map-side combine is automatic (partial aggregation) for the
-  count/sum aggregates.
+Scale notes (10^12 docs): the block shuffle key carries the doc group
+(DOC_GROUP_SPAN docs), so a stop-word's runs spread over many reducers
+and no single task ever owns a full stop-word posting list (SURVEY.md §7
+hard parts).
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-# occurrences exploded from pages; field_id starts at 1 (reference
-# FullTextIndexBuilder.cs:8-9); single-field pages => field_id == 1.
-OCC_COLS = ("term", "doc_id", "field_id", "pos")
-
-
-TOKEN_ROWS_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType(), False),
-        T.StructField("field_id", T.IntegerType(), False),
-        T.StructField("term", T.StringType(), False),
-        T.StructField("pos", T.IntegerType(), False),
-        T.StructField("off", T.IntegerType(), False),
-        T.StructField("len", T.IntegerType(), False),
-    ]
-)
-
-
-def tokenize_pages(pages_with_ids: DataFrame, field_id: int = 1) -> DataFrame:
-    """pages(+doc_id) → one row per token occurrence.
-
-    Output: (doc_id, field_id, term, pos, off, len). Implemented as
-    mapInPandas emitting flat numpy-backed columns — an order of
-    magnitude cheaper than building an array<struct> per row and
-    exploding it (no per-token Python dicts).
-    """
-    from fulltextsearch_spark.functions.tokenizer import tokenize_text
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            doc_ids, terms, poss, offs, lens = [], [], [], [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                if text is None:
-                    continue
-                t, o, ln = tokenize_text(text)
-                n = len(t)
-                if n == 0:
-                    continue
-                doc_ids.append(np.full(n, doc_id, dtype=np.int64))
-                terms.extend(t)
-                poss.append(np.arange(1, n + 1, dtype=np.int32))
-                offs.append(o.astype(np.int32))
-                lens.append(ln.astype(np.int32))
-            if not terms:
-                continue
-            n_all = len(terms)
-            yield pd.DataFrame(
-                {
-                    "doc_id": np.concatenate(doc_ids),
-                    "field_id": np.full(n_all, field_id, dtype=np.int32),
-                    "term": terms,
-                    "pos": np.concatenate(poss),
-                    "off": np.concatenate(offs),
-                    "len": np.concatenate(lens),
-                }
-            )
-
-    return pages_with_ids.select("doc_id", "text").mapInPandas(
-        run, TOKEN_ROWS_SCHEMA
-    )
-
 
 # Sentinel "term" for per-document position-vector rows carried inside
 # the postings table (see tokenize_postings emit_doc_positions). The
@@ -202,31 +140,6 @@ def tokenize_postings(
 
     return pages_with_ids.select("doc_id", "text").mapInArrow(
         run, POSTING_SCHEMA
-    )
-
-
-def tokenize_compound(docs: DataFrame, field_cols: list[str]) -> DataFrame:
-    """Multi-field compound documents (reference AddCompound,
-    FullTextIndexBuilder.cs:50-64, SURVEY.md §2.A4): each text column
-    becomes field_id 1..N with its own 1-based token positions."""
-    out = None
-    for fid, col in enumerate(field_cols, start=1):
-        part = tokenize_pages(
-            docs.select("doc_id", F.col(col).alias("text")), field_id=fid
-        )
-        out = part if out is None else out.unionByName(part)
-    return out
-
-
-def build_postings(tokens: DataFrame) -> DataFrame:
-    """occurrences → postings (term, doc_id, field_id, positions, tf).
-
-    positions sorted ascending — the posting-list invariant
-    (IndexModels/IPostingList.cs:3-7: ordered smallest→greatest).
-    """
-    return tokens.groupBy("term", "doc_id", "field_id").agg(
-        F.sort_array(F.collect_list("pos")).alias("positions"),
-        F.count("*").cast("int").alias("tf"),
     )
 
 
@@ -1000,9 +913,8 @@ DOC_POSITIONS_SCHEMA = T.StructType(
 
 def decode_dp_blocks(blocks: DataFrame) -> DataFrame:
     """Sentinel block rows → (doc_id, field_id, positions) — the
-    doc-positions table view over a blocks-only index layout. The
-    field id rides in the sentinel's block_no (0 in legacy segments =
-    field 1). mapInArrow: all of a batch's payloads decode in one
+    doc-positions table view over a blocks-mode index. The field id
+    rides in the sentinel's block_no. mapInArrow: all of a batch's payloads decode in one
     batched varint pass into ONE flat positions ListArray."""
 
     def run(batches):
@@ -1021,9 +933,7 @@ def decode_dp_blocks(blocks: DataFrame) -> DataFrame:
             yield pa.RecordBatch.from_arrays(
                 [
                     rb.column(0),
-                    pa.array(
-                        np.maximum(rb.column(1).to_numpy(), 1), type=pa.int32()
-                    ),
+                    rb.column(1),
                     pa.ListArray.from_arrays(
                         offsets, pa.array(flat, type=pa.int32())
                     ),

@@ -6,16 +6,19 @@ with an index root directory:
 
     <root>/manifest.json          atomic commit point (write-tmp + rename)
     <root>/seg_NNNNN/postings/    (term, doc_id, field_id, positions, tf)
-    <root>/seg_NNNNN/blocks/      compressed block rows (mode="blocks")
+                                  (mode="arrays")
+    <root>/seg_NNNNN/blocks/      compressed block rows (the block modes)
     <root>/seg_NNNNN/dictionary/  (term, df, cf)
     <root>/seg_NNNNN/doc_stats/   (doc_id, dl)
     <root>/seg_NNNNN/docs/        (doc_id, url, warc_ts, lang[, meta], text)
 
 Per-document position vectors (the reference's textpos file) live as
-sentinel rows (term="", tf=0, positions = flat off/len vector) inside
-the postings table under their own partition directory bucket=n_buckets
-— they fall out of the SAME tokenize pass as the postings and term
-queries never scan them (bucket pruning).
+sentinel rows (term="", flat off/len vector) inside the main table
+(postings or blocks) under their own partition directory
+bucket=n_buckets — they fall out of the SAME tokenize pass as the
+postings and term queries never scan them (bucket pruning). The
+manifest's ``version`` is the on-disk format (FORMAT_VERSION); any
+other version is rejected with a "rebuild" error.
 
 Segments are the analog of the reference's posting-list continuation
 chains for incremental indexing (PersistentBuilder.cs:69-80, SURVEY.md
@@ -39,6 +42,7 @@ from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 from functools import reduce
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -47,6 +51,13 @@ from fulltextsearch_spark.operators import build as B
 from fulltextsearch_spark.sources.ids import assign_dense_ids_with_counts
 
 MANIFEST = "manifest.json"
+# On-disk format version, checked by every manifest read. Version 2:
+# per-doc position vectors are sentinel rows (term="") in the main
+# table's extra bucket n_buckets; blocks modes store ONLY the blocks
+# table (no staged postings), every block carrying its (tf, dl) impact
+# frontier and never splitting a doc, and each sentinel's block_no is
+# its field id. Older versions are rejected with a "rebuild" error.
+FORMAT_VERSION = 2
 DEFAULT_BUCKETS = 8
 # auto-scaling target: enough buckets that a point lookup prunes to
 # ~this many docs' worth of postings per segment; capped at 4096
@@ -97,8 +108,7 @@ def _local_fast_enabled() -> bool:
     return not os.environ.get("FTS_NO_LOCAL_FAST_PATH")
 
 
-# block-metadata columns (Index.block_meta); legacy segments lack the
-# impact frontiers
+# block-metadata columns (Index.block_meta)
 BLOCK_META_COLS = (
     "term", "first_doc", "last_doc", "n_occ", "n_docs", "max_tf",
     "imp_tf", "imp_dl",
@@ -252,11 +262,20 @@ def _maybe_encode_dict(
 
 
 def _read_manifest(root: str) -> dict | None:
+    """The committed manifest, or None when the root has none. Raises
+    ValueError for any format version but FORMAT_VERSION."""
     p = os.path.join(root, MANIFEST)
     if not os.path.exists(p):
         return None
     with open(p) as f:
-        return json.load(f)
+        manifest = json.load(f)
+    if manifest.get("version") != FORMAT_VERSION:
+        raise ValueError(
+            f"index at {root} has format version {manifest.get('version')!r}; "
+            f"this engine reads version {FORMAT_VERSION} only — rebuild the "
+            "index from its pages"
+        )
+    return manifest
 
 
 def _write_manifest(root: str, manifest: dict) -> None:
@@ -270,7 +289,7 @@ def build_index(
     spark: SparkSession,
     pages: DataFrame,
     root: str,
-    mode: str = "arrays",
+    mode: str = "blocks",
     n_buckets: int | None = None,
     input_desc: str = "<inline>",
     keep_text: bool = True,
@@ -330,14 +349,14 @@ def build_index(
             raise ValueError(
                 f"index at {root} was built with mode={manifest['type']['mode']!r}"
             )
-        if manifest["type"].get("keep_positions", True) != keep_positions:
+        if manifest["type"]["keep_positions"] != keep_positions:
             raise ValueError(
                 "keep_positions must match the index's original build "
-                f"(manifest: {manifest['type'].get('keep_positions', True)})"
+                f"(manifest: {manifest['type']['keep_positions']})"
             )
-        if manifest["type"].get("n_fields", 1) != n_fields:
+        if manifest["type"]["n_fields"] != n_fields:
             raise ValueError(
-                f"index at {root} has {manifest['type'].get('n_fields', 1)} "
+                f"index at {root} has {manifest['type']['n_fields']} "
                 f"field(s); got {n_fields}"
             )
         if n_buckets is not None and n_buckets != manifest["type"]["n_buckets"]:
@@ -392,23 +411,13 @@ def build_index(
 
     if manifest is None:
         manifest = {
-            "version": 1,
+            "version": FORMAT_VERSION,
             "type": {
                 "engine": "fulltextsearch_spark",
                 "mode": mode,
                 "n_buckets": n_buckets if n_buckets else pick_n_buckets(n_docs),
                 "n_fields": n_fields,
-                # doc-position vectors live as sentinel rows (term="")
-                # in the main table's extra bucket — one tokenize pass
-                "dp_sentinel": True,
                 "keep_positions": keep_positions,
-                # blocks modes store ONLY the blocks table (no staged
-                # array-postings); dictionary/doc_stats derive from
-                # block metadata, doc positions from sentinel payloads
-                "blocks_only": mode in BLOCK_MODES,
-                # blocks carry exact (tf, dl) impact frontiers — the
-                # block-max WAND bound source (operators/bm25.py)
-                "block_impacts": mode in BLOCK_MODES,
             },
             "tokenizer": {"max_token_size": MAX_TOKEN_SIZE},
             "next_doc_id": 1,
@@ -558,10 +567,11 @@ def build_index(
     # (or the cached pages) — submit them as CONCURRENT Spark jobs so
     # one job's scheduling gaps and straggler tails fill with another's
     # tasks (works identically on a real cluster: the driver is free to
-    # run independent jobs in parallel)
+    # run independent jobs in parallel). The wrapped targets carry the
+    # caller's job group and local properties into the pool threads.
     with ThreadPoolExecutor(max_workers=3) as pool:
         futures = [
-            pool.submit(fn)
+            pool.submit(inheritable_thread_target(spark)(fn))
             for fn in (_write_dictionary, _write_doc_stats, _write_docs)
         ]
         for fut in futures:
@@ -658,9 +668,9 @@ def compact_index(
         return manifest
     t0 = time.time()
 
-    single_field = manifest["type"].get("n_fields", 1) == 1
+    single_field = manifest["type"]["n_fields"] == 1
     n_b = idx.n_buckets
-    if manifest["type"].get("blocks_only"):
+    if idx.mode in BLOCK_MODES:
         src_ids = sorted(s["id"] for s in old)
         comp = manifest.get("compaction")
         if comp is None or comp.get("sources") != src_ids:
@@ -682,10 +692,6 @@ def compact_index(
         seg_name = comp["path"]
         seg_path = os.path.join(root, seg_name)
         done = set(comp["done_buckets"])
-        # segments written before impacts existed null-fill the arrays
-        # (allowMissingColumns); an empty frontier is the readers'
-        # "no impacts" form
-        imp_empty = F.array().cast("array<int>")
 
         def _merge_bucket(b: int) -> None:
             # a JVM-only copy: project, sort by the block key, write.
@@ -693,12 +699,7 @@ def compact_index(
             # ranges, and AQE sizes their count from the bucket's bytes.
             # block_no only orders a multi-field doc's sentinels.
             idx._union("blocks").where(F.col("bucket") == b).select(
-                *[
-                    F.coalesce(F.col(f.name), imp_empty).alias(f.name)
-                    if f.name in ("imp_tf", "imp_dl")
-                    else f.name
-                    for f in B.BLOCK_SCHEMA.fields
-                ]
+                *B.BLOCK_SCHEMA.fieldNames()
             ).orderBy("term", "first_doc", "block_no").write.mode(
                 "overwrite"
             ).parquet(os.path.join(seg_path, "blocks", f"bucket={b}"))
@@ -743,8 +744,9 @@ def compact_index(
                 len(pending),
                 max(4, spark.sparkContext.defaultParallelism // 4),
             )
+            run = inheritable_thread_target(spark)(_run)  # keep the job group
             with ThreadPoolExecutor(max_workers=workers) as pool:
-                for fut in [pool.submit(_run, b) for b in pending]:
+                for fut in [pool.submit(run, b) for b in pending]:
                     fut.result()  # propagate the first failure
         blocks_committed = spark.read.parquet(os.path.join(seg_path, "blocks"))
         blocks_committed.where(F.col("bucket") < n_b).groupBy("term").agg(
@@ -766,12 +768,6 @@ def compact_index(
             os.path.join(seg_path, "doc_stats")
         )
     else:
-        if idx.mode in BLOCK_MODES:
-            raise ValueError(
-                f"index at {root} uses the legacy blocks layout with "
-                "staged postings, which compaction no longer supports; "
-                "rebuild it"
-            )
         seg_id = 1 + max(s["id"] for s in manifest["segments"])
         seg_name = f"seg_{seg_id:05d}"
         seg_path = os.path.join(root, seg_name)
@@ -791,13 +787,6 @@ def compact_index(
         idx.doc_stats().write.mode("overwrite").parquet(
             os.path.join(seg_path, "doc_stats")
         )
-        if not manifest["type"].get("dp_sentinel"):
-            try:  # legacy layout: positions in their own table
-                idx.doc_positions().write.mode("overwrite").parquet(
-                    os.path.join(seg_path, "doc_positions")
-                )
-            except Exception:
-                pass  # positions were not kept at build time
     idx.docs().write.mode("overwrite").parquet(os.path.join(seg_path, "docs"))
 
     n_docs = sum(s["n_docs"] for s in old)
@@ -857,8 +846,6 @@ class Index:
         manifest = _read_manifest(root)
         if manifest is None:
             raise FileNotFoundError(f"no manifest at {root}")
-        if manifest.get("version") != 1:
-            raise ValueError(f"unsupported index version {manifest.get('version')}")
         return cls(spark, root, manifest)
 
     # --- table access -------------------------------------------------
@@ -876,9 +863,9 @@ class Index:
         per table instead of re-resolving parquet footers/partitions on
         each call — a measurable share of small-query latency. Segments
         are immutable once committed, so the handle never goes stale.
-        allowMissingColumns: optional columns added over the index's
-        lifetime (per-doc `meta` on docs, impact arrays on blocks)
-        null-fill for segments written before the column existed.
+        allowMissingColumns: optional input columns (per-doc `meta`,
+        url/warc_ts/lang on docs) null-fill for segments whose pages
+        lacked them.
         """
         if table not in self._table_cache:
             dfs = [self.spark.read.parquet(p) for p in self._seg_paths(table)]
@@ -927,22 +914,20 @@ class Index:
         return self._union("docs")
 
     def doc_positions(self) -> DataFrame:
-        if not self.manifest["type"].get("keep_positions", True):
+        if not self.manifest["type"]["keep_positions"]:
             raise ValueError(
                 "positions were not kept at build time "
                 "(index built with keep_positions=False)"
             )
-        if self.manifest["type"].get("blocks_only"):
+        if self.mode in BLOCK_MODES:
             return B.decode_dp_blocks(
                 self._union("blocks").where(F.col("bucket") == self.n_buckets)
             )
-        if self.manifest["type"].get("dp_sentinel"):
-            return (
-                self._union("postings")
-                .where(F.col("bucket") == self.n_buckets)
-                .select("doc_id", "field_id", "positions")
-            )
-        return self._union("doc_positions")  # legacy layout
+        return (
+            self._union("postings")
+            .where(F.col("bucket") == self.n_buckets)
+            .select("doc_id", "field_id", "positions")
+        )
 
     def collection_stats(self) -> tuple[int, float]:
         if self._collection_stats is None:
@@ -1010,12 +995,9 @@ class Index:
             df = df.where(F.col("bucket").isin(self._buckets_of(exact_terms)))
             df = df.where(F.col("term").isin(exact_terms))
         else:
-            if self.manifest["type"].get("dp_sentinel") or self.manifest[
-                "type"
-            ].get("blocks_only"):
-                # exclude the doc-position sentinel partition from
-                # pattern scans (partition-pruned directory filter)
-                df = df.where(F.col("bucket") < self.n_buckets)
+            # exclude the doc-position sentinel partition from pattern
+            # scans (partition-pruned directory filter)
+            df = df.where(F.col("bucket") < self.n_buckets)
             if term_pred is not None:
                 df = df.where(term_pred)
         if doc_ranges is not None:
@@ -1114,7 +1096,7 @@ class Index:
     def local_block_meta(self, terms: list[str]):
         """Driver-side block METADATA for exact terms (payloads never
         read): a pyarrow Table of (term, first_doc, last_doc, n_occ,
-        n_docs, max_tf[, imp_tf, imp_dl]) sorted by (term, first_doc),
+        n_docs, max_tf, imp_tf, imp_dl) sorted by (term, first_doc),
         or None when the index has no block layout, the fast path is
         disabled, files are not driver-listable, or the terms' block
         count exceeds LOCAL_META_MAX_BLOCKS (budgeted scanner with early
@@ -1146,9 +1128,9 @@ class Index:
         dataset = self._local_dataset(terms)
         if dataset is None:
             return None  # not listable here ≠ term absent (ADVICE r4)
-        cols = [c for c in BLOCK_META_COLS if c in dataset.schema.names]
         scanner = dataset.scanner(
-            columns=cols, filter=pads.field("term").isin(list(set(terms)))
+            columns=list(BLOCK_META_COLS),
+            filter=pads.field("term").isin(list(set(terms))),
         )
         batches, total = [], 0
         for rb in scanner.to_batches():
@@ -1176,8 +1158,11 @@ class Index:
         key = tuple(sorted(set(terms)))
         if self.local_block_meta(terms) is None and key not in cache:
             df = self.blocks(exact_terms=terms)
-            cols = [c for c in BLOCK_META_COLS if c in df.columns]
-            tbl = df.select(*cols).limit(LOCAL_META_MAX_BLOCKS + 1).toArrow()
+            tbl = (
+                df.select(*BLOCK_META_COLS)
+                .limit(LOCAL_META_MAX_BLOCKS + 1)
+                .toArrow()
+            )
             over = tbl.num_rows > LOCAL_META_MAX_BLOCKS
             cache[key] = False if over else _sort_block_meta(tbl)
         tbl = cache[key]

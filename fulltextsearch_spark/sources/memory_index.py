@@ -3,9 +3,9 @@
 Analog of the reference's second index backend, InMemoryIndex
 (IndexTypes/InMemory/InMemoryIndex.cs:104-114, SURVEY.md §2.F), which
 serves as its semantic baseline. Same query interface as
-`index_io.Index`, so the planner/BM25 work unchanged; used by
-`__spark_entry__.entry` and ad-hoc pipelines that don't need a
-persistent index root.
+`index_io.Index`, so the planner/BM25 work unchanged; for ad-hoc
+pipelines and tests that don't need a persistent index root (the
+oracle-parity tests build one from a docs table).
 """
 
 from __future__ import annotations

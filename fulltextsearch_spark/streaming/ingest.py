@@ -31,7 +31,7 @@ def stream_pages_to_index(
     pages_dir: str,
     index_root: str,
     checkpoint_dir: str,
-    mode: str = "arrays",
+    mode: str = "blocks",
     dedup_by_url: bool = True,
     watermark: str = "1 hour",
 ) -> StreamingQuery:

@@ -73,7 +73,7 @@ def synth3k_idx(spark, tmp_path_factory):
 
 def test_blocks_carry_impacts(spark, synth3k_idx):
     idx = synth3k_idx
-    assert idx.manifest["type"]["block_impacts"] is True
+    assert idx.manifest["version"] == 2
     rows = idx.blocks(exact_terms=["t0"]).limit(5).collect()
     assert rows
     for r in rows:
@@ -378,19 +378,25 @@ def test_compaction_copies_blocks_verbatim(spark, compacted_copy):
         ), term
 
 
-def test_compaction_rejects_legacy_blocks_with_postings(spark, tmp_path):
-    """The old blocks layout with staged postings is no longer written
-    by any build; compaction refuses it with a clear error."""
-    root = str(tmp_path / "legacy")
-    for seg in (1, 2):
-        build_index(spark, pms_corpus_pages(spark, (seg,)), root, mode="arrays")
+def test_rejects_old_format_version(spark, tmp_path):
+    """Every manifest reader refuses a format version other than 2 —
+    Index.open, an appending build and compaction — with an error that
+    says to rebuild; the refused append writes nothing."""
+    root = str(tmp_path / "v1")
+    build_index(spark, pms_corpus_pages(spark, (1,)), root)
     path = os.path.join(root, "manifest.json")
     with open(path) as f:
         manifest = json.load(f)
-    manifest["type"]["mode"] = "blocks"
+    assert manifest["version"] == 2
+    manifest["version"] = 1
     with open(path, "w") as f:
         json.dump(manifest, f)
-    with pytest.raises(ValueError, match="legacy blocks layout"):
+    with pytest.raises(ValueError, match="rebuild"):
+        Index.open(spark, root)
+    with pytest.raises(ValueError, match="rebuild"):
+        build_index(spark, pms_corpus_pages(spark, (2,)), root)
+    assert not os.path.exists(os.path.join(root, "seg_00002"))
+    with pytest.raises(ValueError, match="rebuild"):
         compact_index(spark, root)
 
 

@@ -4,7 +4,6 @@ display helpers, tokenizer property test vs a naive FSM."""
 import numpy as np
 import pytest
 from hypothesis import given, settings, strategies as st
-from pyspark.sql import functions as F
 
 from fulltextsearch_spark.operators.groupvarint import (
     groupvarint_decode,
@@ -70,44 +69,48 @@ def test_tokenizer_matches_naive_fsm(text):
     assert got == _naive_tokenize(text)
 
 
-def test_compound_docs_fields(spark):
-    from fulltextsearch_spark.operators import build as B
+def _compound_index(spark, root, rows):
+    """A persistent two-field (title, body) index over (doc_id, title,
+    body) rows."""
+    from fulltextsearch_spark.sources.index_io import Index, build_index
 
-    docs = spark.createDataFrame(
-        [(1, "alpha beta", "gamma alpha"), (2, "beta", "delta epsilon")],
-        "doc_id long, title string, body string",
+    docs = spark.createDataFrame(rows, "doc_id long, title string, body string")
+    build_index(
+        spark, docs, root, field_cols=["title", "body"], preassigned_ids=True
     )
-    tok = B.tokenize_compound(docs, ["title", "body"])
-    rows = {(r["doc_id"], r["field_id"], r["pos"]): r["term"] for r in tok.collect()}
-    assert rows[(1, 1, 1)] == "alpha" and rows[(1, 1, 2)] == "beta"
-    assert rows[(1, 2, 1)] == "gamma" and rows[(1, 2, 2)] == "alpha"
-    # positions restart per field (FullTextIndexBuilder.cs:100-111)
-    assert rows[(2, 2, 1)] == "delta"
+    return Index.open(spark, root)
 
-    postings = B.build_postings(tok)
-    alpha = postings.where(F.col("term") == "alpha").collect()
-    assert {(r["doc_id"], r["field_id"]) for r in alpha} == {(1, 1), (1, 2)}
+
+def test_compound_docs_fields(spark, tmp_path):
+    idx = _compound_index(
+        spark,
+        str(tmp_path / "compound"),
+        [(1, "alpha beta", "gamma alpha"), (2, "beta", "delta epsilon")],
+    )
+
+    def postings(term):
+        return {
+            (r["doc_id"], r["field_id"]): list(r["positions"])
+            for r in idx.postings(exact_terms=[term]).collect()
+        }
+
+    # one posting per (doc, field)
+    assert postings("alpha") == {(1, 1): [1], (1, 2): [2]}
+    assert postings("beta") == {(1, 1): [2], (2, 1): [1]}
+    # positions restart per field (FullTextIndexBuilder.cs:100-111)
+    assert postings("gamma") == {(1, 2): [1]}
+    assert postings("delta") == {(2, 2): [1]}
 
 
 def test_phrase_does_not_cross_fields(spark, tmp_path):
     """SEQ adjacency requires same (doc, field): 'beta gamma' spans the
     title/body boundary of doc 1 and must not match."""
-    from fulltextsearch_spark.operators import build as B
-    from fulltextsearch_spark.sources.memory_index import MemoryIndex
     from fulltextsearch_spark.plans.planner import matches_to_string
 
-    docs = spark.createDataFrame(
-        [(1, "alpha beta", "gamma delta"), (2, "beta gamma", "x")],
-        "doc_id long, title string, body string",
-    )
-    tok = B.tokenize_compound(docs, ["title", "body"])
-    postings = B.build_postings(tok)
-    idx = MemoryIndex(
+    idx = _compound_index(
         spark,
-        postings,
-        B.build_dictionary(postings),
-        B.doc_stats_from_postings(postings),
-        docs,
+        str(tmp_path / "phrase"),
+        [(1, "alpha beta", "gamma delta"), (2, "beta gamma", "x")],
     )
     got = matches_to_string(idx.search("SEQ(WORD(beta),WORD(gamma))"))
     assert got == "{[2,1,1], [2,1,2]}"

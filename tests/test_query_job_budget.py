@@ -125,3 +125,31 @@ def test_wild_query_job_budget(spark, idx):
         spark, "budget-wild-2", lambda: idx.search("WILD(te*)").limit(100).collect()
     )
     assert again <= 2, again  # expansion memoized
+
+
+# --- build and compaction jobs stay in the caller's job group -----------
+
+
+def test_build_and_compaction_jobs_stay_in_job_group(spark, tmp_path):
+    """Every Spark job of a blocks build_index and of compact_index runs
+    in the caller's job group, including the jobs submitted from their
+    thread pools (the concurrent output writes, the bucket merges)."""
+    from fulltextsearch_spark.sources.index_io import build_index, compact_index
+    from fulltextsearch_spark.sources.pages import pms_corpus_pages
+
+    root = str(tmp_path / "grp_idx")
+    tracker = spark.sparkContext.statusTracker()
+    ungrouped_before = set(tracker.getJobIdsForGroup(None))
+    for seg in (1, 2):
+        jobs = _jobs_for(
+            spark,
+            f"group-build-{seg}",
+            lambda: build_index(
+                spark, pms_corpus_pages(spark, (seg,)), root, mode="blocks"
+            ),
+        )
+        assert jobs >= 1, jobs
+    jobs = _jobs_for(spark, "group-compact", lambda: compact_index(spark, root))
+    assert jobs >= 1, jobs
+    outside = set(tracker.getJobIdsForGroup(None)) - ungrouped_before
+    assert not outside, sorted(outside)
