@@ -261,6 +261,14 @@ def _maybe_encode_dict(
         )
 
 
+def _in_job_group(spark: SparkSession, fn):
+    """``fn`` wrapped so a pool thread runs it under the caller's job group
+    and local properties. Unchanged when pinned-thread mode is off (then
+    ``inheritable_thread_target`` hands the session back)."""
+    wrap = inheritable_thread_target(spark)
+    return fn if wrap is spark else wrap(fn)
+
+
 def _read_manifest(root: str) -> dict | None:
     """The committed manifest, or None when the root has none. Raises
     ValueError for any format version but FORMAT_VERSION."""
@@ -571,7 +579,7 @@ def build_index(
     # caller's job group and local properties into the pool threads.
     with ThreadPoolExecutor(max_workers=3) as pool:
         futures = [
-            pool.submit(inheritable_thread_target(spark)(fn))
+            pool.submit(_in_job_group(spark, fn))
             for fn in (_write_dictionary, _write_doc_stats, _write_docs)
         ]
         for fut in futures:
@@ -744,7 +752,7 @@ def compact_index(
                 len(pending),
                 max(4, spark.sparkContext.defaultParallelism // 4),
             )
-            run = inheritable_thread_target(spark)(_run)  # keep the job group
+            run = _in_job_group(spark, _run)
             with ThreadPoolExecutor(max_workers=workers) as pool:
                 for fut in [pool.submit(run, b) for b in pending]:
                     fut.result()  # propagate the first failure

@@ -33,28 +33,31 @@ def test_dense_ids_stable_across_parallelism(spark):
 
 def test_build_resumes_after_kill(spark, tmp_path):
     """A killed build (segment written, manifest not committed) leaves
-    the index consistent; the rerun rebuilds only the orphan segment."""
-    root = str(tmp_path / "resume_idx")
-    build_index(spark, pms_corpus_pages(spark, (1,)), root)
-    manifest_before = json.load(open(os.path.join(root, "manifest.json")))
+    the index consistent; the rerun rebuilds only the orphan segment.
+    Each layout plants the partial file in the table it writes (blocks/
+    or postings/), so a rerun that left it in place would fail the read."""
+    for mode, table in (("blocks", "blocks"), ("arrays", "postings")):
+        root = str(tmp_path / f"resume_idx_{mode}")
+        build_index(spark, pms_corpus_pages(spark, (1,)), root, mode=mode)
 
-    # simulate a crash: segment 2 data exists but manifest was never
-    # swapped (commit is the atomic manifest rename)
-    orphan = os.path.join(root, "seg_00002")
-    os.makedirs(os.path.join(orphan, "postings"), exist_ok=True)
-    open(os.path.join(orphan, "postings", "junk"), "w").write("partial")
+        # simulate a crash: segment 2 data exists but manifest was never
+        # swapped (commit is the atomic manifest rename)
+        partial = os.path.join(root, "seg_00002", table, "bucket=0")
+        os.makedirs(partial, exist_ok=True)
+        open(os.path.join(partial, "junk"), "w").write("partial")
 
-    # reopening sees only committed segment 1
-    idx = Index.open(spark, root)
-    assert [s["id"] for s in idx.manifest["segments"]] == [1]
+        # reopening sees only committed segment 1
+        idx = Index.open(spark, root)
+        assert [s["id"] for s in idx.manifest["segments"]] == [1]
 
-    # resume: rerun the segment-2 build — overwrites the orphan
-    build_index(spark, pms_corpus_pages(spark, (2,)), root)
-    idx = Index.open(spark, root)
-    assert [s["id"] for s in idx.manifest["segments"]] == [1, 2]
-    assert idx.manifest["next_doc_id"] == 8
-    got = idx.search("WORD(joke)").collect()
-    assert [r["doc_id"] for r in got] == [7]
+        # resume: rerun the segment-2 build — overwrites the orphan
+        build_index(spark, pms_corpus_pages(spark, (2,)), root, mode=mode)
+        idx = Index.open(spark, root)
+        assert [s["id"] for s in idx.manifest["segments"]] == [1, 2]
+        assert idx.manifest["next_doc_id"] == 8
+        assert not os.path.exists(os.path.join(partial, "junk"))
+        got = idx.search("WORD(joke)").collect()
+        assert [r["doc_id"] for r in got] == [7]
 
 
 def test_manifest_lineage_and_metrics(spark, tmp_path):

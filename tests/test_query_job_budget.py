@@ -153,3 +153,18 @@ def test_build_and_compaction_jobs_stay_in_job_group(spark, tmp_path):
     assert jobs >= 1, jobs
     outside = set(tracker.getJobIdsForGroup(None)) - ungrouped_before
     assert not outside, sorted(outside)
+
+
+def test_job_group_wrapper_passes_through_when_unpinned(monkeypatch):
+    """Without pinned-thread mode (no ClientServer gateway) the pool
+    targets run as given, so build and compaction still work."""
+    from pyspark import SparkContext
+
+    from fulltextsearch_spark.sources.index_io import _in_job_group
+
+    monkeypatch.setattr(SparkContext, "_gateway", None)
+
+    def target():
+        return 1
+
+    assert _in_job_group(object(), target) is target
