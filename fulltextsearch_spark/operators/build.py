@@ -855,13 +855,15 @@ def _assemble_run_batches(
 
 def assemble_packed_blocks(
     runs: DataFrame,
+    n_parts: int,
     codec: str = "blocks",
     n_buckets: int = 8,
     strip_dp_payload: bool = False,
     block_max_occ: int = BLOCK_MAX_OCC,
 ) -> DataFrame:
     """Packed runs → bucketed block rows (BLOCK_SCHEMA_BUCKETED), ready
-    for the partitionBy("bucket") writer with no further shuffle.
+    for the partitionBy("bucket") writer with no further shuffle, in
+    ``n_parts`` shuffle partitions (the build's width, sources/ids.py).
 
     The shuffle keys (bucket, term, doc_grp) are computed as JVM
     expressions — they never ride as data columns through the shuffle;
@@ -877,7 +879,6 @@ def assemble_packed_blocks(
     ).otherwise(
         F.pmod(F.xxhash64(F.col("term")), F.lit(n_buckets)).cast("int")
     )
-    n_parts = runs.sparkSession.sparkContext.defaultParallelism * 4
     shuffled = runs.repartition(
         n_parts, bucket_expr, F.col("term"), F.col("doc_grp")
     ).sortWithinPartitions(bucket_expr, F.col("term"), F.col("doc_grp"))

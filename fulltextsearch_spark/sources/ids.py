@@ -6,8 +6,9 @@ engine needs ids that are dense, deterministic, and reproducible across
 cluster sizes (rank-identity ties break on doc_id ⇒ transitively on
 url). `monotonically_increasing_id` is neither dense nor stable, so:
 
-1. range-repartition + sort within partitions by the (unique) order
-   column — a global sort order;
+1. range-repartition (into :func:`build_width` partitions) + sort
+   within partitions by the (unique) order column — a global sort
+   order;
 2. persist, count rows per physical partition (one cheap job);
 3. id = partition offset + the row's local index within its cached
    partition, read off `monotonically_increasing_id`'s low 33 bits
@@ -21,6 +22,13 @@ cached data into `spark.sql.shuffle.partitions` hash partitions
 downstream stage — the Python tokenize pass above all — inherited that
 width). At 10^12 rows the only global data movement is the one range
 shuffle a global sort needs anyway.
+
+The width of that shuffle is the build's width: the tokenize pass
+inherits it from the persisted id'd frame, and the block shuffle uses
+the same count. :func:`build_width` derives it from the optimizer's
+size estimate of the input (no Spark job), so a small append runs a
+few full Python tasks instead of ``defaultParallelism * 4`` near-empty
+ones, while a large build keeps the cap.
 """
 
 from __future__ import annotations
@@ -28,6 +36,32 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark import StorageLevel
+
+# Input bytes (the optimizer's estimate of the column-pruned pages) one
+# build task should own. A Python task pays a fixed worker round-trip,
+# so a small input runs as few full tasks; chosen from a serve sweep
+# (CHANGES.md). An input above TARGET_BYTES_PER_TASK * cap (64 MiB on
+# 32 cores; bench.py's 250k docs are estimated at ~105 MB) gets the cap.
+TARGET_BYTES_PER_TASK = 512 << 10
+
+
+def width_for_bytes(size_bytes: int, parallelism: int) -> int:
+    """ceil(size_bytes / TARGET_BYTES_PER_TASK), clamped to
+    [1, parallelism * 4]. The cap is the width for large inputs: a few
+    task waves per core, so no straggler idles the other cores."""
+    cap = parallelism * 4
+    return max(1, min(cap, -(-size_bytes // TARGET_BYTES_PER_TASK)))
+
+
+def build_width(df: DataFrame) -> tuple[int, int]:
+    """(partition count, input bytes estimate) for a build over ``df``.
+    The estimate is the optimizer's ``sizeInBytes`` — no Spark job. An
+    input Spark cannot size (a Python ``createDataFrame``, an RDD)
+    reports ``Long.MaxValue`` (scaled by any projection above it), so
+    it gets the cap."""
+    size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    sc = df.sparkSession.sparkContext
+    return width_for_bytes(size, sc.defaultParallelism), size
 
 
 def assign_dense_ids(
@@ -64,8 +98,10 @@ def assign_dense_ids_with_counts(
         # AQE-coalesced to a handful of partitions at moderate sizes,
         # and every downstream stage that reads the persisted result
         # (the Python tokenize pass above all) inherits that width —
-        # measured: 5 tasks on 8 cores, a 14 s straggler tail
-        num_partitions = df.sparkSession.sparkContext.defaultParallelism * 4
+        # measured: 5 tasks on 8 cores, a 14 s straggler tail. The
+        # size-derived width gives a large input the cap (several
+        # waves per core) and a small one only as many tasks as it fills.
+        num_partitions, _ = build_width(df)
     ordered = df.repartitionByRange(num_partitions, order_col)
     ordered = (
         ordered.sortWithinPartitions(order_col)

@@ -43,12 +43,16 @@ from dataclasses import dataclass, field
 from functools import reduce
 
 from pyspark import inheritable_thread_target
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from fulltextsearch_spark import MAX_TOKEN_SIZE
 from fulltextsearch_spark.operators import build as B
-from fulltextsearch_spark.sources.ids import assign_dense_ids_with_counts
+from fulltextsearch_spark.sources.ids import (
+    assign_dense_ids_with_counts,
+    build_width,
+)
 
 MANIFEST = "manifest.json"
 # On-disk format version, checked by every manifest read. Version 2:
@@ -108,6 +112,36 @@ def _local_fast_enabled() -> bool:
     return not os.environ.get("FTS_NO_LOCAL_FAST_PATH")
 
 
+# Schemas of a segment's own tables, so a read-back of what a build or
+# compaction just wrote runs no schema-inference job. ``bucket`` is the
+# partition column.
+DICTIONARY_SCHEMA = T.StructType(
+    [
+        T.StructField("term", T.StringType()),
+        T.StructField("df", T.LongType()),
+        T.StructField("cf", T.LongType()),
+    ]
+)
+POSTINGS_SCHEMA_BUCKETED = T.StructType(
+    [*B.POSTING_SCHEMA.fields, T.StructField("bucket", T.IntegerType())]
+)
+
+
+def _write_dictionary(dictionary: DataFrame, path: str) -> dict:
+    """Write a segment's (term, df, cf) dictionary; returns its
+    collection stats (n_terms, n_postings = Σ df), observed while it is
+    written — no second job over the written table."""
+    obs = Observation()
+    dictionary.observe(
+        obs, F.count(F.lit(1)).alias("n_terms"), F.sum("df").alias("n_postings")
+    ).write.mode("overwrite").parquet(path)
+    stats = obs.get
+    return {
+        "n_terms": stats["n_terms"],
+        "n_postings": int(stats["n_postings"] or 0),
+    }
+
+
 # block-metadata columns (Index.block_meta)
 BLOCK_META_COLS = (
     "term", "first_doc", "last_doc", "n_occ", "n_docs", "max_tf",
@@ -127,13 +161,16 @@ def term_bucket(col, n_buckets: int):
     return F.pmod(F.xxhash64(col), F.lit(n_buckets)).cast("int")
 
 
-def _sorted_bucketed(df: DataFrame, *extra_sort_cols: str) -> DataFrame:
+def _sorted_bucketed(
+    df: DataFrame, *extra_sort_cols: str, n_parts: int | None = None
+) -> DataFrame:
     """Hash-partition on (bucket, term) + in-partition sort by
     (bucket, term, ...) ahead of a partitionBy('bucket') write — the
     writer's required ordering is pre-satisfied (no per-task re-sort of
     array rows) and files get term-clustered row groups. Hash (not
     range) partitioning: a range partitioner would run a sampling job
-    that recomputes the whole upstream aggregation."""
+    that recomputes the whole upstream aggregation. ``n_parts`` defaults
+    to the size-derived width of ``df`` itself (sources/ids.py)."""
     cols = ["bucket", "term", *extra_sort_cols]
     # doc-range salt in the shuffle key: a stop-word term's posting
     # rows would otherwise all land in one write task at 10^12 docs.
@@ -149,7 +186,8 @@ def _sorted_bucketed(df: DataFrame, *extra_sort_cols: str) -> DataFrame:
         salt = F.col("doc_grp")
     # explicit count — bare repartition(cols) would be AQE-coalesced
     # down to a handful of write tasks at moderate sizes
-    n_parts = df.sparkSession.sparkContext.defaultParallelism * 4
+    if n_parts is None:
+        n_parts, _ = build_width(df)
     return df.repartition(
         n_parts, F.col("bucket"), F.col("term"), salt
     ).sortWithinPartitions(*cols)
@@ -163,7 +201,8 @@ def _build_dict_code(spark: SparkSession, dict_path: str) -> dict[int, int]:
     from fulltextsearch_spark.functions import charcodes as CC
 
     rows = (
-        spark.read.parquet(dict_path)
+        spark.read.schema(DICTIONARY_SCHEMA)
+        .parquet(dict_path)
         .select(F.explode(F.split("term", "")).alias("ch"))
         .where(F.col("ch") != "")
         .groupBy("ch")
@@ -205,7 +244,7 @@ def _encode_dictionary_dir(
             )
 
     tmp = dict_path + ".enc.tmp"
-    spark.read.parquet(dict_path).mapInPandas(
+    spark.read.schema(DICTIONARY_SCHEMA).parquet(dict_path).mapInPandas(
         run, "term_code binary, code_bits int, df long, cf long"
     ).write.mode("overwrite").parquet(tmp)
     # swap keeping a recoverable copy through the window: a crash
@@ -338,12 +377,19 @@ def build_index(
     manifest's frozen code table (ESC covers unseen characters), and
     query semantics are identical (Index.dictionary decodes).
 
-    Driver-action budget (scaling efficiency): one id job, one staged
-    postings write (THE tokenize pass — doc positions ride along as
-    sentinel rows), one blocks write (blocks mode), dictionary /
-    doc_stats / docs writes over the committed postings, and one
-    aggregate over the tiny written dictionary. No second tokenize pass,
-    no extra counting jobs.
+    Driver-action budget (scaling efficiency): one id job, one main
+    table write (THE tokenize pass — doc positions ride along as
+    sentinel rows), then dictionary / doc_stats / docs writes over the
+    committed table, read back with its known schema. Collection stats
+    are observed on the dictionary write. No second tokenize pass, no
+    schema-inference or counting jobs.
+
+    Width: every shuffle of the build (the id shuffle, which the
+    tokenize pass inherits, and the block or postings shuffle) uses one
+    partition count derived from the optimizer's size estimate of the
+    column-pruned input (sources/ids.py build_width) — a small append
+    runs as few tasks as it fills, a large build keeps the cap. The
+    manifest lineage records the width and the estimate behind it.
     """
     t0 = time.time()
     if dict_encoding not in (None, "huffman"):
@@ -391,7 +437,9 @@ def build_index(
     # through the id-assignment exchange
     meta_cols = [c for c in ("url", "warc_ts", "lang", "meta") if c in pages.columns]
     if preassigned_ids:
-        with_ids = pages.select("doc_id", *meta_cols, *text_cols).persist()
+        pruned = pages.select("doc_id", *meta_cols, *text_cols)
+        width, input_bytes = build_width(pruned)
+        with_ids = pruned.persist()
         part_rows = [
             {"pid": r["_p"], "rows": r["n"], "min_doc": r["lo"], "max_doc": r["hi"]}
             for r in with_ids.groupBy(F.spark_partition_id().alias("_p"))
@@ -407,8 +455,10 @@ def build_index(
         id_hi = max((p["max_doc"] for p in part_rows), default=start_id - 1)
         order_col = "doc_id (preassigned)"
     else:
+        pruned = pages.select(*meta_cols, *text_cols)
+        width, input_bytes = build_width(pruned)
         with_ids, counts = assign_dense_ids_with_counts(
-            pages.select(*meta_cols, *text_cols), "url", "doc_id", start=start_id
+            pruned, "url", "doc_id", start=start_id, num_partitions=width
         )
         part_rows = [
             {"pid": pid, "rows": n} for pid, n in sorted(counts.items())
@@ -494,6 +544,7 @@ def build_index(
         ]
         blocks_df = B.assemble_packed_blocks(
             reduce(DataFrame.unionByName, run_parts),
+            width,
             codec=mode,
             n_buckets=n_buckets,
             strip_dp_payload=not keep_positions,
@@ -501,17 +552,17 @@ def build_index(
         blocks_df.write.mode("overwrite").partitionBy("bucket").parquet(
             os.path.join(seg_path, "blocks")
         )
-        blocks_committed = spark.read.parquet(os.path.join(seg_path, "blocks"))
+        blocks_committed = spark.read.schema(B.BLOCK_SCHEMA_BUCKETED).parquet(
+            os.path.join(seg_path, "blocks")
+        )
         real_blocks = blocks_committed.where(F.col("bucket") < n_buckets)
-
-        def _write_dictionary() -> None:
-            # df = Σ n_docs is exact even for multi-field: a document
-            # never splits across blocks (the assembly cuts blocks at doc
-            # boundaries) and (doc_grp, segment) doc ranges are disjoint
-            real_blocks.groupBy("term").agg(
-                F.sum("n_docs").cast("long").alias("df"),
-                F.sum("n_occ").cast("long").alias("cf"),
-            ).write.mode("overwrite").parquet(dict_path)
+        # df = Σ n_docs is exact even for multi-field: a document never
+        # splits across blocks (the assembly cuts blocks at doc
+        # boundaries) and (doc_grp, segment) doc ranges are disjoint
+        dictionary = real_blocks.groupBy("term").agg(
+            F.sum("n_docs").cast("long").alias("df"),
+            F.sum("n_occ").cast("long").alias("cf"),
+        )
 
         def _write_doc_stats() -> None:
             sent = blocks_committed.where(F.col("bucket") == n_buckets)
@@ -532,18 +583,18 @@ def build_index(
         # arrays layout: stage the posting rows as the queryable table;
         # everything downstream derives from the committed postings —
         # one tokenize pass total (the reference tokenizes once too, §3.1).
-        _sorted_bucketed(_tokenized_rows(), "doc_id").write.mode(
+        _sorted_bucketed(_tokenized_rows(), "doc_id", n_parts=width).write.mode(
             "overwrite"
         ).partitionBy("bucket").parquet(os.path.join(seg_path, "postings"))
-        staged = spark.read.parquet(os.path.join(seg_path, "postings"))
+        staged = spark.read.schema(POSTINGS_SCHEMA_BUCKETED).parquet(
+            os.path.join(seg_path, "postings")
+        )
         postings_committed = staged.where(F.col("bucket") < n_buckets)
-
-        def _write_dictionary() -> None:
-            # single_field: one text column => rows are (term, doc)-
-            # unique — no count_distinct expand needed
-            B.build_dictionary(
-                postings_committed, single_field=n_fields == 1
-            ).write.mode("overwrite").parquet(dict_path)
+        # single_field: one text column => rows are (term, doc)-unique —
+        # no count_distinct expand needed
+        dictionary = B.build_dictionary(
+            postings_committed, single_field=n_fields == 1
+        )
 
         def _write_doc_stats() -> None:
             if keep_positions:
@@ -580,17 +631,14 @@ def build_index(
     with ThreadPoolExecutor(max_workers=3) as pool:
         futures = [
             pool.submit(_in_job_group(spark, fn))
-            for fn in (_write_dictionary, _write_doc_stats, _write_docs)
+            for fn in (
+                lambda: _write_dictionary(dictionary, dict_path),
+                _write_doc_stats,
+                _write_docs,
+            )
         ]
-        for fut in futures:
-            fut.result()  # propagate the first failure
-    # collection stats from the tiny WRITTEN dictionary (one row per
-    # term) — not a recomputation of the full postings aggregation
-    stats = (
-        spark.read.parquet(dict_path)
-        .agg(F.count("*").alias("n_terms"), F.sum("df").alias("n_postings"))
-        .collect()[0]
-    )
+        # propagate the first failure
+        stats, _, _ = [fut.result() for fut in futures]
     if dict_encoding is not None:
         from fulltextsearch_spark.functions import charcodes as CC
 
@@ -618,12 +666,10 @@ def build_index(
             "order_col": order_col,
             "row_count": n_docs,
             "partitions": part_rows,
+            "width": width,
+            "input_bytes_est": input_bytes,
         },
-        "metrics": {
-            "n_terms": stats["n_terms"],
-            "n_postings": int(stats["n_postings"] or 0),
-            "build_sec": round(time.time() - t0, 3),
-        },
+        "metrics": {**stats, "build_sec": round(time.time() - t0, 3)},
         "committed": True,
     }
     if batch_key is not None:
@@ -756,12 +802,15 @@ def compact_index(
             with ThreadPoolExecutor(max_workers=workers) as pool:
                 for fut in [pool.submit(run, b) for b in pending]:
                     fut.result()  # propagate the first failure
-        blocks_committed = spark.read.parquet(os.path.join(seg_path, "blocks"))
-        blocks_committed.where(F.col("bucket") < n_b).groupBy("term").agg(
-            F.sum("n_docs").cast("long").alias("df"),
-            F.sum("n_occ").cast("long").alias("cf"),
-        ).write.mode("overwrite").parquet(os.path.join(seg_path, "dictionary"))
-        _maybe_encode_dict(spark, seg_path, manifest)
+        blocks_committed = spark.read.schema(B.BLOCK_SCHEMA_BUCKETED).parquet(
+            os.path.join(seg_path, "blocks")
+        )
+        dictionary = (
+            blocks_committed.where(F.col("bucket") < n_b).groupBy("term").agg(
+                F.sum("n_docs").cast("long").alias("df"),
+                F.sum("n_occ").cast("long").alias("cf"),
+            )
+        )
         sent = blocks_committed.where(F.col("bucket") == n_b)
         if single_field:
             stats_df = sent.select(
@@ -785,24 +834,20 @@ def compact_index(
         _sorted_bucketed(postings, "doc_id").write.mode("overwrite").partitionBy(
             "bucket"
         ).parquet(os.path.join(seg_path, "postings"))
-        merged = spark.read.parquet(os.path.join(seg_path, "postings")).where(
-            F.col("bucket") < idx.n_buckets
+        merged = (
+            spark.read.schema(POSTINGS_SCHEMA_BUCKETED)
+            .parquet(os.path.join(seg_path, "postings"))
+            .where(F.col("bucket") < idx.n_buckets)
         )
-        B.build_dictionary(merged, single_field=single_field).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(seg_path, "dictionary"))
-        _maybe_encode_dict(spark, seg_path, manifest)
+        dictionary = B.build_dictionary(merged, single_field=single_field)
         idx.doc_stats().write.mode("overwrite").parquet(
             os.path.join(seg_path, "doc_stats")
         )
+    stats = _write_dictionary(dictionary, os.path.join(seg_path, "dictionary"))
+    _maybe_encode_dict(spark, seg_path, manifest)
     idx.docs().write.mode("overwrite").parquet(os.path.join(seg_path, "docs"))
 
     n_docs = sum(s["n_docs"] for s in old)
-    stats = (
-        spark.read.parquet(os.path.join(seg_path, "dictionary"))
-        .agg(F.count("*").alias("n_terms"), F.sum("df").alias("n_postings"))
-        .collect()[0]
-    )
     manifest.pop("compaction", None)
     manifest["segments"] = [
         {
@@ -819,11 +864,7 @@ def compact_index(
                 "row_count": n_docs,
                 "partitions": [],
             },
-            "metrics": {
-                "n_terms": stats["n_terms"],
-                "n_postings": int(stats["n_postings"] or 0),
-                "build_sec": round(time.time() - t0, 3),
-            },
+            "metrics": {**stats, "build_sec": round(time.time() - t0, 3)},
             "committed": True,
         }
     ]

@@ -6,7 +6,12 @@ import shutil
 
 import pytest
 
-from fulltextsearch_spark.sources.ids import assign_dense_ids
+from fulltextsearch_spark.operators import build as B
+from fulltextsearch_spark.sources.ids import (
+    TARGET_BYTES_PER_TASK,
+    assign_dense_ids,
+    width_for_bytes,
+)
 from fulltextsearch_spark.sources.index_io import Index, build_index
 from fulltextsearch_spark.sources.pages import pms_corpus_pages, synth_pages
 
@@ -72,3 +77,69 @@ def test_manifest_lineage_and_metrics(spark, tmp_path):
     assert sum(p["rows"] for p in seg["lineage"]["partitions"]) == 6
     assert seg["metrics"]["n_terms"] > 0
     assert seg["metrics"]["build_sec"] >= 0
+    # the observed collection stats equal the written dictionary's
+    d = spark.read.parquet(os.path.join(root, seg["path"], "dictionary"))
+    assert seg["metrics"]["n_terms"] == d.count()
+    assert seg["metrics"]["n_postings"] == d.agg({"df": "sum"}).first()[0]
+    # the build's width and the size estimate behind it: a Python
+    # createDataFrame input has no known size, so it gets the cap
+    cap = spark.sparkContext.defaultParallelism * 4
+    assert seg["lineage"]["input_bytes_est"] >= cap * TARGET_BYTES_PER_TASK
+    assert seg["lineage"]["width"] == cap
+
+
+def test_width_for_bytes_floor_cap_monotone():
+    long_max = (1 << 63) - 1  # Spark's sizeInBytes for an unsized input
+    for par in (1, 4, 32):
+        cap = par * 4
+        assert width_for_bytes(0, par) == 1
+        assert width_for_bytes(TARGET_BYTES_PER_TASK, par) == 1
+        assert width_for_bytes(TARGET_BYTES_PER_TASK + 1, par) == min(2, cap)
+        assert width_for_bytes(long_max, par) == cap
+        sizes = [0, 1, 1 << 10, 1 << 19, 1 << 20, 3 << 20, 1 << 24, 1 << 30]
+        widths = [width_for_bytes(n, par) for n in sizes + [long_max]]
+        assert widths == sorted(widths)
+        assert all(1 <= w <= cap for w in widths)
+
+
+def test_block_rows_and_results_do_not_depend_on_width(spark, tmp_path, monkeypatch):
+    """The same corpus built at width 1 and at the cap stores identical
+    block rows (payload included) and doc ids, and answers WORD, OR, AND
+    and SEQ the same, in search and in rank."""
+    from fulltextsearch_spark.plans.planner import matches_to_string
+    from fulltextsearch_spark.sources import ids
+
+    pages_dir = str(tmp_path / "pages")
+    synth_pages(spark, 400).write.parquet(pages_dir)
+    queries = [
+        "WORD(t0)",
+        "OR(WORD(t3),WORD(t11))",
+        "AND(WORD(t1),WORD(t2))",
+        "SEQ(WORD(t0),WORD(t1))",
+    ]
+    cap = spark.sparkContext.defaultParallelism * 4
+    seen = []
+    for target, width in ((1 << 62, 1), (1, cap)):
+        monkeypatch.setattr(ids, "TARGET_BYTES_PER_TASK", target)
+        root = str(tmp_path / f"w{width}")
+        m = build_index(spark, spark.read.parquet(pages_dir), root)
+        assert m["segments"][0]["lineage"]["width"] == width
+        idx = Index.open(spark, root)
+        blocks = sorted(
+            tuple(r)
+            for r in idx._union("blocks").select(*B.BLOCK_SCHEMA_BUCKETED.fieldNames())
+            .collect()
+        )
+        doc_ids = sorted(tuple(r) for r in idx.docs().select("url", "doc_id").collect())
+        results = [
+            (
+                matches_to_string(idx.search(q)),
+                [tuple(r) for r in idx.rank(q, 10).collect()],
+            )
+            for q in queries
+        ]
+        seen.append((blocks, doc_ids, results))
+    assert len(seen[0][0]) > 0
+    assert seen[0][0] == seen[1][0]
+    assert seen[0][1] == seen[1][1]
+    assert seen[0][2] == seen[1][2]

@@ -13,6 +13,9 @@ materialization) that amortizes across the handle's lifetime — the
 steady-state number is the interactive floor. Job counts come from the
 status tracker under a per-query job group."""
 
+import glob
+import os
+
 import pytest
 
 from fulltextsearch_spark.sources.index_io import Index
@@ -153,6 +156,46 @@ def test_build_and_compaction_jobs_stay_in_job_group(spark, tmp_path):
     assert jobs >= 1, jobs
     outside = set(tracker.getJobIdsForGroup(None)) - ungrouped_before
     assert not outside, sorted(outside)
+
+
+def _tasks_for(spark, tag: str, fn) -> int:
+    """Tasks run by every job of ``fn`` (skipped stages run none)."""
+    _jobs_for(spark, tag, fn)
+    tracker = spark.sparkContext.statusTracker()
+    stages = (
+        tracker.getStageInfo(st)
+        for j in tracker.getJobIdsForGroup(tag)
+        for st in tracker.getJobInfo(j).stageIds
+    )
+    return sum(s.numCompletedTasks for s in stages if s is not None)
+
+
+def test_small_append_costs_what_it_writes(spark, tmp_path):
+    """A 20-doc append runs at a width sized from its input: at most one
+    part file per bucket= directory of its segment, and fewer tasks than
+    the same append from an input Spark cannot size, which runs at the
+    cap (the fixed width every append used to pay)."""
+    from fulltextsearch_spark.sources.index_io import build_index
+    from fulltextsearch_spark.sources.pages import pms_corpus_pages, synth_pages
+
+    batch = str(tmp_path / "batch")
+    synth_pages(spark, 20).write.parquet(batch)
+    sized = spark.read.parquet(batch)
+    unsized = spark.createDataFrame(sized.collect(), sized.schema)
+    tasks = {}
+    for name, pages in (("sized", sized), ("unsized", unsized)):
+        root = str(tmp_path / name)
+        build_index(spark, pms_corpus_pages(spark, (1,)), root)
+        tasks[name] = _tasks_for(
+            spark, f"append-{name}", lambda: build_index(spark, pages, root)
+        )
+        if name == "sized":
+            dirs = glob.glob(os.path.join(root, "seg_00002", "blocks", "bucket=*"))
+            assert dirs
+            for d in dirs:
+                parts = glob.glob(os.path.join(d, "part-*"))
+                assert len(parts) <= 1, (d, parts)
+    assert tasks["sized"] < tasks["unsized"], tasks
 
 
 def test_job_group_wrapper_passes_through_when_unpinned(monkeypatch):
