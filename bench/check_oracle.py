@@ -7,11 +7,13 @@ Usage: python bench/check_oracle.py [sf_dir]
 
 from __future__ import annotations
 
+import os
 import sys
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+# import the engine from the checkout this script lives in
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as E  # noqa: E402
 from fulltextsearch_spark.session import get_spark  # noqa: E402

@@ -947,68 +947,63 @@ def decode_dp_blocks(blocks: DataFrame) -> DataFrame:
     )
 
 
+def decode_postings(
+    terms, payloads, codec: str = "blocks", min_doc: int | None = None
+):
+    """Block rows → one Arrow batch of posting rows (term, doc_id,
+    field_id, positions, tf). ``terms`` and ``payloads`` are Arrow
+    arrays holding one entry per block. The one read-path decoder of
+    block payloads, shared by the Spark path (decode_blocks) and the
+    driver fast path (Index._local_postings).
+
+    Each payload decodes with the codec's single-block decoder; then
+    the batch's occurrences are cut into (block, doc, field) rows in
+    one numpy pass, dropping docs below ``min_doc`` (the lower-bound
+    seek inside surviving blocks). Positions form ONE ListArray over
+    the flat values and terms are one take of ``terms`` — no
+    per-posting Python objects."""
+    import pyarrow as pa
+
+    _, decode_block = _block_codec(codec)
+    decoded = [decode_block(p) for p in payloads.to_pylist()]
+    blk = np.repeat(
+        np.arange(len(decoded), dtype=np.int64), [len(d[0]) for d in decoded]
+    )
+    docs, fields, pos = (
+        np.concatenate([d[i] for d in decoded] or [np.empty(0, dtype=np.int64)])
+        for i in range(3)
+    )
+    if min_doc is not None:
+        keep = docs >= min_doc
+        blk, docs, fields, pos = blk[keep], docs[keep], fields[keep], pos[keep]
+    starts = _starts(blk, docs, fields)
+    tf = np.diff(np.append(starts, len(docs)))
+    offsets = np.zeros(len(starts) + 1, dtype=np.int32)
+    np.cumsum(tf, out=offsets[1:])
+    return pa.RecordBatch.from_arrays(
+        [
+            terms.take(pa.array(blk[starts])),
+            pa.array(docs[starts], type=pa.int64()),
+            pa.array(fields[starts], type=pa.int32()),
+            pa.ListArray.from_arrays(offsets, pa.array(pos, type=pa.int32())),
+            pa.array(tf, type=pa.int32()),
+        ],
+        names=POSTING_SCHEMA.fieldNames(),
+    )
+
+
 def decode_blocks(
     blocks: DataFrame, min_doc: int | None = None, codec: str = "blocks"
 ) -> DataFrame:
-    """block rows → postings (term, doc_id, field_id, positions, tf).
-
-    Callers prune first (term equality / bucket / `last_doc >= min_doc`);
-    this decodes only surviving blocks. Implemented with mapInArrow:
-    the positions column is assembled as ONE pyarrow ListArray per
-    batch from flat (offsets, values) numpy arrays — zero per-posting
-    Python lists (the mapInPandas version allocated one list per
-    posting row, which dominated every decode-bound query the same way
-    it dominated the round-2 tokenize pass)."""
+    """Block rows (term, payload) → postings (POSTING_SCHEMA): one
+    decode_postings call per Arrow batch of a mapInArrow. Callers prune
+    first (term equality / bucket / block-metadata predicates); this
+    decodes only surviving blocks."""
 
     def decode(batches):
-        import pyarrow as pa
-
-        _, decode_block = _block_codec(codec)
-
         for rb in batches:
-            terms_in = rb.column(0).to_pylist()
-            payloads = rb.column(1).to_pylist()
-            term_parts, doc_parts, field_parts = [], [], []
-            tf_parts, val_parts = [], []
-            for term, payload in zip(terms_in, payloads):
-                docs, fields, pos = decode_block(bytes(payload))
-                if min_doc is not None:
-                    keep = docs >= min_doc
-                    docs, fields, pos = docs[keep], fields[keep], pos[keep]
-                n = len(docs)
-                if n == 0:
-                    continue
-                bnd = np.empty(n, dtype=bool)
-                bnd[0] = True
-                bnd[1:] = (docs[1:] != docs[:-1]) | (fields[1:] != fields[:-1])
-                starts = np.nonzero(bnd)[0]
-                tf = np.diff(np.append(starts, n))
-                term_parts.append(np.full(len(starts), term, dtype=object))
-                doc_parts.append(docs[starts].astype(np.int64))
-                field_parts.append(fields[starts].astype(np.int32))
-                tf_parts.append(tf.astype(np.int64))
-                val_parts.append(pos)
-            if not term_parts:
-                continue
-            tf_all = np.concatenate(tf_parts)
-            offsets = np.zeros(len(tf_all) + 1, dtype=np.int64)
-            np.cumsum(tf_all, out=offsets[1:])
-            positions = pa.ListArray.from_arrays(
-                pa.array(offsets.astype(np.int32)),
-                pa.array(
-                    np.concatenate(val_parts).astype(np.int32),
-                    type=pa.int32(),
-                ),
-            )
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(np.concatenate(term_parts), type=pa.string()),
-                    pa.array(np.concatenate(doc_parts), type=pa.int64()),
-                    pa.array(np.concatenate(field_parts), type=pa.int32()),
-                    positions,
-                    pa.array(tf_all.astype(np.int32), type=pa.int32()),
-                ],
-                names=["term", "doc_id", "field_id", "positions", "tf"],
-            )
+            out = decode_postings(rb.column(0), rb.column(1), codec, min_doc)
+            if out.num_rows:
+                yield out
 
     return blocks.mapInArrow(decode, POSTING_SCHEMA)

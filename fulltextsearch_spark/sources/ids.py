@@ -116,9 +116,10 @@ def assign_dense_ids_with_counts(
     for pid in sorted(counts):
         offsets[pid] = acc
         acc += counts[pid]
+    # typed: with no rows the map is empty and would type as map<void,void>
     offset_col = F.create_map(
         *[F.lit(x) for kv in offsets.items() for x in kv]
-    )[F.col("_pid")]
+    ).cast("map<int,bigint>")[F.col("_pid")]
     # rows in the cached partition are already in order_col order
     # (sortWithinPartitions above); the local record number is the low
     # 33 bits of monotonically_increasing_id — no window, no exchange

@@ -157,6 +157,29 @@ def _sort_block_meta(tbl):
     return tbl.sort_by([("term", "ascending"), ("first_doc", "ascending")])
 
 
+def _block_predicate(col, lit, min_doc, doc_ranges, block_first_docs):
+    """The predicate of a filtered posting read (Index.postings), or
+    None when there is no filter: keep a block iff its [first_doc,
+    last_doc] span overlaps one of ``doc_ranges``, its first_doc is one
+    of ``block_first_docs`` and its last_doc reaches ``min_doc``.
+    ``col``/``lit`` build it for each reader: F.col/F.lit for the Spark
+    scan (pushed into parquet), pyarrow.compute.field/scalar for the
+    driver fast path, so both keep exactly the same blocks."""
+    preds = []
+    if doc_ranges is not None:
+        spans = [
+            (col("last_doc") >= lo) & (col("first_doc") <= hi)
+            for lo, hi in doc_ranges
+        ]
+        preds.append(reduce(lambda a, b: a | b, spans) if spans else lit(False))
+    if block_first_docs is not None:
+        keys = [int(x) for x in block_first_docs]
+        preds.append(col("first_doc").isin(keys) if keys else lit(False))
+    if min_doc is not None:
+        preds.append(col("last_doc") >= min_doc)
+    return reduce(lambda a, b: a & b, preds) if preds else None
+
+
 def term_bucket(col, n_buckets: int):
     return F.pmod(F.xxhash64(col), F.lit(n_buckets)).cast("int")
 
@@ -466,6 +489,13 @@ def build_index(
         n_docs = sum(counts.values())
         id_lo, id_hi = start_id, start_id + n_docs - 1
         order_col = "url"
+    if n_docs == 0:
+        # nothing to index: commit no segment, so an append leaves the
+        # index as it was and a first build creates no index at all
+        with_ids.unpersist()
+        if manifest is None:
+            raise ValueError(f"cannot create an index from an empty input ({input_desc})")
+        return manifest
 
     if manifest is None:
         manifest = {
@@ -885,10 +915,18 @@ class Index:
     _collection_stats: tuple[int, float] | None = field(repr=False, default=None)
     _table_cache: dict = field(repr=False, default_factory=dict)
     # guards the per-handle driver caches touched by concurrent rank
-    # queries sharing one handle (pdf/meta memoization + eviction)
+    # queries sharing one handle (decoded-table memo eviction)
     _cache_lock: object = field(repr=False, default_factory=threading.Lock)
     # term set -> block-metadata table, or False when over budget
     _blockmeta_cache: dict = field(repr=False, default_factory=dict)
+    # term set -> fast-path verdict (True: within LOCAL_FAST_MAX_OCC)
+    _local_occ_cache: dict = field(repr=False, default_factory=dict)
+    # (term set, filters) -> decoded posting table (bounded, 64 entries)
+    _local_postings_cache: dict = field(repr=False, default_factory=dict)
+    # bucket part-file list -> pyarrow dataset
+    _local_ds_cache: dict = field(repr=False, default_factory=dict)
+    # term -> sorted doc ids (or None: not driver-resident)
+    _docids_cache: dict = field(repr=False, default_factory=dict)
 
     @classmethod
     def open(cls, spark: SparkSession, root: str) -> "Index":
@@ -1015,32 +1053,32 @@ class Index:
         (block_keys_for_docs) pushes the exact surviving-block set as
         an IN predicate on the metadata column, prunable by parquet
         row-group stats before any payload decode.
+
+        Blocks mode reads in one of two ways. Exact terms whose blocks
+        hold at most LOCAL_FAST_MAX_OCC occurrences are read on the
+        driver (_local_postings: pyarrow, zero Spark jobs for the read)
+        and handed to Spark as a one-partition local relation; anything
+        else is a bucket-pruned parquet scan decoded by a mapInArrow.
+        Both apply the same block-metadata predicate (_block_predicate)
+        and decode with the same kernel (operators/build.py
+        decode_postings), so they return identical rows.
         """
         in_blocks = self.mode in BLOCK_MODES
         if block_first_docs is not None and not in_blocks:
             raise ValueError("block_first_docs requires a blocks-mode index")
-        table = "blocks" if in_blocks else "postings"
-        df = self._union(table)
         if exact_terms is not None:
-            if in_blocks and _local_fast_enabled():
-                pdf = self._local_postings_pdf(
-                    exact_terms,
-                    min_doc=min_doc,
-                    doc_ranges=doc_ranges,
-                    block_first_docs=block_first_docs,
-                )
-                if pdf is not None:
-                    from fulltextsearch_spark.plans.planner import (
-                        POSTING_SCHEMA,
-                    )
+            tbl = self._local_postings(
+                exact_terms, min_doc, doc_ranges, block_first_docs
+            )
+            if tbl is not None:
+                from fulltextsearch_spark.plans.planner import POSTING_SCHEMA
 
-                    # coalesce(1): createDataFrame slices the local
-                    # relation into defaultParallelism (32) partitions,
-                    # turning a sub-64k-occ point lookup into 32 tiny
-                    # tasks — measured ~2x the whole query's latency
-                    return self.spark.createDataFrame(
-                        pdf, POSTING_SCHEMA
-                    ).coalesce(1)
+                # coalesce(1): createDataFrame slices the local
+                # relation into one partition per Arrow batch, turning a
+                # sub-64k-occ point lookup into many tiny tasks
+                return self.spark.createDataFrame(tbl, POSTING_SCHEMA).coalesce(1)
+        df = self._union("blocks" if in_blocks else "postings")
+        if exact_terms is not None:
             df = df.where(F.col("bucket").isin(self._buckets_of(exact_terms)))
             df = df.where(F.col("term").isin(exact_terms))
         else:
@@ -1049,87 +1087,46 @@ class Index:
             df = df.where(F.col("bucket") < self.n_buckets)
             if term_pred is not None:
                 df = df.where(term_pred)
-        if doc_ranges is not None:
-            range_col = "doc_id" if not in_blocks else None
-            preds = [
-                (F.col("last_doc") >= lo) & (F.col("first_doc") <= hi)
-                if in_blocks
-                else F.col(range_col).between(lo, hi)
-                for lo, hi in doc_ranges
-            ]
-            df = df.where(
-                reduce(lambda a, b: a | b, preds) if preds else F.lit(False)
-            )
-        if block_first_docs is not None:
-            keys = [int(x) for x in block_first_docs]
-            df = df.where(
-                F.col("first_doc").isin(keys) if keys else F.lit(False)
-            )
+        # an arrays row holds one doc: its first and last doc are doc_id
+        col = F.col if in_blocks else lambda _: F.col("doc_id")
+        pred = _block_predicate(col, F.lit, min_doc, doc_ranges, block_first_docs)
+        if pred is not None:
+            df = df.where(pred)
         if in_blocks:
-            if min_doc is not None:
-                df = df.where(F.col("last_doc") >= min_doc)
             df = B.decode_blocks(
                 df.select("term", "payload"), min_doc=min_doc, codec=self.mode
             )
-        elif min_doc is not None:
-            df = df.where(F.col("doc_id") >= min_doc)
         return df.select("term", "doc_id", "field_id", "positions", "tf")
 
     def block_doc_ranges(
         self, term: str, max_ranges: int = 64
     ) -> list[tuple[int, int]] | None:
-        """Merged [first_doc, last_doc] windows of one term's blocks —
-        read driver-side from block metadata (pyarrow, zero Spark jobs,
-        payloads untouched), memoized per handle. Returns None when the
-        index has no block metadata, the fast path is disabled, or the
+        """Merged [first_doc, last_doc] windows of one term's blocks,
+        from the driver-side block metadata (local_block_meta: zero
+        Spark jobs, payloads untouched, memoized per handle). Returns
+        None when that metadata is unavailable — no block layout, the
+        fast path disabled, files not driver-listable: "no pruning
+        available", never "term absent", so emptiness derives solely
+        from the dictionary df (conj_postings_kwargs) — or when the
         term's windows stay too fragmented to make a useful pushdown
         predicate (> max_ranges after merging — a dense term whose
         windows cover everything prunes nothing anyway)."""
-        if self.mode not in BLOCK_MODES or not _local_fast_enabled():
+        tbl = self.local_block_meta([term])
+        if tbl is None:
             return None
-        cache = getattr(self, "_range_cache", None)
-        if cache is None:
-            cache = {}
-            setattr(self, "_range_cache", cache)
-        if term in cache:
-            return cache[term]
-        try:
-            import pyarrow.dataset as pads
-        except Exception:  # pragma: no cover - pyarrow is a hard dep
+        if tbl.num_rows == 0:
+            return []
+        import numpy as np
+
+        # rows are first_doc-sorted: a window opens wherever a block
+        # starts past every earlier block's last_doc + 1
+        firsts = tbl.column("first_doc").to_numpy()
+        his = np.maximum.accumulate(tbl.column("last_doc").to_numpy())
+        opens = np.flatnonzero(np.append(True, firsts[1:] > his[:-1] + 1))
+        if len(opens) > max_ranges:
             return None
-        dataset = self._local_dataset([term])
-        result: list[tuple[int, int]] | None
-        if dataset is None:
-            # no listable block files on the driver: report "no pruning
-            # available" (None), NOT "term absent" ([]) — emptiness must
-            # derive solely from the dictionary df (conj_postings_kwargs),
-            # else a driver/executor filesystem visibility mismatch
-            # would silently turn AND/SEQ results wrong-empty (ADVICE r4)
-            result = None
-        else:
-            tbl = dataset.to_table(
-                columns=["first_doc", "last_doc"],
-                filter=pads.field("term") == term,
-            )
-            spans = sorted(
-                zip(
-                    tbl.column("first_doc").to_pylist(),
-                    tbl.column("last_doc").to_pylist(),
-                )
-            )
-            merged: list[list[int]] = []
-            for lo, hi in spans:
-                if merged and lo <= merged[-1][1] + 1:
-                    merged[-1][1] = max(merged[-1][1], hi)
-                else:
-                    merged.append([lo, hi])
-            result = (
-                [(lo, hi) for lo, hi in merged]
-                if len(merged) <= max_ranges
-                else None
-            )
-        cache[term] = result
-        return result
+        closes = np.append(opens[1:], len(firsts)) - 1
+        return list(zip(firsts[opens].tolist(), his[closes].tolist()))
 
     def blocks(self, exact_terms: list[str] | None = None) -> DataFrame:
         """Raw block rows (blocks mode) for block-max pruning paths."""
@@ -1166,33 +1163,15 @@ class Index:
         # noise next to a second footer+metadata pass.
         cache = self._blockmeta_cache
         key = tuple(sorted(set(terms)))
-        if key in cache:
-            tbl = cache[key]
-            return None if tbl is False else tbl
-        try:
-            import pyarrow as pa
-            import pyarrow.dataset as pads
-        except Exception:  # pragma: no cover - pyarrow is a hard dep
-            return None
-        dataset = self._local_dataset(terms)
-        if dataset is None:
-            return None  # not listable here ≠ term absent (ADVICE r4)
-        scanner = dataset.scanner(
-            columns=list(BLOCK_META_COLS),
-            filter=pads.field("term").isin(list(set(terms))),
-        )
-        batches, total = [], 0
-        for rb in scanner.to_batches():
-            if rb.num_rows == 0:
-                continue
-            total += rb.num_rows
-            if total > LOCAL_META_MAX_BLOCKS:
-                cache[key] = False
-                return None
-            batches.append(rb)
-        tbl = pa.Table.from_batches(batches, schema=scanner.projected_schema)
-        cache[key] = _sort_block_meta(tbl)
-        return cache[key]
+        if key not in cache:
+            tbl = self._budgeted_scan(
+                terms, BLOCK_META_COLS, lambda rb: rb.num_rows, LOCAL_META_MAX_BLOCKS
+            )
+            if tbl is None:
+                return None  # not listable here ≠ term absent (ADVICE r4)
+            cache[key] = tbl if tbl is False else _sort_block_meta(tbl)
+        tbl = cache[key]
+        return None if tbl is False else tbl
 
     def block_meta(self, terms: list[str]):
         """The block-metadata table of local_block_meta, from whichever
@@ -1224,26 +1203,15 @@ class Index:
         Memoized per handle. The doc-granularity rare-leg prune reads
         this: a rare term's ids ARE what the reference's leapfrog seeks
         the long posting list to (PhraseQuery.cs:21-73)."""
-        cache = getattr(self, "_docids_cache", None)
-        if cache is None:
-            cache = {}
-            setattr(self, "_docids_cache", cache)
-        if term in cache:
-            return cache[term]
-        import numpy as np
+        cache = self._docids_cache
+        if term not in cache:
+            import numpy as np
 
-        pdf = (
-            self._local_postings_pdf([term])
-            if self.mode in BLOCK_MODES and _local_fast_enabled()
-            else None
-        )
-        result = (
-            None
-            if pdf is None
-            else np.unique(pdf["doc_id"].to_numpy(dtype="int64"))
-        )
-        cache[term] = result
-        return result
+            tbl = self._local_postings([term])
+            cache[term] = (
+                None if tbl is None else np.unique(tbl.column("doc_id").to_numpy())
+            )
+        return cache[term]
 
     def block_keys_for_docs(
         self, term: str, doc_ids, max_keys: int = 4096,
@@ -1284,185 +1252,138 @@ class Index:
             return None
         return [int(x) for x in keys]
 
-    def _local_block_files(self, terms: list[str]) -> list[str]:
-        """Parquet part files of every bucket directory (all segments)
-        the exact terms can live in — pure path arithmetic + one listdir
-        per pruned directory, no Spark. (pyarrow.dataset requires file
-        paths when given a list.)"""
-        files = []
-        for seg in self._seg_paths("blocks"):
-            for b in self._buckets_of(terms):
-                d = os.path.join(seg, f"bucket={b}")
-                if os.path.isdir(d):
-                    files.extend(
-                        os.path.join(d, f)
-                        for f in sorted(os.listdir(d))
-                        if f.endswith(".parquet")
-                    )
-        return files
-
     def _local_dataset(self, terms: list[str]):
-        """pyarrow dataset over the terms' bucket part files, memoized
-        per file set: ParquetFileFragment caches row-group metadata
-        after the first scan, so repeated driver-side lookups in the
-        same bucket skip the ~100-file footer parse (the dominant cost
-        of a warm point lookup). Segments are immutable, so the cache
-        can never go stale. Returns None when no files exist."""
-        files = self._local_block_files(terms)
+        """pyarrow dataset over the part files of every bucket directory
+        (all segments) the exact terms can live in — path arithmetic and
+        one listdir per pruned directory, no Spark — or None when no
+        such file exists. Memoized per file set: ParquetFileFragment
+        caches row-group metadata after the first scan, so repeated
+        driver-side lookups in the same bucket skip the ~100-file footer
+        parse (the dominant cost of a warm point lookup). Segments are
+        immutable, so the cache can never go stale."""
+        files = [
+            os.path.join(d, f)
+            for seg in self._seg_paths("blocks")
+            for d in (os.path.join(seg, f"bucket={b}") for b in self._buckets_of(terms))
+            if os.path.isdir(d)
+            for f in sorted(os.listdir(d))
+            if f.endswith(".parquet")
+        ]
         if not files:
             return None
         import pyarrow.dataset as pads
 
-        cache = getattr(self, "_local_ds_cache", None)
-        if cache is None:
-            cache = {}
-            setattr(self, "_local_ds_cache", cache)
         key = tuple(files)
-        if key not in cache:
-            cache[key] = pads.dataset(files, format="parquet")
-        return cache[key]
+        if key not in self._local_ds_cache:
+            self._local_ds_cache[key] = pads.dataset(files, format="parquet")
+        return self._local_ds_cache[key]
 
-    def _local_postings_pdf(
+    def _budgeted_scan(self, terms: list[str], columns, weight, budget: int):
+        """ONE pyarrow scan of the exact terms' block rows as a Table of
+        ``columns``: batches stream in (term row-group stats prune
+        non-matching row groups — files are term-sorted) and the read
+        ABORTS, returning False, the moment the running total of
+        ``weight(batch)`` exceeds ``budget``, so an over-budget term set
+        costs at most ~one extra batch. None when no block file is
+        driver-listable: "no local read", never "terms absent" — a
+        driver/executor filesystem visibility mismatch would otherwise
+        turn exact-term lookups, term_doc_ids and the conjunction
+        prunes silently wrong-empty (ADVICE r4, r5)."""
+        import pyarrow as pa
+        import pyarrow.dataset as pads
+
+        dataset = self._local_dataset(terms)
+        if dataset is None:
+            return None
+        scanner = dataset.scanner(
+            columns=list(columns), filter=pads.field("term").isin(list(set(terms)))
+        )
+        batches, total = [], 0
+        for rb in scanner.to_batches():
+            total += weight(rb)
+            if total > budget:
+                return False
+            batches.append(rb)
+        return pa.Table.from_batches(batches, schema=scanner.projected_schema)
+
+    def _local_postings(
         self,
         terms: list[str],
         min_doc: int | None = None,
         doc_ranges: list[tuple[int, int]] | None = None,
         block_first_docs: list[int] | None = None,
     ):
-        """Driver-side exact-term posting read, or None when the term is
-        too hot for the fast path (LOCAL_FAST_MAX_OCC).
+        """Driver-side exact-term posting read: a pyarrow Table of
+        posting rows (term, doc_id, field_id, positions, tf), or None
+        when the index has no block layout, the fast path is disabled,
+        the terms are too hot for it (LOCAL_FAST_MAX_OCC) or their block
+        files are not driver-listable.
 
-        ONE budgeted pyarrow scanner pass over the bucket-pruned block
-        part files: batches stream in (term row-group stats prune
-        non-matching row groups — files are term-sorted) and the read
-        ABORTS the moment the running n_occ total exceeds
-        LOCAL_FAST_MAX_OCC, so a hot term costs at most ~one extra
-        batch before falling back to the distributed path. The
+        ONE budgeted scan (_budgeted_scan) of the terms' blocks, aborted
+        once their n_occ total exceeds LOCAL_FAST_MAX_OCC, so a hot term
+        falls back to the distributed path after ~one extra batch. The
         small-enough verdict memoizes per term set on the handle
-        (segments are immutable): a known-hot set skips the IO
-        entirely on repeat queries. The decoded frame itself is also
-        memoized per full filter key (bounded LRU): a repeated lookup
-        — or 16 concurrent rank queries sharing a handle — costs zero
+        (segments are immutable): a known-hot set skips the IO entirely
+        on repeat queries. The scanned blocks then take the same
+        metadata predicate as the Spark scan (_block_predicate) and
+        decode with the same kernel (B.decode_postings), so both paths
+        return identical rows. The decoded table is memoized per full
+        filter key (bounded, 64 entries): a repeated lookup — or 16
+        concurrent rank queries sharing a handle — costs zero
         pyarrow/decode work on the GIL-bound driver thread after the
         first."""
-        try:
-            import pyarrow.dataset as pads
-        except Exception:  # pragma: no cover - pyarrow is a hard dep
+        if self.mode not in BLOCK_MODES or not _local_fast_enabled():
             return None
-        cache = getattr(self, "_local_occ_cache", None)
-        if cache is None:
-            cache = {}
-            setattr(self, "_local_occ_cache", cache)
-        pdf_cache = getattr(self, "_local_pdf_cache", None)
-        if pdf_cache is None:
-            pdf_cache = {}
-            setattr(self, "_local_pdf_cache", pdf_cache)
-        pdf_key = (
-            tuple(sorted(set(terms))),
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        key = tuple(sorted(set(terms)))
+        memo_key = (
+            key,
             min_doc,
             tuple(doc_ranges) if doc_ranges is not None else None,
             tuple(sorted(block_first_docs))
             if block_first_docs is not None
             else None,
         )
-        if pdf_key in pdf_cache:
-            return pdf_cache[pdf_key]
-        import numpy as np
-        import pandas as pd
-
-        def memo(pdf):
-            # lock: 16 concurrent rank queries share a handle; an
-            # unguarded pop(next(iter(...))) raced a concurrent insert
-            # (double-pop KeyError / resize-during-iteration — ADVICE r5)
-            with self._cache_lock:
-                if len(pdf_cache) >= 64:  # bounded: drop the oldest entry
-                    oldest = next(iter(pdf_cache), None)
-                    if oldest is not None:
-                        pdf_cache.pop(oldest, None)
-                pdf_cache[pdf_key] = pdf
-            return pdf
-
-        key = tuple(sorted(set(terms)))
-        if cache.get(key) is False:  # known too hot for the fast path
+        memo = self._local_postings_cache
+        tbl = memo.get(memo_key)
+        if tbl is not None or self._local_occ_cache.get(key) is False:
+            return tbl  # memoized, or known too hot for the fast path
+        blocks = self._budgeted_scan(
+            terms,
+            ["term", "first_doc", "last_doc", "n_occ", "payload"],
+            lambda rb: int(rb.column("n_occ").to_numpy(zero_copy_only=False).sum()),
+            LOCAL_FAST_MAX_OCC,
+        )
+        if blocks is None:
             return None
-        dataset = self._local_dataset(terms)
-        if dataset is None:
-            # no listable block files on the driver: report "fast path
-            # unavailable" (None -> distributed read), NOT "terms
-            # absent" (empty frame) — a driver/executor filesystem
-            # visibility mismatch would otherwise turn exact-term
-            # lookups, term_doc_ids and the conjunction doc filter
-            # silently wrong-empty (ADVICE r5 medium; the same
-            # None-vs-empty rule block_doc_ranges adopted in r4)
+        self._local_occ_cache[key] = blocks is not False
+        if blocks is False:
             return None
-        flt = pads.field("term").isin(terms)
-        scanner = dataset.scanner(
-            columns=["term", "n_occ", "payload"], filter=flt
+        pred = _block_predicate(
+            pc.field, pc.scalar, min_doc, doc_ranges, block_first_docs
         )
-        batches, total = [], 0
-        for rb in scanner.to_batches():
-            if rb.num_rows == 0:
-                continue
-            total += int(np.sum(rb.column(1).to_numpy(zero_copy_only=False)))
-            if total > LOCAL_FAST_MAX_OCC:
-                cache[key] = False
-                return None
-            batches.append(rb)
-        cache[key] = True
-        decode_block = B._block_codec(self.mode)[1]
-        bfd_set = (
-            {int(x) for x in block_first_docs}
-            if block_first_docs is not None
-            else None
+        if pred is not None:
+            blocks = blocks.filter(pred)
+        tbl = pa.Table.from_batches(
+            [
+                B.decode_postings(
+                    blocks.column("term").combine_chunks(),
+                    blocks.column("payload").combine_chunks(),
+                    self.mode,
+                    min_doc,
+                )
+            ]
         )
-        out_term, out_doc, out_field, out_pos, out_tf = [], [], [], [], []
-        for term, payload in (
-            (t, p)
-            for rb in batches
-            for t, p in zip(rb.column(0).to_pylist(), rb.column(2).to_pylist())
-        ):
-            docs, fields, pos = decode_block(bytes(payload))
-            if bfd_set is not None and len(docs) and int(docs[0]) not in bfd_set:
-                continue  # same first_doc IN filter as the distributed path
-            if doc_ranges is not None and len(docs):
-                # same block-granularity window filter as the
-                # distributed path (keep the whole block iff its
-                # [min, max] doc span overlaps any window — docs are
-                # sorted, and block first/last_doc ARE that span; the
-                # check runs on the UNTRIMMED span, before the min_doc
-                # row filter, so both paths keep the same blocks —
-                # ADVICE r4), so both paths return identical rows
-                if not any(
-                    docs[0] <= hi and docs[-1] >= lo for lo, hi in doc_ranges
-                ):
-                    continue
-            if min_doc is not None:
-                keep = docs >= min_doc
-                docs, fields, pos = docs[keep], fields[keep], pos[keep]
-            if len(docs) == 0:
-                continue
-            bnd = np.empty(len(docs), dtype=bool)
-            bnd[0] = True
-            bnd[1:] = (docs[1:] != docs[:-1]) | (fields[1:] != fields[:-1])
-            starts = np.nonzero(bnd)[0]
-            ends = np.append(starts[1:], len(docs))
-            for s, e in zip(starts, ends):
-                out_term.append(term)
-                out_doc.append(int(docs[s]))
-                out_field.append(int(fields[s]))
-                out_pos.append(pos[s:e].astype(np.int32).tolist())
-                out_tf.append(int(e - s))
-        return memo(
-            pd.DataFrame(
-                {
-                    "term": out_term,
-                    "doc_id": pd.Series(out_doc, dtype="int64"),
-                    "field_id": pd.Series(out_field, dtype="int32"),
-                    "positions": out_pos,
-                    "tf": pd.Series(out_tf, dtype="int32"),
-                }
-            )
-        )
+        # lock: 16 concurrent rank queries share a handle; an unguarded
+        # pop(next(iter(...))) raced a concurrent insert (double-pop
+        # KeyError / resize-during-iteration — ADVICE r5)
+        with self._cache_lock:
+            if len(memo) >= 64:  # bounded: drop the oldest entry
+                memo.pop(next(iter(memo)))
+            memo[memo_key] = tbl
+        return tbl
 
     def _buckets_of(self, terms: list[str]) -> list[int]:
         """Bucket ids for exact terms — computed on the driver with the

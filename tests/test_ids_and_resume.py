@@ -143,3 +143,33 @@ def test_block_rows_and_results_do_not_depend_on_width(spark, tmp_path, monkeypa
     assert seen[0][0] == seen[1][0]
     assert seen[0][1] == seen[1][1]
     assert seen[0][2] == seen[1][2]
+
+
+@pytest.mark.parametrize("preassigned", [False, True])
+def test_empty_input_commits_no_segment(spark, tmp_path, preassigned):
+    """A build over zero rows commits no segment: on a fresh root it
+    raises a ValueError naming the input and writes no manifest; as an
+    append it returns the manifest unchanged."""
+    from pyspark.sql import functions as F
+
+    if preassigned:
+        pages = spark.range(1, 11).select(
+            F.col("id").alias("doc_id"), F.lit("some text").alias("text")
+        )
+    else:
+        pages = pms_corpus_pages(spark, (1,))
+    empty = pages.where("false")
+    fresh = str(tmp_path / "fresh")
+    with pytest.raises(ValueError, match="empty input.*no pages"):
+        build_index(spark, empty, fresh, input_desc="no pages", preassigned_ids=preassigned)
+    assert not os.path.exists(os.path.join(fresh, "manifest.json"))
+
+    root = str(tmp_path / "append")
+    first = build_index(spark, pages, root, preassigned_ids=preassigned)
+    with open(os.path.join(root, "manifest.json")) as f:
+        before = f.read()
+    again = build_index(spark, empty, root, preassigned_ids=preassigned)
+    with open(os.path.join(root, "manifest.json")) as f:
+        assert f.read() == before
+    assert again == first and len(again["segments"]) == 1
+    assert not os.path.exists(os.path.join(root, "seg_00002"))

@@ -77,35 +77,61 @@ def test_local_fast_path_zero_jobs(spark, idx):
     assert got <= 1, got
 
 
-def test_local_fast_path_matches_distributed(spark, pms_index_roots, monkeypatch):
-    """Fast-path rows are identical to the distributed decode, and a
-    term over the occurrence cap falls back to the Spark path."""
+def _posting_rows(df) -> list[tuple]:
+    return sorted(
+        (r["term"], r["doc_id"], r["field_id"], tuple(r["positions"]), r["tf"])
+        for r in df.collect()
+    )
+
+
+def _scans_parquet(df) -> bool:
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return "Scan parquet" in plan or "FileScan" in plan
+
+
+@pytest.mark.parametrize("mode", ["blocks", "groupvarint", "packedints", "binary"])
+def test_local_fast_path_matches_distributed(spark, pms_index_roots, monkeypatch, mode):
+    """Fast-path rows are identical to the distributed decode under
+    every block-metadata filter (none, min_doc, doc_ranges,
+    block_first_docs, doc_ranges + min_doc), and a term over the
+    occurrence cap falls back to the Spark path."""
     from fulltextsearch_spark.sources import index_io
 
-    idx_fast = Index.open(spark, pms_index_roots["blocks"])
-    fast = sorted(
-        (r["term"], r["doc_id"], r["field_id"], list(r["positions"]), r["tf"])
-        for r in idx_fast.postings(exact_terms=["this", "test"]).collect()
-    )
+    terms = ["this", "test"]
+    idx_fast = Index.open(spark, pms_index_roots[mode])
+    firsts = sorted(set(idx_fast.local_block_meta(terms).column("first_doc").to_pylist()))
+    docs = sorted({r["doc_id"] for r in idx_fast.postings(exact_terms=terms).collect()})
+    mid = docs[len(docs) // 2]
+    filters = {
+        "none": {},
+        "min_doc": {"min_doc": mid},
+        "doc_ranges": {"doc_ranges": [(docs[0], docs[0]), (mid, mid)]},
+        "block_first_docs": {"block_first_docs": firsts[1::2]},
+        "doc_ranges+min_doc": {"doc_ranges": [(mid, mid)], "min_doc": mid},
+    }
+    fast = {}
+    for name, kw in filters.items():
+        df = idx_fast.postings(exact_terms=terms, **kw)
+        assert not _scans_parquet(df), name  # the driver read served it
+        fast[name] = _posting_rows(df)
     monkeypatch.setenv("FTS_NO_LOCAL_FAST_PATH", "1")
-    idx_dist = Index.open(spark, pms_index_roots["blocks"])
-    dist = sorted(
-        (r["term"], r["doc_id"], r["field_id"], list(r["positions"]), r["tf"])
-        for r in idx_dist.postings(exact_terms=["this", "test"]).collect()
-    )
-    assert fast == dist and fast
+    idx_dist = Index.open(spark, pms_index_roots[mode])
+    for name, kw in filters.items():
+        df = idx_dist.postings(exact_terms=terms, **kw)
+        assert _scans_parquet(df), name
+        assert _posting_rows(df) == fast[name], name
+    # every filter keeps some rows and drops others
+    for name in filters:
+        assert fast[name], name
+        if name != "none":
+            assert set(fast[name]) < set(fast["none"]), name
     monkeypatch.delenv("FTS_NO_LOCAL_FAST_PATH")
     # over-cap terms must route to the distributed scan (plan has a scan)
     monkeypatch.setattr(index_io, "LOCAL_FAST_MAX_OCC", 0)
-    idx_cap = Index.open(spark, pms_index_roots["blocks"])
+    idx_cap = Index.open(spark, pms_index_roots[mode])
     df = idx_cap.postings(exact_terms=["this"])
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "Scan parquet" in plan or "FileScan" in plan
-    capped = sorted(
-        (r["term"], r["doc_id"], r["field_id"], list(r["positions"]), r["tf"])
-        for r in df.collect()
-    )
-    assert capped == sorted(t for t in fast if t[0] == "this")
+    assert _scans_parquet(df)
+    assert _posting_rows(df) == [t for t in fast["none"] if t[0] == "this"]
 
 
 def test_local_fast_path_min_doc_seek(spark, idx):
