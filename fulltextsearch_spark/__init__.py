@@ -4,7 +4,8 @@ A brand-new engine with the query/data-processing capabilities of the
 reference full-text search engine (PetroProtsyk/FullTextSearch, C#,
 surveyed in /root/repo/SURVEY.md), re-expressed Spark-first:
 
-- tokenization / text extraction: vectorized pandas (Arrow) UDFs
+- tokenization: one batch kernel behind Arrow UDFs; text extraction: a
+  vectorized pandas (Arrow) UDF
 - index build: DataFrame groupBy/shuffle producing posting-list tables
   with delta+varint block compression and block-max skip metadata
 - query: Boolean AND/OR/phrase + wildcard/fuzzy term expansion as

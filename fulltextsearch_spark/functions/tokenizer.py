@@ -20,20 +20,24 @@ SURVEY.md §2.B1):
 - Token positions are 1-based per (doc, field)
   (FullTextIndexBuilder.cs:100-111).
 
-Implementation is numpy-vectorized over code units with two 65536-entry
-lookup tables (token-char class, simple lowercase); no per-row Python in
-the Spark path — the pandas UDF processes Arrow batches.
+One kernel, ``tokenize_batch``, tokenizes a whole Arrow batch of texts
+in a constant number of numpy passes over its UTF-16 code units, with
+two 65536-entry lookup tables (token-char class, simple lowercase); the
+batch's distinct terms come out as one Arrow string array. Every
+tokenize caller is a view of it: ``tokenize_text`` (one document), the
+Arrow UDFs below and the build's tokenize pass (operators/build.py).
 """
 
 from __future__ import annotations
 
-import sys
 import unicodedata
+from typing import NamedTuple
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_type
 
 from fulltextsearch_spark import MAX_TOKEN_SIZE
 
@@ -48,7 +52,7 @@ def _tables() -> tuple[np.ndarray, np.ndarray]:
     global _TOKEN_TABLE, _LOWER_TABLE
     if _TOKEN_TABLE is None:
         tok = np.zeros(0x10000, dtype=bool)
-        low = np.arange(0x10000, dtype=np.uint32)
+        low = np.arange(0x10000, dtype="<u2")
         for cp in range(0x10000):
             ch = chr(cp)
             cat = unicodedata.category(ch)
@@ -61,35 +65,109 @@ def _tables() -> tuple[np.ndarray, np.ndarray]:
     return _TOKEN_TABLE, _LOWER_TABLE
 
 
+class TokenBatch(NamedTuple):
+    """A batch's tokens, doc after doc: token i's term is
+    ``terms[codes[i]]``, and doc j holds ``counts[j]`` tokens."""
+
+    codes: np.ndarray  # int32 term code per token, in first-seen order
+    terms: pa.Array  # pa.string(): the batch's distinct terms
+    counts: np.ndarray  # int64 tokens per doc (0 for a None or "" text)
+    offs: np.ndarray  # int64 UTF-16 start offset of each token in its doc
+    lens: np.ndarray  # int64 full run length of each token, UTF-16 units
+
+    def pos(self) -> np.ndarray:
+        """1-based token id of each token within its doc (int64)."""
+        doc_at = np.repeat(_prefix(self.counts)[:-1], self.counts)
+        return np.arange(len(self.codes)) - doc_at + 1
+
+
+def binary_buffers(arr) -> tuple[np.ndarray, np.ndarray]:
+    """(int64 offsets from 0, uint8 data) of an Arrow (large) binary or
+    string array, zero-copy: value i is data[offsets[i]:offsets[i+1]]."""
+    bufs = arr.buffers()
+    large = pa.types.is_large_binary(arr.type) or pa.types.is_large_string(arr.type)
+    width = 8 if large else 4
+    offsets = np.frombuffer(
+        bufs[1], dtype=f"<i{width}", count=len(arr) + 1, offset=arr.offset * width
+    ).astype(np.int64)
+    if bufs[2] is None:
+        return offsets - offsets[0], np.empty(0, dtype=np.uint8)
+    data = np.frombuffer(bufs[2], dtype=np.uint8)[offsets[0] : offsets[-1]]
+    return offsets - offsets[0], data
+
+
+def _prefix(widths: np.ndarray) -> np.ndarray:
+    """0, then the running sums of ``widths`` (int64)."""
+    at = np.zeros(len(widths) + 1, dtype=np.int64)
+    np.cumsum(widths, out=at[1:])
+    return at
+
+
+def tokenize_batch(texts, max_token_size: int = MAX_TOKEN_SIZE) -> TokenBatch:
+    """Tokenize a batch of texts (an Arrow string array, or a sequence
+    of ``str`` / None) → TokenBatch.
+
+    The texts' UTF-8 bytes are decoded to UTF-16 units in one call, and
+    each text's unit offset follows from its bytes (a lead byte starts
+    one unit, a 4-byte lead two). One mask pass finds every token run,
+    cut at text starts so no token spans two docs; one gather collects
+    the truncated, lowercased units of all tokens; one dictionary
+    encode assigns term codes; the distinct terms alone go back to
+    UTF-8, in one encode whose offsets come from each unit's 1/2/3-byte
+    width (tokens hold no surrogates)."""
+    if not isinstance(texts, pa.Array):
+        texts = pa.array(texts, type=pa.string())
+    offsets, data = binary_buffers(texts.fill_null(""))
+    doc_at = _prefix((data & 0xC0 != 0x80).astype(np.int64) + (data >= 0xF0))[offsets]
+    u16 = np.frombuffer(str(data, "utf-8").encode("utf-16-le"), dtype="<u2")
+    tok_table, low_table = _tables()
+    mask = tok_table[u16]
+    cut = np.zeros(len(u16) + 1, dtype=bool)  # cut[i]: a text starts at unit i
+    cut[doc_at] = True
+    m = np.zeros(len(u16) + 2, dtype=bool)
+    m[1:-1] = mask
+    starts = np.flatnonzero(mask & (~m[:-2] | cut[:-1]))
+    ends = np.flatnonzero(mask & (~m[2:] | cut[1:])) + 1
+    counts = np.diff(np.searchsorted(starts, doc_at))
+
+    kept = np.minimum(ends - starts, max_token_size)
+    kept_at = _prefix(kept)
+    lows = low_table[u16[np.repeat(starts - kept_at[:-1], kept) + np.arange(kept_at[-1])]]
+    dic = pa.Array.from_buffers(
+        pa.large_binary(), len(kept), [None, pa.py_buffer(2 * kept_at), pa.py_buffer(lows)]
+    ).dictionary_encode()
+    d_offsets, d_data = binary_buffers(dic.dictionary)
+    d16 = d_data.view("<u2")
+    utf8_at = _prefix(1 + (d16 >= 0x80).astype(np.int64) + (d16 >= 0x800))
+    terms = pa.Array.from_buffers(
+        pa.string(),
+        len(dic.dictionary),
+        [
+            None,
+            pa.py_buffer(utf8_at[d_offsets // 2].astype(np.int32)),
+            pa.py_buffer(str(d16, "utf-16-le").encode("utf-8")),
+        ],
+    )
+    return TokenBatch(
+        dic.indices.to_numpy(),
+        terms,
+        counts,
+        starts - np.repeat(doc_at[:-1], counts),
+        ends - starts,
+    )
+
+
 def tokenize_text(
-    text: str, max_token_size: int = MAX_TOKEN_SIZE
+    text: str | None, max_token_size: int = MAX_TOKEN_SIZE
 ) -> tuple[list[str], np.ndarray, np.ndarray]:
-    """Tokenize one string → (terms, offsets, lengths).
+    """Tokenize one string → (terms, offsets, lengths): the one-document
+    view of tokenize_batch.
 
     Offsets/lengths are in UTF-16 code units, exactly like the
     reference's ``ScopedToken(startOffset, length, buffer)``.
     """
-    tok_table, low_table = _tables()
-    if not text:
-        return [], np.empty(0, np.int64), np.empty(0, np.int64)
-    u16 = np.frombuffer(text.encode("utf-16-le"), dtype=np.uint16)
-    mask = tok_table[u16]
-    if not mask.any():
-        return [], np.empty(0, np.int64), np.empty(0, np.int64)
-    padded = np.empty(len(mask) + 2, dtype=np.int8)
-    padded[0] = padded[-1] = 0
-    padded[1:-1] = mask
-    d = np.diff(padded)
-    starts = np.nonzero(d == 1)[0]
-    ends = np.nonzero(d == -1)[0]
-    lows = low_table[u16].astype("<u2")
-    terms = [
-        lows[s : min(e, s + max_token_size)]
-        .tobytes()
-        .decode("utf-16-le", "surrogatepass")
-        for s, e in zip(starts, ends)
-    ]
-    return terms, starts, ends - starts
+    tb = tokenize_batch([text], max_token_size)
+    return tb.terms.take(tb.codes).to_pylist(), tb.offs, tb.lens
 
 
 TOKEN_STRUCT = T.StructType(
@@ -101,39 +179,33 @@ TOKEN_STRUCT = T.StructType(
     ]
 )
 TOKENS_TYPE = T.ArrayType(TOKEN_STRUCT, False)
+TERMS_TYPE = T.ArrayType(T.StringType(), False)
 
 
-@F.pandas_udf(TOKENS_TYPE)
-def tokenize_udf(texts: pd.Series) -> pd.Series:
-    """pandas UDF: text → array<struct<term,pos,off,len>> (Arrow batched)."""
-    out = []
-    for text in texts:
-        if text is None:
-            out.append([])
-            continue
-        terms, offs, lens = tokenize_text(text)
-        out.append(
-            [
-                {"term": t, "pos": i + 1, "off": int(o), "len": int(ln)}
-                for i, (t, o, ln) in enumerate(zip(terms, offs, lens))
-            ]
-        )
-    return pd.Series(out)
+def _token_lists(tb: TokenBatch, values: pa.Array, list_type: T.DataType) -> pa.Array:
+    """One list per doc of the batch, over per-token ``values``."""
+    offsets = pa.array(_prefix(tb.counts), type=pa.int32())
+    return pa.ListArray.from_arrays(offsets, values, type=to_arrow_type(list_type))
 
 
-@F.pandas_udf(T.ArrayType(T.StringType(), False))
-def tokenize_terms_udf(texts: pd.Series) -> pd.Series:
-    """Cheaper variant: text → array<string> of terms only (no offsets)."""
-    out = []
-    for text in texts:
-        out.append([] if text is None else tokenize_text(text)[0])
-    return pd.Series(out)
+@F.arrow_udf(TOKENS_TYPE)
+def tokenize_udf(texts: pa.Array) -> pa.Array:
+    """Arrow UDF: text → array<struct<term,pos,off,len>>; a None text
+    gives []."""
+    tb = tokenize_batch(texts)
+    tokens = pa.StructArray.from_arrays(
+        [
+            tb.terms.take(tb.codes),
+            *(pa.array(v, type=pa.int32()) for v in (tb.pos(), tb.offs, tb.lens)),
+        ],
+        fields=list(to_arrow_type(TOKEN_STRUCT)),
+    )
+    return _token_lists(tb, tokens, TOKENS_TYPE)
 
 
-def main() -> None:  # pragma: no cover - debug helper
-    for line in sys.stdin:
-        print(tokenize_text(line.rstrip("\n")))
-
-
-if __name__ == "__main__":  # pragma: no cover
-    main()
+@F.arrow_udf(TERMS_TYPE)
+def tokenize_terms_udf(texts: pa.Array) -> pa.Array:
+    """Cheaper variant: text → array<string> of terms only (no
+    offsets); a None text gives []."""
+    tb = tokenize_batch(texts)
+    return _token_lists(tb, tb.terms.take(tb.codes), TERMS_TYPE)

@@ -35,7 +35,7 @@ from pyspark.sql import functions as F
 from fulltextsearch_spark import BM25_B, BM25_K1
 from fulltextsearch_spark.plans import parser
 from fulltextsearch_spark.plans.ast import AstQuery, EditAst, FuncAst, WildAst, WordAst
-from fulltextsearch_spark.plans.planner import expanded_postings, plan_node
+from fulltextsearch_spark.plans.planner import doc_id_span, expanded_postings, plan_node
 
 
 def _idf_col(n_docs: int):
@@ -300,25 +300,6 @@ WAND_THETA_EST_FRAC = 0.8
 WAND_ROUNDTRIP_OVERHEAD_BLOCKS = 64
 
 
-def _id_span(index, n_docs: int) -> int:
-    """Doc-id upper bound + 1 for the alignment grid — the manifest's
-    committed doc_id_range high water (zero Spark jobs). Falls back to
-    n_docs for handles without a manifest (memory indexes). Sparse
-    preassigned ids (build_index allows them) make n_docs alone wrong:
-    cell width would collapse and the grid explode could emit millions of
-    cells per block (ADVICE r3 medium)."""
-    manifest = getattr(index, "manifest", None) or {}
-    id_hi = max(
-        (
-            s["doc_id_range"][1]
-            for s in manifest.get("segments", [])
-            if s.get("committed")
-        ),
-        default=n_docs - 1,
-    )
-    return max(id_hi + 1, n_docs, 1)
-
-
 def _wand_eligible(index, terms: list[str] | None, force: bool | None) -> bool:
     """WAND needs a blocks-mode index, single- or multi-field: impact tf
     is the per-doc tf SUMMED over fields and blocks never split a doc,
@@ -477,8 +458,11 @@ def _rank_wand_driver_cp(
         seed_blocks = np.argsort(-ub, kind="stable")[:n_seed]
     else:
         # doc-range-grid residuals (see rank_terms_wand docstring for
-        # the math)
-        cell_w = max(1, -(-_id_span(index, n_docs) // GRID_CELLS))
+        # the math); the grid spans the doc-id range, as sparse
+        # preassigned ids would collapse a cell width from n_docs and
+        # the explode below could emit millions of cells per block
+        span = max(doc_id_span(index), n_docs, 1)
+        cell_w = max(1, -(-span // GRID_CELLS))
         c0 = first // cell_w
         c1 = last // cell_w
         cnt = (c1 - c0 + 1).astype(np.int64)

@@ -5,15 +5,20 @@ Spark-first re-expression of the reference build pipeline (SURVEY.md
 ``SortedDictionary<string, List<Occurrence>>`` doc-by-doc
 (FullTextIndexBuilder.cs:11,97-115) and flushes term-ordered posting
 lists (C2). Here a posting's positions all live inside one document, so
-the per-doc assembly happens inside the tokenize pass itself, and the
-build has at most one full-data shuffle:
+posting rows are complete once an Arrow batch is tokenized, and the
+build has at most one full-data shuffle. Both layouts start from the
+same batch step, _posting_rows: ONE tokenize_batch call (the batch
+tokenize kernel, functions/tokenizer.py) and ONE lexsort of the batch's
+tokens by (term code, doc), cut into (term, doc) rows:
 
-    blocks modes:  tokenize_packed_runs   (mapInArrow, narrow: one packed
-                                           run per (batch, term, doc group))
+    blocks modes:  tokenize_packed_runs   (mapInArrow, narrow: the rows
+                                           cut into one packed run per
+                                           (batch, term, doc group))
                      → assemble_packed_blocks (THE shuffle, keyed by
                                            (bucket, term, doc group); sort,
                                            cut, encode; write by bucket)
-    arrays mode:   tokenize_postings      (mapInArrow, narrow: posting rows)
+    arrays mode:   tokenize_postings      (mapInArrow, narrow: the rows
+                                           as posting rows)
                      → bucketed write     (repartition by (bucket, term))
 
 Doc/collection statistics (df, cf, dl) fall out as cheap follow-up
@@ -28,15 +33,84 @@ hard parts).
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from fulltextsearch_spark.functions.tokenizer import binary_buffers, tokenize_batch
+
 # Sentinel "term" for per-document position-vector rows carried inside
 # the postings table (see tokenize_postings emit_doc_positions). The
 # tokenizer never emits an empty-string token, so "" cannot collide.
 DP_TERM = ""
+
+
+class _PostingRows(NamedTuple):
+    """One Arrow batch's (term, doc) posting rows in (term code, doc)
+    order, and the doc-position vectors of its docs that hold a token."""
+
+    terms: object  # pa.string term dictionary of the batch
+    code: np.ndarray  # row → term code
+    doc: np.ndarray  # row → doc id
+    tf: np.ndarray  # row → occurrences (int64)
+    dl: np.ndarray  # row → its doc's token count (int64)
+    pos: np.ndarray  # 1-based token ids, row after row (int32)
+    dp_doc: np.ndarray  # doc id of each doc with a token
+    dp_n: np.ndarray  # its token count (int64)
+    dp_flat: np.ndarray  # their (off+1, off+1+len) vectors back to back
+
+
+def _posting_rows(doc_ids: np.ndarray, texts) -> _PostingRows | None:
+    """A batch's posting rows from ONE tokenize_batch call: one int
+    lexsort of all tokens by (term code, doc) — stable, so positions
+    stay ascending inside a row — then rows cut where the key changes.
+    None when the batch holds no token."""
+    tb = tokenize_batch(texts)
+    n_occ = len(tb.codes)
+    if n_occ == 0:
+        return None
+    counts = tb.counts
+    occ_doc = np.repeat(doc_ids, counts)
+    order = np.lexsort((occ_doc, tb.codes))
+    code, doc = tb.codes[order], occ_doc[order]
+    starts = _starts(code, doc)
+    has = counts > 0
+    flat = np.empty(2 * n_occ, dtype=np.int32)
+    flat[0::2] = tb.offs + 1
+    flat[1::2] = tb.offs + 1 + tb.lens
+    return _PostingRows(
+        tb.terms,
+        code[starts],
+        doc[starts],
+        np.diff(np.append(starts, n_occ)),
+        np.repeat(counts, counts)[order[starts]],
+        tb.pos()[order].astype(np.int32),
+        doc_ids[has],
+        counts[has],
+        flat,
+    )
+
+
+def _posting_batch(terms, docs, field_id: int, rowlen, flat, tf):
+    """One POSTING_SCHEMA Arrow batch: row i's positions are the next
+    ``rowlen[i]`` values of ``flat``."""
+    import pyarrow as pa
+
+    offsets = np.zeros(len(docs) + 1, dtype=np.int32)
+    np.cumsum(rowlen, out=offsets[1:])
+    return pa.RecordBatch.from_arrays(
+        [
+            terms,
+            pa.array(docs, type=pa.int64()),
+            pa.array(np.full(len(docs), field_id, dtype=np.int32)),
+            pa.ListArray.from_arrays(offsets, pa.array(flat, type=pa.int32())),
+            pa.array(tf, type=pa.int32()),
+        ],
+        names=POSTING_SCHEMA.fieldNames(),
+    )
 
 
 def tokenize_postings(
@@ -47,96 +121,39 @@ def tokenize_postings(
     """pages(+doc_id) → posting rows directly, no shuffle.
 
     A (term, doc, field) posting's positions all live inside one
-    document, so the per-doc assembly (sort terms, group, slice
-    positions) can happen inside the tokenize pass itself — the
-    reference does exactly this with its per-document SortedDictionary
-    fill (FullTextIndexBuilder.cs:97-115). This removes the
-    groupBy(term, doc, field) shuffle and its collect_list aggregation
-    from the build entirely; the only remaining wide op is the
-    bucket-write repartition.
+    document, so the posting rows of an Arrow batch are complete once
+    the batch is tokenized (_posting_rows) — the reference does the
+    same per-document SortedDictionary fill (FullTextIndexBuilder.cs:
+    97-115). No groupBy(term, doc, field) shuffle runs; the only wide op
+    is the bucket-write repartition.
 
     ``emit_doc_positions=True`` additionally yields ONE sentinel row per
     (doc, field) with term=DP_TERM, tf=0 and positions = the flat
     even/odd (off+1, off+1+len) vector (reference's document position
     list, FullTextIndexBuilder.cs:99-114) — so the doc-positions table
-    falls out of the SAME single tokenize pass instead of a second full
-    pass over the corpus.
-
-    Implemented with mapInArrow, not mapInPandas: the positions column
-    is built as ONE pyarrow ListArray per batch from flat (offsets,
-    values) numpy arrays — zero per-row Python lists. The mapInPandas
-    version allocated ~one Python list per posting row (~millions per
-    100k docs), which dominated the stage cost and, being pure memory
-    allocation, scaled poorly across cores.
+    falls out of the SAME single tokenize pass.
 
     Output: POSTING_SCHEMA (term, doc_id, field_id, positions, tf).
     """
     import pyarrow as pa
 
-    from fulltextsearch_spark.functions.tokenizer import tokenize_text
-
     def run(batches):
-        dp_term = np.array([DP_TERM], dtype=object)
         for rb in batches:
-            doc_ids = rb.column(0).to_numpy()
-            texts = rb.column(1).to_pylist()
-            terms_parts, docs_parts = [], []
-            row_lens_parts, vals_parts, tf_parts = [], [], []
-            for doc_id, text in zip(doc_ids, texts):
-                if text is None:
-                    continue
-                terms, offs, lens = tokenize_text(text)
-                n = len(terms)
-                if n == 0:
-                    continue
-                if emit_doc_positions:
-                    flat = np.empty(2 * n, dtype=np.int32)
-                    flat[0::2] = offs + 1
-                    flat[1::2] = offs + 1 + lens
-                    terms_parts.append(dp_term)
-                    docs_parts.append(np.array([doc_id], dtype=np.int64))
-                    row_lens_parts.append(
-                        np.array([2 * n], dtype=np.int64)
-                    )
-                    vals_parts.append(flat)
-                    tf_parts.append(np.zeros(1, dtype=np.int32))
-                arr = np.array(terms, dtype=object)
-                order = np.argsort(arr, kind="stable")
-                sorted_terms = arr[order]
-                pos_sorted = (order + 1).astype(np.int32)  # 1-based token ids
-                bnd = np.empty(n, dtype=bool)
-                bnd[0] = True
-                bnd[1:] = sorted_terms[1:] != sorted_terms[:-1]
-                starts = np.nonzero(bnd)[0]
-                ends = np.append(starts[1:], n)
-                tf = (ends - starts).astype(np.int64)
-                terms_parts.append(sorted_terms[starts])
-                docs_parts.append(np.full(len(starts), doc_id, dtype=np.int64))
-                row_lens_parts.append(tf)
-                vals_parts.append(pos_sorted)
-                tf_parts.append(tf.astype(np.int32))
-            if not terms_parts:
+            r = _posting_rows(rb.column(0).to_numpy(), rb.column(1))
+            if r is None:
                 continue
-            docs_all = np.concatenate(docs_parts)
-            row_lens = np.concatenate(row_lens_parts)
-            offsets = np.zeros(len(row_lens) + 1, dtype=np.int64)
-            np.cumsum(row_lens, out=offsets[1:])
-            positions = pa.ListArray.from_arrays(
-                pa.array(offsets.astype(np.int32)),
-                pa.array(np.concatenate(vals_parts), type=pa.int32()),
+            yield _posting_batch(
+                r.terms.take(r.code), r.doc, field_id, r.tf, r.pos, r.tf
             )
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(np.concatenate(terms_parts), type=pa.string()),
-                    pa.array(docs_all, type=pa.int64()),
-                    pa.array(
-                        np.full(len(docs_all), field_id, dtype=np.int32)
-                    ),
-                    positions,
-                    pa.array(np.concatenate(tf_parts), type=pa.int32()),
-                ],
-                names=["term", "doc_id", "field_id", "positions", "tf"],
-            )
+            if emit_doc_positions:
+                yield _posting_batch(
+                    pa.repeat(DP_TERM, len(r.dp_doc)),
+                    r.dp_doc,
+                    field_id,
+                    2 * r.dp_n,
+                    r.dp_flat,
+                    np.zeros(len(r.dp_doc), dtype=np.int32),
+                )
 
     return pages_with_ids.select("doc_id", "text").mapInArrow(
         run, POSTING_SCHEMA
@@ -250,24 +267,6 @@ def _block_codec(codec: str):
     return C.encode_blocks, C.decode_block
 
 
-def _binary_buffers(arr) -> tuple[np.ndarray, np.ndarray]:
-    """(int64 offsets, uint8 data) of an Arrow binary array, zero-copy:
-    value i is data[offsets[i]:offsets[i+1]]."""
-    import pyarrow as pa
-
-    bufs = arr.buffers()
-    width = 8 if pa.types.is_large_binary(arr.type) else 4
-    offsets = np.frombuffer(
-        bufs[1], dtype=f"<i{width}", count=len(arr) + 1, offset=arr.offset * width
-    ).astype(np.int64)
-    data = (
-        np.frombuffer(bufs[2], dtype=np.uint8)
-        if bufs[2] is not None
-        else np.empty(0, dtype=np.uint8)
-    )
-    return offsets, data
-
-
 # ---------------------------------------------------------------------------
 # Packed-run build path (blocks-only layout). A row-granular pipeline
 # ships one JVM row per (term, doc, field) posting through TWO
@@ -373,9 +372,8 @@ def _unpack_runs(blobs):
     arrays (run index, docs, tfdl, fields, rowlen) in blob order, plus
     each row's first flat position as an index into ``words``, the
     blobs' buffer viewed as int32 words."""
-    offsets, data = _binary_buffers(blobs)
-    data = data[offsets[0] : offsets[-1]]
-    w_at = (offsets - offsets[0]) // 4
+    offsets, data = binary_buffers(blobs)
+    w_at = offsets // 4
     words = data[: len(data) // 4 * 4].view("<i4")
 
     def get64(at):
@@ -407,132 +405,58 @@ def _gather_flat(words, flat_at, rowlen):
     ]
 
 
-def tokenize_packed_runs(
-    pages_with_ids: DataFrame,
-    field_id: int = 1,
-    emit_doc_positions: bool = True,
-    doc_group_span: int = DOC_GROUP_SPAN,
-) -> DataFrame:
+def tokenize_packed_runs(pages_with_ids: DataFrame, field_id: int = 1) -> DataFrame:
     """pages(+doc_id) → packed posting RUNS (term, doc_grp, blob).
 
-    Per Arrow batch: tokenize each doc (the same tokenize_text kernel),
-    dictionary-encode the batch's tokens (Arrow C++ hash — replaces the
-    per-doc Python string argsort of tokenize_postings), one int
-    lexsort by (term code, doc), then cut per-(term, doc group) runs
-    out of the flat arrays and pack them all with one gather
-    (_pack_runs). Emitted term strings come from the batch dictionary
-    via Array.take — no per-token Python strings cross the boundary.
+    Per Arrow batch: the batch's posting rows (_posting_rows), cut into
+    per-(term, doc group) runs and packed with one gather (_pack_runs).
+    Emitted term strings come from the batch dictionary via
+    Array.take — no per-token Python strings cross the boundary.
     Sentinel doc-position rows pack DP_RUN_DOCS docs per run with the
     same blob layout (rowlen = vector length, tf = 0)."""
     import pyarrow as pa
 
-    from fulltextsearch_spark.functions.tokenizer import tokenize_text
-
     def run(batches):
         for rb in batches:
-            b_doc_ids = rb.column(0).to_numpy()
-            texts = rb.column(1).to_pylist()
-            all_terms: list = []
-            occ_doc_parts, occ_dl_parts = [], []
-            sent_docs, sent_vecs, sent_n = [], [], []
-            doc_lens: list[int] = []
-            for doc_id, text in zip(b_doc_ids, texts):
-                if text is None:
-                    continue
-                terms, offs, lens = tokenize_text(text)
-                n = len(terms)
-                if n == 0:
-                    continue
-                all_terms.extend(terms)
-                doc_lens.append(n)
-                occ_doc_parts.append(np.full(n, doc_id, dtype=np.int64))
-                occ_dl_parts.append(np.full(n, n, dtype=np.int64))
-                if emit_doc_positions:
-                    flatv = np.empty(2 * n, dtype=np.int32)
-                    flatv[0::2] = offs + 1
-                    flatv[1::2] = offs + 1 + lens
-                    sent_docs.append(doc_id)
-                    sent_vecs.append(flatv)
-                    sent_n.append(n)
-            if not all_terms:
+            r = _posting_rows(rb.column(0).to_numpy(), rb.column(1))
+            if r is None:
                 continue
-            occ_doc = np.concatenate(occ_doc_parts)
-            occ_dl = np.concatenate(occ_dl_parts)
-            n_occ = len(occ_doc)
-            dl_arr = np.array(doc_lens, dtype=np.int64)
-            dstarts = np.cumsum(dl_arr) - dl_arr
-            occ_pos = (
-                np.arange(n_occ, dtype=np.int64)
-                - np.repeat(dstarts, dl_arr)
-                + 1
-            ).astype(np.int32)
-            dic = pa.array(all_terms, type=pa.string()).dictionary_encode()
-            codes = dic.indices.to_numpy().astype(np.int64)
-            # primary term code, secondary doc; stable, so positions
-            # stay ascending within each (term, doc) row
-            order = np.lexsort((occ_doc, codes))
-            c = codes[order]
-            d_ = occ_doc[order]
-            p = occ_pos[order]
-            dl_s = occ_dl[order]
-            bnd = np.empty(n_occ, dtype=bool)
-            bnd[0] = True
-            bnd[1:] = (c[1:] != c[:-1]) | (d_[1:] != d_[:-1])
-            row_starts = np.nonzero(bnd)[0]
-            row_len = np.diff(np.append(row_starts, n_occ)).astype(np.int64)
-            row_doc = d_[row_starts]
-            row_code = c[row_starts]
-            row_tfdl = row_len + (dl_s[row_starts] << 32)
-            row_grp = row_doc // doc_group_span
-            n_rows = len(row_starts)
-            rbnd = np.empty(n_rows, dtype=bool)
-            rbnd[0] = True
-            rbnd[1:] = (row_code[1:] != row_code[:-1]) | (
-                row_grp[1:] != row_grp[:-1]
-            )
-            run_starts = np.nonzero(rbnd)[0]
-            term_col = dic.dictionary.take(
-                pa.array(row_code[run_starts], type=pa.int64())
-            )
+            grp = r.doc // DOC_GROUP_SPAN
+            run_starts = _starts(r.code, grp)
             yield pa.RecordBatch.from_arrays(
                 [
-                    term_col,
-                    pa.array(row_grp[run_starts], type=pa.int64()),
+                    r.terms.take(r.code[run_starts]),
+                    pa.array(grp[run_starts], type=pa.int64()),
                     _pack_runs(
                         run_starts,
-                        row_doc,
-                        row_tfdl,
-                        np.full(n_rows, field_id, dtype=np.int32),
-                        row_len.astype(np.int32),
-                        p,
+                        r.doc,
+                        r.tf + (r.dl << 32),
+                        np.full(len(r.doc), field_id, dtype=np.int32),
+                        r.tf.astype(np.int32),
+                        r.pos,
                     ),
                 ],
                 names=["term", "doc_grp", "blob"],
             )
-            if emit_doc_positions and sent_docs:
-                sdocs = np.array(sent_docs, dtype=np.int64)
-                sn = np.array(sent_n, dtype=np.int64)
-                dp_starts = np.arange(0, len(sdocs), DP_RUN_DOCS)
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(
-                            [DP_TERM] * len(dp_starts), type=pa.string()
-                        ),
-                        # doc_grp is only a shuffle salt for runs; the
-                        # assemble emits per-doc sentinel BLOCK rows
-                        # with doc_grp = doc_id
-                        pa.array(sdocs[dp_starts], type=pa.int64()),
-                        _pack_runs(
-                            dp_starts,
-                            sdocs,
-                            sn << 32,  # tf = 0, dl = n
-                            np.full(len(sdocs), field_id, dtype=np.int32),
-                            (2 * sn).astype(np.int32),
-                            np.concatenate(sent_vecs),
-                        ),
-                    ],
-                    names=["term", "doc_grp", "blob"],
-                )
+            dp_starts = np.arange(0, len(r.dp_doc), DP_RUN_DOCS)
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.repeat(DP_TERM, len(dp_starts)),
+                    # doc_grp is only a shuffle salt for runs; the
+                    # assemble emits per-doc sentinel BLOCK rows with
+                    # doc_grp = doc_id
+                    pa.array(r.dp_doc[dp_starts], type=pa.int64()),
+                    _pack_runs(
+                        dp_starts,
+                        r.dp_doc,
+                        r.dp_n << 32,  # tf = 0, dl = n
+                        np.full(len(r.dp_doc), field_id, dtype=np.int32),
+                        (2 * r.dp_n).astype(np.int32),
+                        r.dp_flat,
+                    ),
+                ],
+                names=["term", "doc_grp", "blob"],
+            )
 
     return pages_with_ids.select("doc_id", "text").mapInArrow(
         run, RUN_SCHEMA
@@ -779,9 +703,7 @@ def _assemble_sentinels(blobs, n_buckets: int, strip_payload: bool):
         )
         cols = {
             "bucket": np.full(n, n_buckets, dtype=np.int32),
-            "term": pa.array([DP_TERM], type=pa.string()).take(
-                pa.array(np.zeros(n, dtype=np.int64))
-            ),
+            "term": pa.repeat(DP_TERM, n),
             "doc_grp": docs[lo:hi],
             "block_no": fields[lo:hi],
             "first_doc": docs[lo:hi],
@@ -927,7 +849,7 @@ def decode_dp_blocks(blocks: DataFrame) -> DataFrame:
 
         for rb in batches:
             lens, flat = decode_positions_payloads(
-                *_binary_buffers(rb.column(2))
+                *binary_buffers(rb.column(2))
             )
             offsets = np.zeros(len(lens) + 1, dtype=np.int32)
             np.cumsum(lens, out=offsets[1:])

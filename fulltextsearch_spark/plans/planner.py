@@ -192,9 +192,11 @@ def _occurrences(index, node: AstQuery) -> DataFrame:
 WINDOW_COVERAGE_MAX = 0.5
 
 
-def _doc_id_span(index) -> int:
+def doc_id_span(index) -> int:
     """Committed doc-id high water + 1 from the manifest (zero jobs);
-    0 when the handle has no manifest (memory indexes)."""
+    0 when the handle has no manifest (memory indexes). Preassigned ids
+    (build_index allows them) may be sparse, so a doc count alone can
+    be far below it."""
     manifest = getattr(index, "manifest", None) or {}
     return 1 + max(
         (
@@ -254,7 +256,7 @@ def conj_postings_kwargs(
     rare = min(uniq, key=lambda t: (df_map[t], t))
     targets = (uniq | extra) - {rare}
     ranges = range_fn(rare)
-    span = _doc_id_span(index)
+    span = doc_id_span(index)
     covered = (
         sum(hi - lo + 1 for lo, hi in ranges) if ranges is not None else None
     )

@@ -216,6 +216,34 @@ def _sorted_bucketed(
     ).sortWithinPartitions(*cols)
 
 
+def _blocks_stats(
+    blocks: DataFrame, n_buckets: int, single_field: bool
+) -> tuple[DataFrame, DataFrame]:
+    """(dictionary, doc_stats) of a blocks segment from the METADATA of
+    its committed block rows (BLOCK_SCHEMA_BUCKETED):
+      df = Σ n_docs — exact even for multi-field: a document never
+           splits across blocks (the assembly cuts blocks at doc
+           boundaries) and (doc_grp, segment) doc ranges are disjoint;
+      cf = Σ n_occ;
+      dl = sentinel n_occ / 2, summed over a doc's fields (one
+           sentinel per (doc, field)) when there are several."""
+    dictionary = blocks.where(F.col("bucket") < n_buckets).groupBy("term").agg(
+        F.sum("n_docs").cast("long").alias("df"),
+        F.sum("n_occ").cast("long").alias("cf"),
+    )
+    sent = blocks.where(F.col("bucket") == n_buckets)
+    if single_field:
+        doc_stats = sent.select(
+            F.col("first_doc").alias("doc_id"),
+            (F.col("n_occ") / 2).cast("long").alias("dl"),
+        )
+    else:
+        doc_stats = sent.groupBy(F.col("first_doc").alias("doc_id")).agg(
+            (F.sum("n_occ") / 2).cast("long").alias("dl")
+        )
+    return dictionary, doc_stats
+
+
 def _build_dict_code(spark: SparkSession, dict_path: str) -> dict[int, int]:
     """Canonical-Huffman bit lengths measured from the segment's own
     dictionary characters (SURVEY §2.C13 — the reference uses a static
@@ -516,7 +544,7 @@ def build_index(
     seg_name = f"seg_{seg_id:05d}"
     seg_path = os.path.join(root, seg_name)
 
-    # posting rows assembled per doc inside the tokenize pass — no
+    # posting rows assembled per batch inside the tokenize pass — no
     # groupBy shuffle (tokenize_postings docstring); doc-position
     # sentinel rows (term="") land in their own bucket = n_buckets so
     # term-bucket pruning never reads them. Blocks modes always emit
@@ -557,10 +585,7 @@ def build_index(
         # sort bucket-first, encode, write partitionBy(bucket)) — the
         # build's ONLY full-data shuffle and ONLY full-data write. No
         # staged array-postings table exists; dictionary and doc stats
-        # read the tiny committed block METADATA:
-        #   df = Σ n_docs  (blocks never split a (doc, field) row and
-        #        doc_grp ranges are disjoint — exact for single-field),
-        #   cf = Σ n_occ, dl = sentinel n_occ / 2.
+        # read the tiny committed block METADATA (_blocks_stats).
         # The shuffle carries PACKED RUNS — one row per (map batch,
         # term, doc group) instead of one per posting, because the
         # per-row JVM↔Arrow conversion, not the codec, dominates a
@@ -585,27 +610,12 @@ def build_index(
         blocks_committed = spark.read.schema(B.BLOCK_SCHEMA_BUCKETED).parquet(
             os.path.join(seg_path, "blocks")
         )
-        real_blocks = blocks_committed.where(F.col("bucket") < n_buckets)
-        # df = Σ n_docs is exact even for multi-field: a document never
-        # splits across blocks (the assembly cuts blocks at doc
-        # boundaries) and (doc_grp, segment) doc ranges are disjoint
-        dictionary = real_blocks.groupBy("term").agg(
-            F.sum("n_docs").cast("long").alias("df"),
-            F.sum("n_occ").cast("long").alias("cf"),
+        dictionary, doc_stats = _blocks_stats(
+            blocks_committed, n_buckets, single_field=n_fields == 1
         )
 
         def _write_doc_stats() -> None:
-            sent = blocks_committed.where(F.col("bucket") == n_buckets)
-            if n_fields == 1:
-                stats_df = sent.select(
-                    F.col("first_doc").alias("doc_id"),
-                    (F.col("n_occ") / 2).cast("long").alias("dl"),
-                )
-            else:  # one sentinel per (doc, field): dl = Σ over fields
-                stats_df = sent.groupBy(
-                    F.col("first_doc").alias("doc_id")
-                ).agg((F.sum("n_occ") / 2).cast("long").alias("dl"))
-            stats_df.write.mode("overwrite").parquet(
+            doc_stats.write.mode("overwrite").parquet(
                 os.path.join(seg_path, "doc_stats")
             )
 
@@ -835,22 +845,7 @@ def compact_index(
         blocks_committed = spark.read.schema(B.BLOCK_SCHEMA_BUCKETED).parquet(
             os.path.join(seg_path, "blocks")
         )
-        dictionary = (
-            blocks_committed.where(F.col("bucket") < n_b).groupBy("term").agg(
-                F.sum("n_docs").cast("long").alias("df"),
-                F.sum("n_occ").cast("long").alias("cf"),
-            )
-        )
-        sent = blocks_committed.where(F.col("bucket") == n_b)
-        if single_field:
-            stats_df = sent.select(
-                F.col("first_doc").alias("doc_id"),
-                (F.col("n_occ") / 2).cast("long").alias("dl"),
-            )
-        else:
-            stats_df = sent.groupBy(F.col("first_doc").alias("doc_id")).agg(
-                (F.sum("n_occ") / 2).cast("long").alias("dl")
-            )
+        dictionary, stats_df = _blocks_stats(blocks_committed, n_b, single_field)
         stats_df.write.mode("overwrite").parquet(
             os.path.join(seg_path, "doc_stats")
         )

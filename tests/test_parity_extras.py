@@ -59,14 +59,36 @@ def _naive_tokenize(text: str, max_token: int = 64):
     return toks
 
 
+# random Unicode (non-BMP included), and texts holding a run of token
+# chars longer than the 64-unit truncation
+_TEXTS = st.one_of(
+    st.text(max_size=200),
+    st.builds(
+        lambda a, ch, n, b: a + ch * n + b,
+        st.text(max_size=20),
+        st.sampled_from("xЖ数_9İß"),
+        st.integers(min_value=60, max_value=140),
+        st.text(max_size=20),
+    ),
+)
+
+
 @settings(max_examples=300, deadline=None)
-@given(st.text(max_size=200))
-def test_tokenizer_matches_naive_fsm(text):
-    from fulltextsearch_spark.functions.tokenizer import tokenize_text
+@given(_TEXTS, st.lists(st.one_of(st.none(), _TEXTS), max_size=8))
+def test_tokenizer_matches_naive_fsm(text, batch):
+    """tokenize_text on one text, and tokenize_batch on a batch of
+    texts and Nones, give the naive FSM's tokens doc by doc."""
+    from fulltextsearch_spark.functions.tokenizer import tokenize_batch, tokenize_text
 
     terms, offs, lens = tokenize_text(text)
     got = list(zip(terms, offs.tolist(), lens.tolist()))
     assert got == _naive_tokenize(text)
+
+    tb = tokenize_batch(batch)
+    want = [_naive_tokenize(t or "") for t in batch]
+    assert tb.counts.tolist() == [len(w) for w in want]
+    got = list(zip(tb.terms.take(tb.codes).to_pylist(), tb.offs.tolist(), tb.lens.tolist()))
+    assert got == [tok for w in want for tok in w]
 
 
 def _compound_index(spark, root, rows):

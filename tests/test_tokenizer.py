@@ -56,13 +56,25 @@ def test_empty_and_no_tokens():
 
 
 def test_tokenize_udf_roundtrip(spark):
-    from fulltextsearch_spark.functions.tokenizer import tokenize_udf
-    from pyspark.sql import functions as F
+    from fulltextsearch_spark.functions.tokenizer import (
+        tokenize_terms_udf,
+        tokenize_udf,
+    )
 
     df = spark.createDataFrame(
-        [("Hello World!",), ("This is a test",), (None,)], "text string"
+        [("Hello World!",), ("This is a test",), (None,), ("",)], "text string"
     )
-    rows = df.select(tokenize_udf("text").alias("t")).collect()
+    rows = df.select(
+        tokenize_udf("text").alias("t"), tokenize_terms_udf("text").alias("terms")
+    ).collect()
     assert [t["term"] for t in rows[0]["t"]] == ["hello", "world"]
     assert [t["pos"] for t in rows[1]["t"]] == [1, 2, 3, 4]
-    assert rows[2]["t"] == []
+    assert [(t["off"], t["len"]) for t in rows[1]["t"]] == [(0, 4), (5, 2), (8, 1), (10, 4)]
+    assert rows[2]["t"] == [] and rows[3]["t"] == []
+    # terms only, in token order; a None or empty text gives []
+    assert [r["terms"] for r in rows] == [
+        ["hello", "world"],
+        ["this", "is", "a", "test"],
+        [],
+        [],
+    ]

@@ -297,9 +297,9 @@ def test_wand_sparse_preassigned_ids(spark, tmp_path):
     root = str(tmp_path / "wand_sparse")
     build_index(spark, pages, root, mode="blocks", preassigned_ids=True)
     idx = Index.open(spark, root)
-    from fulltextsearch_spark.operators.bm25 import _id_span
+    from fulltextsearch_spark.plans.planner import doc_id_span
 
-    assert _id_span(idx, 400) == 1 + 399 * 10_000_000 + 1
+    assert doc_id_span(idx) == 1 + 399 * 10_000_000 + 1
     # gates=False forces the grid/residual machinery the bug lived in
     top = [
         (r["doc_id"], round(r["score"], 9))
