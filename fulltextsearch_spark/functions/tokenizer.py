@@ -14,7 +14,7 @@ SURVEY.md §2.B1):
   (``char.ToLowerInvariant``, BasicTokenizer.cs:62). Where Python's
   full case mapping is not 1:1 (e.g. U+0130), the char is kept as-is;
   divergence is confined to those few codepoints.
-- Token text is truncated at ``max_token_size`` (=64,
+- Token text is truncated at ``MAX_TOKEN_SIZE`` (=64,
   PersistentBuilder.cs:12) but the recorded length is the full run
   (BasicTokenizer.cs:60-68).
 - Token positions are 1-based per (doc, field)
@@ -35,11 +35,13 @@ from typing import NamedTuple
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_type
 
 from fulltextsearch_spark import MAX_TOKEN_SIZE
+from fulltextsearch_spark.operators.codec import binary_buffers, prefix
 
 _TOKEN_TABLE: np.ndarray | None = None
 _LOWER_TABLE: np.ndarray | None = None
@@ -77,48 +79,33 @@ class TokenBatch(NamedTuple):
 
     def pos(self) -> np.ndarray:
         """1-based token id of each token within its doc (int64)."""
-        doc_at = np.repeat(_prefix(self.counts)[:-1], self.counts)
-        return np.arange(len(self.codes)) - doc_at + 1
+        pos = np.arange(1, len(self.codes) + 1)
+        pos -= np.repeat(prefix(self.counts)[:-1], self.counts)
+        return pos
 
 
-def binary_buffers(arr) -> tuple[np.ndarray, np.ndarray]:
-    """(int64 offsets from 0, uint8 data) of an Arrow (large) binary or
-    string array, zero-copy: value i is data[offsets[i]:offsets[i+1]]."""
-    bufs = arr.buffers()
-    large = pa.types.is_large_binary(arr.type) or pa.types.is_large_string(arr.type)
-    width = 8 if large else 4
-    offsets = np.frombuffer(
-        bufs[1], dtype=f"<i{width}", count=len(arr) + 1, offset=arr.offset * width
-    ).astype(np.int64)
-    if bufs[2] is None:
-        return offsets - offsets[0], np.empty(0, dtype=np.uint8)
-    data = np.frombuffer(bufs[2], dtype=np.uint8)[offsets[0] : offsets[-1]]
-    return offsets - offsets[0], data
-
-
-def _prefix(widths: np.ndarray) -> np.ndarray:
-    """0, then the running sums of ``widths`` (int64)."""
-    at = np.zeros(len(widths) + 1, dtype=np.int64)
-    np.cumsum(widths, out=at[1:])
-    return at
-
-
-def tokenize_batch(texts, max_token_size: int = MAX_TOKEN_SIZE) -> TokenBatch:
+def tokenize_batch(texts) -> TokenBatch:
     """Tokenize a batch of texts (an Arrow string array, or a sequence
     of ``str`` / None) → TokenBatch.
 
-    The texts' UTF-8 bytes are decoded to UTF-16 units in one call, and
-    each text's unit offset follows from its bytes (a lead byte starts
-    one unit, a 4-byte lead two). One mask pass finds every token run,
-    cut at text starts so no token spans two docs; one gather collects
-    the truncated, lowercased units of all tokens; one dictionary
-    encode assigns term codes; the distinct terms alone go back to
-    UTF-8, in one encode whose offsets come from each unit's 1/2/3-byte
-    width (tokens hold no surrogates)."""
+    The texts' UTF-8 bytes are decoded to UTF-16 units in one call;
+    each text's unit offset follows from its code point count plus its
+    4-byte (non-BMP, two-unit) characters. One mask pass finds every
+    token run, cut at text starts so no token spans two docs; one mask
+    keeps each run's first MAX_TOKEN_SIZE units, lowercased; one
+    dictionary encode assigns term codes; the distinct terms alone go
+    back to UTF-8, in one encode whose offsets come from each unit's
+    1/2/3-byte width (tokens hold no surrogates). Work arrays are one
+    or two bytes per unit; int64 arrays are per doc or per token."""
     if not isinstance(texts, pa.Array):
         texts = pa.array(texts, type=pa.string())
-    offsets, data = binary_buffers(texts.fill_null(""))
-    doc_at = _prefix((data & 0xC0 != 0x80).astype(np.int64) + (data >= 0xF0))[offsets]
+    texts = texts.fill_null("")
+    offsets, data = binary_buffers(texts)
+    wide = np.bincount(  # 4-byte characters per text
+        np.searchsorted(offsets, np.flatnonzero(data >= 0xF0), "right") - 1,
+        minlength=len(texts),
+    )
+    doc_at = prefix(pc.utf8_length(texts).to_numpy() + wide)
     u16 = np.frombuffer(str(data, "utf-8").encode("utf-16-le"), dtype="<u2")
     tok_table, low_table = _tables()
     mask = tok_table[u16]
@@ -127,18 +114,28 @@ def tokenize_batch(texts, max_token_size: int = MAX_TOKEN_SIZE) -> TokenBatch:
     m = np.zeros(len(u16) + 2, dtype=bool)
     m[1:-1] = mask
     starts = np.flatnonzero(mask & (~m[:-2] | cut[:-1]))
-    ends = np.flatnonzero(mask & (~m[2:] | cut[1:])) + 1
+    lens = np.flatnonzero(mask & (~m[2:] | cut[1:])) + 1
+    lens -= starts
+    del cut, m  # free each per-unit work array once it is spent
     counts = np.diff(np.searchsorted(starts, doc_at))
 
-    kept = np.minimum(ends - starts, max_token_size)
-    kept_at = _prefix(kept)
-    lows = low_table[u16[np.repeat(starts - kept_at[:-1], kept) + np.arange(kept_at[-1])]]
+    # over[i]: unit i lies past its token's first MAX_TOKEN_SIZE units
+    # (the runs are disjoint, so the running sum stays 0/1)
+    over = np.zeros(len(u16) + 1, dtype=np.int8)
+    long = lens > MAX_TOKEN_SIZE
+    over[starts[long] + MAX_TOKEN_SIZE] = 1
+    over[starts[long] + lens[long]] = -1
+    np.cumsum(over, dtype=np.int8, out=over)
+    mask &= ~over[:-1].view(bool)
+    lows = low_table[u16[mask]]
+    del u16, mask, over
+    kept_at = prefix(np.minimum(lens, MAX_TOKEN_SIZE))
     dic = pa.Array.from_buffers(
-        pa.large_binary(), len(kept), [None, pa.py_buffer(2 * kept_at), pa.py_buffer(lows)]
+        pa.large_binary(), len(starts), [None, pa.py_buffer(2 * kept_at), pa.py_buffer(lows)]
     ).dictionary_encode()
     d_offsets, d_data = binary_buffers(dic.dictionary)
     d16 = d_data.view("<u2")
-    utf8_at = _prefix(1 + (d16 >= 0x80).astype(np.int64) + (d16 >= 0x800))
+    utf8_at = prefix(1 + (d16 >= 0x80).astype(np.int64) + (d16 >= 0x800))
     terms = pa.Array.from_buffers(
         pa.string(),
         len(dic.dictionary),
@@ -148,25 +145,18 @@ def tokenize_batch(texts, max_token_size: int = MAX_TOKEN_SIZE) -> TokenBatch:
             pa.py_buffer(str(d16, "utf-16-le").encode("utf-8")),
         ],
     )
-    return TokenBatch(
-        dic.indices.to_numpy(),
-        terms,
-        counts,
-        starts - np.repeat(doc_at[:-1], counts),
-        ends - starts,
-    )
+    starts -= np.repeat(doc_at[:-1], counts)  # now offsets within each doc
+    return TokenBatch(dic.indices.to_numpy(), terms, counts, starts, lens)
 
 
-def tokenize_text(
-    text: str | None, max_token_size: int = MAX_TOKEN_SIZE
-) -> tuple[list[str], np.ndarray, np.ndarray]:
+def tokenize_text(text: str | None) -> tuple[list[str], np.ndarray, np.ndarray]:
     """Tokenize one string → (terms, offsets, lengths): the one-document
     view of tokenize_batch.
 
     Offsets/lengths are in UTF-16 code units, exactly like the
     reference's ``ScopedToken(startOffset, length, buffer)``.
     """
-    tb = tokenize_batch([text], max_token_size)
+    tb = tokenize_batch([text])
     return tb.terms.take(tb.codes).to_pylist(), tb.offs, tb.lens
 
 
@@ -184,7 +174,7 @@ TERMS_TYPE = T.ArrayType(T.StringType(), False)
 
 def _token_lists(tb: TokenBatch, values: pa.Array, list_type: T.DataType) -> pa.Array:
     """One list per doc of the batch, over per-token ``values``."""
-    offsets = pa.array(_prefix(tb.counts), type=pa.int32())
+    offsets = pa.array(prefix(tb.counts), type=pa.int32())
     return pa.ListArray.from_arrays(offsets, values, type=to_arrow_type(list_type))
 
 

@@ -40,7 +40,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from fulltextsearch_spark.functions.tokenizer import binary_buffers, tokenize_batch
+from fulltextsearch_spark.functions.tokenizer import TokenBatch, tokenize_batch
+from fulltextsearch_spark.operators.codec import binary_buffers, prefix
 
 # Sentinel "term" for per-document position-vector rows carried inside
 # the postings table (see tokenize_postings emit_doc_positions). The
@@ -50,17 +51,27 @@ DP_TERM = ""
 
 class _PostingRows(NamedTuple):
     """One Arrow batch's (term, doc) posting rows in (term code, doc)
-    order, and the doc-position vectors of its docs that hold a token."""
+    order, and the batch's tokens they were cut from."""
 
-    terms: object  # pa.string term dictionary of the batch
     code: np.ndarray  # row → term code
     doc: np.ndarray  # row → doc id
     tf: np.ndarray  # row → occurrences (int64)
     dl: np.ndarray  # row → its doc's token count (int64)
     pos: np.ndarray  # 1-based token ids, row after row (int32)
-    dp_doc: np.ndarray  # doc id of each doc with a token
-    dp_n: np.ndarray  # its token count (int64)
-    dp_flat: np.ndarray  # their (off+1, off+1+len) vectors back to back
+    tb: TokenBatch  # the tokens; tb.terms maps a term code to its term
+    doc_ids: np.ndarray  # the batch's doc ids, one per text
+
+    def doc_positions(self):
+        """(doc id, token count, (off+1, off+1+len) vectors back to
+        back) of the batch's docs that hold a token — the sentinel
+        doc-position rows (FullTextIndexBuilder.cs:99-114)."""
+        counts = self.tb.counts
+        flat = np.empty(2 * len(self.tb.offs), dtype=np.int32)
+        flat[0::2] = self.tb.offs
+        flat[0::2] += 1
+        flat[1::2] = self.tb.lens
+        flat[1::2] += flat[0::2]
+        return self.doc_ids[counts > 0], counts[counts > 0], flat
 
 
 def _posting_rows(doc_ids: np.ndarray, texts) -> _PostingRows | None:
@@ -72,25 +83,20 @@ def _posting_rows(doc_ids: np.ndarray, texts) -> _PostingRows | None:
     n_occ = len(tb.codes)
     if n_occ == 0:
         return None
-    counts = tb.counts
-    occ_doc = np.repeat(doc_ids, counts)
+    occ_doc = np.repeat(doc_ids, tb.counts)
     order = np.lexsort((occ_doc, tb.codes))
-    code, doc = tb.codes[order], occ_doc[order]
-    starts = _starts(code, doc)
-    has = counts > 0
-    flat = np.empty(2 * n_occ, dtype=np.int32)
-    flat[0::2] = tb.offs + 1
-    flat[1::2] = tb.offs + 1 + tb.lens
+    starts = _starts(tb.codes[order], occ_doc[order])
+    first = order[starts]  # each row's first token
+    doc = occ_doc[first]
+    del occ_doc
     return _PostingRows(
-        tb.terms,
-        code[starts],
-        doc[starts],
+        tb.codes[first],
+        doc,
         np.diff(np.append(starts, n_occ)),
-        np.repeat(counts, counts)[order[starts]],
+        tb.counts[np.searchsorted(prefix(tb.counts)[1:], first, "right")],
         tb.pos()[order].astype(np.int32),
-        doc_ids[has],
-        counts[has],
-        flat,
+        tb,
+        doc_ids,
     )
 
 
@@ -99,8 +105,7 @@ def _posting_batch(terms, docs, field_id: int, rowlen, flat, tf):
     ``rowlen[i]`` values of ``flat``."""
     import pyarrow as pa
 
-    offsets = np.zeros(len(docs) + 1, dtype=np.int32)
-    np.cumsum(rowlen, out=offsets[1:])
+    offsets = prefix(rowlen).astype(np.int32)
     return pa.RecordBatch.from_arrays(
         [
             terms,
@@ -143,16 +148,17 @@ def tokenize_postings(
             if r is None:
                 continue
             yield _posting_batch(
-                r.terms.take(r.code), r.doc, field_id, r.tf, r.pos, r.tf
+                r.tb.terms.take(r.code), r.doc, field_id, r.tf, r.pos, r.tf
             )
             if emit_doc_positions:
+                dp_doc, dp_n, dp_flat = r.doc_positions()
                 yield _posting_batch(
-                    pa.repeat(DP_TERM, len(r.dp_doc)),
-                    r.dp_doc,
+                    pa.repeat(DP_TERM, len(dp_doc)),
+                    dp_doc,
                     field_id,
-                    2 * r.dp_n,
-                    r.dp_flat,
-                    np.zeros(len(r.dp_doc), dtype=np.int32),
+                    2 * dp_n,
+                    dp_flat,
+                    np.zeros(len(dp_doc), dtype=np.int32),
                 )
 
     return pages_with_ids.select("doc_id", "text").mapInArrow(
@@ -332,11 +338,9 @@ def _pack_runs(run_starts, docs, tfdl, fields, rowlen, flat):
     run_starts = np.asarray(run_starts, dtype=np.int64)
     n_rows, n_runs = len(docs), len(run_starts)
     n = np.diff(np.append(run_starts, n_rows))
-    flat_at = np.zeros(n_rows + 1, dtype=np.int64)
-    np.cumsum(rowlen, out=flat_at[1:])
+    flat_at = prefix(rowlen)
     n_flat = np.diff(np.append(flat_at[run_starts], flat_at[-1]))
-    w_at = np.zeros(n_runs + 1, dtype=np.int64)
-    np.cumsum(2 + 6 * n + n_flat, out=w_at[1:])
+    w_at = prefix(2 + 6 * n + n_flat)
     words = np.empty(int(w_at[-1]), dtype="<i4")
 
     def put64(at, vals):
@@ -352,14 +356,9 @@ def _pack_runs(run_starts, docs, tfdl, fields, rowlen, flat):
     put64(base + 2 * n[run] + 2 * k, tfdl)
     words[base + 4 * n[run] + k] = fields
     words[base + 5 * n[run] + k] = rowlen
-    flat_run = np.repeat(np.arange(n_runs, dtype=np.int64), n_flat)
-    words[
-        w_at[flat_run]
-        + 2
-        + 6 * n[flat_run]
-        + np.arange(len(flat), dtype=np.int64)
-        - flat_at[run_starts][flat_run]
-    ] = flat
+    flat_word = np.repeat(w_at[:-1] + 2 + 6 * n - flat_at[run_starts], n_flat)
+    flat_word += np.arange(len(flat), dtype=np.int64)
+    words[flat_word] = flat
     return pa.Array.from_buffers(
         pa.binary(),
         n_runs,
@@ -425,7 +424,7 @@ def tokenize_packed_runs(pages_with_ids: DataFrame, field_id: int = 1) -> DataFr
             run_starts = _starts(r.code, grp)
             yield pa.RecordBatch.from_arrays(
                 [
-                    r.terms.take(r.code[run_starts]),
+                    r.tb.terms.take(r.code[run_starts]),
                     pa.array(grp[run_starts], type=pa.int64()),
                     _pack_runs(
                         run_starts,
@@ -438,21 +437,22 @@ def tokenize_packed_runs(pages_with_ids: DataFrame, field_id: int = 1) -> DataFr
                 ],
                 names=["term", "doc_grp", "blob"],
             )
-            dp_starts = np.arange(0, len(r.dp_doc), DP_RUN_DOCS)
+            dp_doc, dp_n, dp_flat = r.doc_positions()
+            dp_starts = np.arange(0, len(dp_doc), DP_RUN_DOCS)
             yield pa.RecordBatch.from_arrays(
                 [
                     pa.repeat(DP_TERM, len(dp_starts)),
                     # doc_grp is only a shuffle salt for runs; the
                     # assemble emits per-doc sentinel BLOCK rows with
                     # doc_grp = doc_id
-                    pa.array(r.dp_doc[dp_starts], type=pa.int64()),
+                    pa.array(dp_doc[dp_starts], type=pa.int64()),
                     _pack_runs(
                         dp_starts,
-                        r.dp_doc,
-                        r.dp_n << 32,  # tf = 0, dl = n
-                        np.full(len(r.dp_doc), field_id, dtype=np.int32),
-                        (2 * r.dp_n).astype(np.int32),
-                        r.dp_flat,
+                        dp_doc,
+                        dp_n << 32,  # tf = 0, dl = n
+                        np.full(len(dp_doc), field_id, dtype=np.int32),
+                        (2 * dp_n).astype(np.int32),
+                        dp_flat,
                     ),
                 ],
                 names=["term", "doc_grp", "blob"],
@@ -547,8 +547,7 @@ def _blocks_batch(cols: dict, imp_counts, imp_tf, imp_dl, payload):
     frontiers back to back and the (offsets, data) payload buffers."""
     import pyarrow as pa
 
-    imp_at = np.zeros(len(imp_counts) + 1, dtype=np.int32)
-    np.cumsum(imp_counts, out=imp_at[1:])
+    imp_at = prefix(imp_counts).astype(np.int32)
     offsets, data = payload
     arrays = {
         "bucket": pa.array(cols["bucket"], type=pa.int32()),
@@ -851,8 +850,7 @@ def decode_dp_blocks(blocks: DataFrame) -> DataFrame:
             lens, flat = decode_positions_payloads(
                 *binary_buffers(rb.column(2))
             )
-            offsets = np.zeros(len(lens) + 1, dtype=np.int32)
-            np.cumsum(lens, out=offsets[1:])
+            offsets = prefix(lens).astype(np.int32)
             yield pa.RecordBatch.from_arrays(
                 [
                     rb.column(0),
@@ -900,8 +898,7 @@ def decode_postings(
         blk, docs, fields, pos = blk[keep], docs[keep], fields[keep], pos[keep]
     starts = _starts(blk, docs, fields)
     tf = np.diff(np.append(starts, len(docs)))
-    offsets = np.zeros(len(starts) + 1, dtype=np.int32)
-    np.cumsum(tf, out=offsets[1:])
+    offsets = prefix(tf).astype(np.int32)
     return pa.RecordBatch.from_arrays(
         [
             terms.take(pa.array(blk[starts])),

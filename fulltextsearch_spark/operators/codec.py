@@ -23,8 +23,32 @@ lexicographic order — the reference's total occurrence order
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
 
 _MAX_VARINT_BYTES = 10
+
+
+def prefix(widths) -> np.ndarray:
+    """0, then the running sums of ``widths`` (int64): the offsets of
+    values laid back to back."""
+    at = np.zeros(len(widths) + 1, dtype=np.int64)
+    np.cumsum(widths, out=at[1:])
+    return at
+
+
+def binary_buffers(arr) -> tuple[np.ndarray, np.ndarray]:
+    """(int64 offsets from 0, uint8 data) of an Arrow (large) binary or
+    string array, zero-copy: value i is data[offsets[i]:offsets[i+1]]."""
+    bufs = arr.buffers()
+    large = pa.types.is_large_binary(arr.type) or pa.types.is_large_string(arr.type)
+    width = 8 if large else 4
+    offsets = np.frombuffer(
+        bufs[1], dtype=f"<i{width}", count=len(arr) + 1, offset=arr.offset * width
+    ).astype(np.int64)
+    if bufs[2] is None:
+        return offsets - offsets[0], np.empty(0, dtype=np.uint8)
+    data = np.frombuffer(bufs[2], dtype=np.uint8)[offsets[0] : offsets[-1]]
+    return offsets - offsets[0], data
 
 
 def _varint_pack(values: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
@@ -331,8 +355,7 @@ def encode_blocks_binary(
     """Batched :func:`encode_block_binary`."""
     starts, lens, _, _ = _block_layout(starts, len(docs))
     head, head_len = _varint_pack(lens)
-    offsets = np.zeros(len(starts) + 1, dtype=np.int64)
-    np.cumsum(head_len + 16 * lens, out=offsets[1:])
+    offsets = prefix(head_len + 16 * lens)
     out = np.empty(int(offsets[-1]), dtype=np.uint8)
     _place(out, head, head_len, offsets[:-1])
     at = offsets[:-1] + head_len
@@ -354,8 +377,7 @@ def _encode_each(encode_one):
             encode_one(docs[s:e], fields[s:e], pos[s:e])
             for s, e in zip(starts.tolist(), ends.tolist())
         ]
-        offsets = np.zeros(len(parts) + 1, dtype=np.int64)
-        np.cumsum([len(p) for p in parts], out=offsets[1:])
+        offsets = prefix([len(p) for p in parts])
         return offsets, np.frombuffer(b"".join(parts), dtype=np.uint8)
 
     return encode
